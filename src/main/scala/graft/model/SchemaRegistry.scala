@@ -69,10 +69,6 @@ final case class Model(name: String, version: String, tableSeq: Seq[TableDef]) {
   /** All FK constraints, keyed by child table (foreign_keys.py:29-43). */
   def foreignKeys: Map[String, Seq[ForeignKey]] =
     tableSeq.filter(_.fks.nonEmpty).map(t => t.name -> t.fks).toMap
-
-  /** Non-PK NOT NULL columns, keyed by table (not_nulls.py:27-36). */
-  def notNulls: Map[String, Seq[String]] =
-    tableSeq.map(t => t.name -> t.notNullNonPk).filter(_._2.nonEmpty).toMap
 }
 
 object PedsnetModel {

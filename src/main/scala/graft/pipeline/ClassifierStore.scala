@@ -23,27 +23,23 @@ import org.apache.spark.sql.DataFrame
   * once ([[Curation.nbClassifier]] / [[Curation.logisticRegression]]
   * already return eagerly-materialized local checkpoints), the frame
   * is immutable, and keys carry the owning SparkSession's identity
-  * plus the corpus's resolved input files, so artifacts never leak
-  * across sessions or scale factors. Bench's cold-store mode clears
-  * this store per run so the committed cold medians keep pricing the
-  * training cost itself.
+  * plus the corpus's resolved input files with their sizes and
+  * modification times ([[StoreKey.inputFingerprint]]), so artifacts
+  * never leak across sessions or scale factors and an input rewritten
+  * in place is refit. Bench's cold-store mode clears this store per
+  * run so the committed cold medians keep pricing the training cost
+  * itself.
   */
 object ClassifierStore {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  private def md5(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    d.map("%02x".format(_)).mkString
-  }
-
   private def key(kind: String, df: DataFrame, idCol: String,
       textCol: String, extra: String): String = {
     val sess = System.identityHashCode(df.sparkSession)
     val plan = df.queryExecution.analyzed.canonicalized.toString
-    val files = df.inputFiles.sorted.mkString(",")
-    s"$kind|$sess|${md5(plan)}|${md5(files)}|$idCol|$textCol|$extra"
+    val files = StoreKey.inputFingerprint(df)
+    s"$kind|$sess|${StoreKey.md5(plan)}|$files|$idCol|$textCol|$extra"
   }
 
   /** [[Curation.nbClassifier]] memoized per (session, corpus, columns,

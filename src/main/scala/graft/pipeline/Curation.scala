@@ -3226,9 +3226,11 @@ object Curation {
     val mVal = docFeats.count() * lrDen
     var w = Map.empty[Long, Long]
     for (t <- 1 to iters) {
+      // Hoist rule: the residual is projected BELOW the explode — beside
+      // the generator it would run once per feature bucket, not per doc
       val grad = docFeats
-        .select(explode(col("feats")).as("bucket"),
-          lrResidual(t, w).as("r"))
+        .select(col("feats"), lrResidual(t, w).as("r"))
+        .select(explode(col("feats")).as("bucket"), col("r"))
         .groupBy(col("bucket")).agg(sum(col("r")).as("g"))
         .as[(Long, Long)].collect()
       w = grad.foldLeft(w) { case (acc, (b, g)) =>

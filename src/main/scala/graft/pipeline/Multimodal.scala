@@ -124,15 +124,6 @@ object Multimodal {
       lumaSum / (w.toLong * h) / 255.0)
   }
 
-  /** Attach typed metadata to a binary payload column — pure Column
-    * expressions (codegen, no decode needed): byte length and an md5
-    * checksum of the payload bytes (equals any engine's md5 of the
-    * UTF-8 source string, keeping the oracle portable).
-    */
-  def withMeta(df: DataFrame, binCol: String): DataFrame =
-    df.withColumn("n_bytes", length(col(binCol)).cast("long"))
-      .withColumn("checksum", md5(col(binCol)))
-
   /** Batched "decode + feature extraction" over a typed Dataset.
     *
     * Image payloads (magic-sniffed) go through the REAL `ImageIO`

@@ -373,16 +373,18 @@ object Similarity {
     val centRows = collectCentroids(corpus, idCol, vecCol, coarseFilter)
     val books = subSlices(loadCodebook(corpus, idCol, vecCol, pqFilter),
       m, sub)
+    // the cell argmin is projected below the posexplode (beside it, it
+    // would run once per subspace — see [[lloydStep]])
     corpus
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("vec_id"),
         centroidAssignExpr(centRows, col(vecCol)).getField("cell")
           .as("cent_id"),
-        posexplode(array((0 until m).map(s =>
-          pqArgmin(slice(col(vecCol), s * sub + 1, sub), books(s))): _*))
-          .as(Seq("subspace", "code")))
-      .select(col("vec_id"), col("cent_id"), col("subspace"),
-        col("code"))
+        array((0 until m).map(s =>
+          pqArgmin(slice(col(vecCol), s * sub + 1, sub), books(s))): _*)
+          .as("codes"))
+      .select(col("vec_id"), col("cent_id"),
+        posexplode(col("codes")).as(Seq("subspace", "code")))
       // codes are PARTITIONED BY CELL: a served query probes nprobe
       // of nlist cells, so the cell is the serving read path's
       // partition-prune key — [[ivfPqTopKFromArtifacts]] pushes the
@@ -470,9 +472,12 @@ object Similarity {
     val cell = centroidAssignExpr(centRows, col(vecCol)).getField("cell")
     val codesExpr = array((0 until m).map(s =>
       pqArgmin(slice(col(vecCol), s * sub + 1, sub), books(s))): _*)
+    // cell and codes projected once per row, below the posexplode
     delta
       .select(col(idCol).as("vec_id"), cell.as("cent_id"),
-        posexplode(codesExpr).as(Seq("subspace", "code")))
+        codesExpr.as("codes"))
+      .select(col("vec_id"), col("cent_id"),
+        posexplode(col("codes")).as(Seq("subspace", "code")))
       .select(col("vec_id"), col("cent_id"),
         col("subspace").cast("integer").as("subspace"), col("code"))
   }
@@ -910,10 +915,13 @@ object Similarity {
     val cb = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
       l2norm(col(vecCol)).as("cn"),
       lshBucket(col(vecCol), dim, planes).as("bucket"))
+    // the query norm is projected below the explode: once per query,
+    // not once per probe bucket
     val qb = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      l2norm(col(vecCol)).as("qn"),
-      explode(lshProbeBuckets(col(vecCol), dim, planes, probes))
-        .as("bucket"))
+        l2norm(col(vecCol)).as("qn"),
+        lshProbeBuckets(col(vecCol), dim, planes, probes).as("buckets"))
+      .select(col("query_id"), col("qv"), col("qn"),
+        explode(col("buckets")).as("bucket"))
     val scored = cb.join(qb, Seq("bucket"))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("sim", cosinePre(dot(col("qv"), col("cv")), col("qn"), col("cn")))
@@ -933,18 +941,19 @@ object Similarity {
     * fixed-point mean — the refinement loop that turns the seeded
     * quantizer ([[ivfTopK]]'s `centroidFilter`) into trained cells.
     *
-    * Scale shape: centroids broadcast; the nearest-centroid argmax is
-    * a partial-aggregated `max(struct(sim, tie, …))` groupBy — the
-    * corpus×centroids product collapses map-side to ONE row per vector
-    * before the shuffle (cheaper than a window, which would shuffle
-    * all |corpus|·|centroids| candidate rows). The update aggregation
-    * is a second partial-agg groupBy on (centroid, dim).
+    * Scale shape: centroids are collected to the driver and folded
+    * into the native argmin kernel ([[centroidAssignExpr]]), so the
+    * assignment is a zero-exchange per-row projection — the vector
+    * never enters an exchange. The only shuffle is the update: a
+    * partial-agg groupBy on (centroid, dim) over the posexploded
+    * vector.
     *
-    * Determinism: ties break to the smaller centroid id (the struct
-    * orders by sim, then negated id); element means are computed on
-    * `floor(x·1e6)` fixed-point integers, so sums are exact and any
-    * engine reproduces `mean_fixed` bit-for-bit (double sums of
-    * same-valued terms are order-sensitive; integer sums are not).
+    * Determinism: ties break to the smaller centroid id (the kernel
+    * scans ids ascending and keeps a strictly better sim); element
+    * means are computed on `floor(x·1e6)` fixed-point integers, so
+    * sums are exact and any engine reproduces `mean_fixed`
+    * bit-for-bit (double sums of same-valued terms are
+    * order-sensitive; integer sums are not).
     */
   def kmeansUpdate(corpus: DataFrame, idCol: String, vecCol: String,
       centroidFilter: Column): DataFrame =
@@ -955,8 +964,9 @@ object Similarity {
     * refined centroids fed back in. Between iterations the k·d
     * fixed-point means are collected to the driver and re-broadcast —
     * centroids are driver state in any k-means (tiny: cells × dims),
-    * which keeps every iteration an independent two-shuffle plan
-    * instead of a lineage that deepens with the iteration count.
+    * which keeps every iteration an independent one-shuffle plan (the
+    * update groupBy) instead of a lineage that deepens with the
+    * iteration count.
     *
     * Determinism: the rebuilt centroid elements are
     * `(mean_fixed / 1e6).toFloat` — an exact integer divided in double
@@ -1000,11 +1010,14 @@ object Similarity {
     // driver state between rounds ([[kmeansTrain]] collects means);
     // they arrive here as driver rows directly. Same sim math and
     // smaller-id tie rule — means are bit-identical.
+    // Hoist rule: the argmin is projected BELOW the posexplode, because
+    // a kernel written beside a generator lands in a Project above the
+    // Generate and runs once per exploded dimension, not once per row.
     corpus
-      .select(
+      .select(col(vecCol).as("v"),
         centroidAssignExpr(centRows, col(vecCol)).getField("cell")
-          .as("cent_id"),
-        posexplode(col(vecCol)).as(Seq("dim", "x")))
+          .as("cent_id"))
+      .select(col("cent_id"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("cent_id"), col("dim"))
       .agg(
         count(lit(1)).as("n"),

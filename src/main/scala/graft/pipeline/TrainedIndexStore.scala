@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Session-scoped registry of TRAINED ANN index artifacts — the
   * [[TokenizerStore]] pattern for the vector-index family.
@@ -25,9 +25,11 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   *
   * Keying: corpus identity is the ANALYZED-CANONICALIZED logical plan
   * string (exprIds normalized, so two independent `spark.read`s of the
-  * same path share one entry) PLUS the resolved input-file list (two
-  * corpora with look-alike plans over different directories — e.g. the
-  * same table at two scale factors in one test JVM — never collide).
+  * same path share one entry) PLUS the resolved input-file list with
+  * each file's size and mtime ([[StoreKey.inputFingerprint]]: two
+  * corpora with look-alike plans over different directories — e.g.
+  * the same table at two scale factors in one test JVM — never
+  * collide, and a path rewritten in place retrains).
   * The owning SparkSession's identity is part of the key, so artifacts
   * never leak across sessions. Entries are never evicted: a handful of
   * centroid-sized artifacts per session, held exactly as long as a
@@ -37,18 +39,12 @@ object TrainedIndexStore {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  private def md5(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    d.map("%02x".format(_)).mkString
-  }
-
   private def key(kind: String, corpus: DataFrame, idCol: String,
       vecCol: String, centroidFilter: Column, extra: String): String = {
     val sess = System.identityHashCode(corpus.sparkSession)
     val plan = corpus.queryExecution.analyzed.canonicalized.toString
-    val files = corpus.inputFiles.sorted.mkString(",")
-    s"$kind|$sess|${md5(plan)}|${md5(files)}|$idCol|$vecCol|" +
+    val files = StoreKey.inputFingerprint(corpus)
+    s"$kind|$sess|${StoreKey.md5(plan)}|$files|$idCol|$vecCol|" +
       s"${org.apache.spark.sql.graftbridge.ColumnBridge
         .structuralKey(centroidFilter)}|$extra"
   }
@@ -88,13 +84,6 @@ object TrainedIndexStore {
           centroidFilter, iters).collect(),
         m, dim / m))
       .asInstanceOf[IndexedSeq[Array[(Long, Array[Float])]]]
-
-  /** Collected means rows of [[kmeansMeans]] for callers that fold
-    * centroids driver-side rather than joining the frame.
-    */
-  private[graft] def kmeansMeansRows(corpus: DataFrame, idCol: String,
-      vecCol: String, centroidFilter: Column, iters: Int): Array[Row] =
-    kmeansMeans(corpus, idCol, vecCol, centroidFilter, iters).collect()
 
   /** Drop every trained artifact — benchmarking only (Bench's
     * cold-store mode re-measures the training cost per run; a

@@ -2196,6 +2196,54 @@ class PipelineSpec extends SparkSpec {
     assert(p eq q)
   }
 
+  test("classifier and trained-index stores retrain on an input rewritten in place") {
+    import java.nio.file.{Files, StandardCopyOption}
+    // the same file path gets new bytes (the path-only key would serve
+    // the artifact trained on the old contents)
+    val tmp = Files.createTempDirectory("store-rewrite")
+    def writeInPlace(df: org.apache.spark.sql.DataFrame,
+        name: String): String = {
+      val staged = tmp.resolve(s"$name-staged").toString
+      df.coalesce(1).write.mode("overwrite").parquet(staged)
+      val part = new java.io.File(staged).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath
+      val target = tmp.resolve(s"$name.parquet")
+      Files.copy(part, target, StandardCopyOption.REPLACE_EXISTING)
+      target.toString
+    }
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+    val p = Curation.GateProfile.wordSalad
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val docPath = writeInPlace(docs, "documents")
+    def lr() = ClassifierStore.lrScored(spark.read.parquet(docPath),
+      "doc_id", "text", buckets = 64, iters = 3, lrDen = 1, profile = p)
+    val lrOld = lr()
+    assert(lr() eq lrOld)
+    writeInPlace(docs.filter(col("doc_id") % 2 === 0), "documents")
+    val lrNew = lr()
+    assert(!(lrNew eq lrOld), "rewritten documents served the stale fit")
+    assert(sorted(lrNew) == sorted(Curation.logisticRegression(
+      spark.read.parquet(docPath), "doc_id", "text", buckets = 64,
+      iters = 3, lrDen = 1, profile = p)))
+    assert(sorted(lrNew) != sorted(lrOld))
+
+    val f = col("vec_id") % 25 === 0
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val embPath = writeInPlace(emb, "embeddings")
+    def km() = TrainedIndexStore.kmeansMeans(spark.read.parquet(embPath),
+      "vec_id", "embedding", f, 2)
+    val kmOld = km()
+    assert(km() eq kmOld)
+    writeInPlace(emb.filter(col("vec_id") % 3 =!= 1), "embeddings")
+    val kmNew = km()
+    assert(!(kmNew eq kmOld), "rewritten embeddings served stale means")
+    assert(sorted(kmNew) == sorted(Similarity.kmeansTrain(
+      spark.read.parquet(embPath), "vec_id", "embedding", f, 2)))
+    assert(sorted(kmNew) != sorted(kmOld))
+  }
+
   test("k-anonymity histogram counts signature equivalence classes") {
     // users 1,2 share signature {a,b}; user 3 is unique {a}; user 4
     // unique {a,b,c} -> k=2 has 1 signature / 2 users, k=1 has 2 / 2
