@@ -1,22 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+
+import graft.core.ExecutedPlans
+
 object Bench {
 
   /** Physical-plan fingerprint: shuffle-exchange and broadcast-exchange
-    * node counts from the formatted explain. Wall times on a contended
-    * driver host swing 4-5x run to run; the plan shape does not — a
-    * changed exchange count is a real regression regardless of load.
+    * counts over every SQL execution a query ran — eager checkpoints
+    * and store builds included, each adaptive plan at its final plan.
+    * Wall times on a contended driver host swing 4-5x run to run; the
+    * plan shape does not — a changed exchange count is a real
+    * regression regardless of load.
     */
   private[graft] def planFingerprint(
-      df: org.apache.spark.sql.DataFrame): (Int, Int) = {
-    val p = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // ReusedExchange nodes (AQE exchange reuse, common in self-join
-    // plans) are not new shuffles — count only real Exchange nodes, or
-    // the fingerprint drifts with AQE's run-to-run reuse decisions.
-    val shuffles = """(?<!Broadcast)(?<!Reused)Exchange \(\d""".r.findAllIn(p).size
-    val broadcasts = """(?<!Reused)BroadcastExchange \(\d""".r.findAllIn(p).size
-    (shuffles, broadcasts)
+      executed: Seq[QueryExecution]): (Int, Int) = {
+    // a ReusedExchange (AQE exchange reuse, common in self-join plans)
+    // is a leaf of ExecutedPlans.nodes, not a new exchange
+    val ns = ExecutedPlans.nodes(executed)
+    (ns.count(_.isInstanceOf[ShuffleExchangeLike]),
+      ns.count(_.isInstanceOf[BroadcastExchangeLike]))
   }
 
   def main(args: Array[String]): Unit = {
@@ -64,17 +67,15 @@ object Bench {
         }
         val t0 = System.nanoTime()
         val r = try {
-          val df = fn(spark, sfDir)
-          df.count()
-          val t = (System.nanoTime() - t0) / 1e9
-          // fingerprint AFTER stopping the clock: explain cost stays
-          // out of the wall numbers. Checkpoint-backed detectors
-          // return an opaque LogicalRDD, so their lazy pre-checkpoint
-          // plan is rebuilt via SparkEntry.benchPlans and
-          // fingerprinted instead.
-          if (!plans.contains(name))
-            plans(name) = planFingerprint(SparkEntry.benchPlans
-              .get(name).map(_(spark, sfDir)).getOrElse(df))
+          var t = 0.0
+          def run(): Unit = {
+            fn(spark, sfDir).count()
+            t = (System.nanoTime() - t0) / 1e9
+          }
+          if (plans.contains(name)) run()
+          // fingerprint the first run's executions AFTER the clock
+          // stops: plan walking stays out of the wall numbers
+          else plans(name) = planFingerprint(ExecutedPlans.capture(spark)(run()))
           Some(t)
         } catch {
           case e: Throwable =>

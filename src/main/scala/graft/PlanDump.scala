@@ -1,10 +1,15 @@
 package graft
 
-/** Dump `.explain("formatted")` for named queries to files — the
-  * judge-facing plan evidence for the optimization rounds.
+import graft.core.ExecutedPlans
+
+/** Dump the plans each named query executed to files — the plan
+  * evidence for optimization work.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <queryPrefix...>
-  * Writes <outDir>/<query>_<suffix>.txt for each matching query.
+  * Writes <outDir>/<query>_<suffix>.txt for each matching query: the
+  * formatted final plan of every SQL execution the query ran (eager
+  * checkpoints and store builds included), in order. The result is
+  * materialized with a `noop` write, so no column is pruned away.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,22 +23,17 @@ object PlanDump {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.exists(n.startsWith) }
       .foreach { case (name, fn) =>
-        // benchPlans holds the lazy pre-checkpoint plan for
-        // checkpoint-backed queries (the public frame is an opaque
-        // LogicalRDD) — same convention as Bench's fingerprint.
-        // SPARK_GRAFT_PLANDUMP_PUBLIC=1 dumps the PUBLIC query's plan
-        // instead — the shape store-memoized consumers actually run.
-        val public = sys.env.get("SPARK_GRAFT_PLANDUMP_PUBLIC")
-          .contains("1")
-        val df =
-          if (public) fn(spark, sfDir)
-          else SparkEntry.benchPlans.get(name)
-            .map(_(spark, sfDir)).getOrElse(fn(spark, sfDir))
-        val p = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        val executed = ExecutedPlans.capture(spark) {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
+        val p = executed.zipWithIndex.map { case (qe, i) =>
+          s"== execution ${i + 1} of ${executed.size} ==\n" +
+            ExecutedPlans.explain(qe)
+        }.mkString("\n")
         val f = new java.io.PrintWriter(s"$outDir/${name}_$suffix.txt")
         try f.write(p) finally f.close()
         println(s"wrote $outDir/${name}_$suffix.txt")
+        spark.catalog.clearCache()
       }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import scala.collection.mutable.ArrayBuffer
 
 /** Per-stage profiler for one or more declared queries — measurement
@@ -47,7 +48,7 @@ object Profile {
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain
+      ListenerBridge.drain(spark.sparkContext)
       val snap = rows.sortBy(-_.runMs).toSeq
       val totRun = snap.map(_.runMs).sum
       println(f"%n=== $name  wall=$wall%.2fs  stages=${snap.size}  sumRunTime=${totRun / 1000.0}%.1fs ===")

@@ -30,11 +30,4 @@ object SparkEntry {
     ParityQueries.oracle ++ ParityQueries2.oracle ++
       ParityQueries3.oracle ++ ParityQueries4.oracle ++
       PipelineQueries.oracle ++ MediaQueries.oracle ++ WebQueries.oracle
-
-  /** Lazy pre-checkpoint plan builders for checkpoint-backed queries —
-    * Bench fingerprints these instead of the opaque LogicalRDD the
-    * public query returns. See [[PipelineQueries.benchPlans]].
-    */
-  def benchPlans: Map[String, (SparkSession, String) => DataFrame] =
-    PipelineQueries.benchPlans
 }

@@ -30,9 +30,9 @@ object Caching {
     * (not at first action), and the checkpointed blocks are not
     * recoverable on executor loss — the right trade for pair/decision
     * sets that are orders of magnitude smaller than their inputs and
-    * about to be written anyway. Plan tests must pin the lazy inner
-    * plan (the detectors expose `*Plan` split-outs), because the
-    * returned frame's plan is an opaque LogicalRDD.
+    * about to be written anyway. The returned frame's plan is an
+    * opaque LogicalRDD: the bracketed plan is visible only as an
+    * executed plan ([[ExecutedPlans.capture]]).
     */
   def withCached(intermediates: DataFrame*)(build: => DataFrame): DataFrame = {
     intermediates.foreach(_.persist())

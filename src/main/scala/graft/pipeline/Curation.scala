@@ -1681,18 +1681,10 @@ object Curation {
     // Cache bracket: the occurrence stream feeds BOTH the vocabulary
     // count shuffle and the final scoring join — without the bracket
     // the tokenizer regex runs over the corpus twice.
-    graft.core.Caching.withCached(toks)(
-      unigramLogLossPlan(toks, idCol, vocabSize))
-  }
-
-  /** Lazy plan of [[unigramLogLoss]] over a prepared occurrence frame
-    * (split out so Bench can fingerprint it — the public entry's cache
-    * bracket returns an opaque LogicalRDD).
-    */
-  private[graft] def unigramLogLossPlan(toks: DataFrame, idCol: String,
-      vocabSize: Int): DataFrame = {
-    val (cost, oov) = unigramCostTables(toks, vocabSize)
-    unigramScore(toks, Seq(col(idCol)), cost, oov)
+    graft.core.Caching.withCached(toks) {
+      val (cost, oov) = unigramCostTables(toks, vocabSize)
+      unigramScore(toks, Seq(col(idCol)), cost, oov)
+    }
   }
 
   /** One (doc, token) row per token occurrence — the shared front of
@@ -1812,17 +1804,9 @@ object Curation {
   def bigramLogLoss(df: DataFrame, idCol: String, textCol: String,
       vocabSize: Int, minBigramCount: Long = 1L): DataFrame = {
     val occ = bigramOccurrences(df, idCol, textCol)
-    graft.core.Caching.withCached(occ)(
-      bigramLogLossPlan(occ, idCol, vocabSize, minBigramCount))
+    graft.core.Caching.withCached(occ)(bigramScore(occ, Seq(col(idCol)),
+      bigramModel(occ, vocabSize, minBigramCount)))
   }
-
-  /** Lazy plan of [[bigramLogLoss]] over a prepared occurrence frame
-    * (split out so Bench can fingerprint it).
-    */
-  private[graft] def bigramLogLossPlan(occ: DataFrame, idCol: String,
-      vocabSize: Int, minBigramCount: Long): DataFrame =
-    bigramScore(occ, Seq(col(idCol)),
-      bigramModel(occ, vocabSize, minBigramCount))
 
   /** The fitted interpolated-bigram model: pruned bigram counts,
     * UNPRUNED context totals, top-`vocabSize` unigram counts and the
@@ -1979,17 +1963,9 @@ object Curation {
   def knBigramLogLoss(df: DataFrame, idCol: String, textCol: String,
       vocabSize: Int, minBigramCount: Long = 1L): DataFrame = {
     val occ = bigramOccurrences(df, idCol, textCol)
-    graft.core.Caching.withCached(occ)(
-      knBigramLogLossPlan(occ, idCol, vocabSize, minBigramCount))
+    graft.core.Caching.withCached(occ)(knScore(occ, Seq(col(idCol)),
+      knBigramModel(occ, vocabSize, minBigramCount)))
   }
-
-  /** Lazy plan of [[knBigramLogLoss]] over a prepared occurrence frame
-    * (split out so Bench can fingerprint it).
-    */
-  private[graft] def knBigramLogLossPlan(occ: DataFrame, idCol: String,
-      vocabSize: Int, minBigramCount: Long): DataFrame =
-    knScore(occ, Seq(col(idCol)),
-      knBigramModel(occ, vocabSize, minBigramCount))
 
   // ------------------------------------------------- quality classifier
 
@@ -2089,8 +2065,17 @@ object Curation {
     val labels = funnelLabels(df, idCol, textCol, carry, profile)
     val toks = labels.select(col(idCol) +: carry.map(col) ++:
       Seq(col("cls"), explode(TF.tokens(col(textCol))).as("tok")): _*)
-    graft.core.Caching.withCached(toks)(nbClassifierPlan(toks, idCol,
-      vocabSize, carry))
+    graft.core.Caching.withCached(toks) {
+      val (llr, oovPrior) = nbCostTables(toks,
+        toks.groupBy(col(idCol)).agg(max(col("cls")).as("cls")), vocabSize)
+      // cls (and any carry column) rides the scoring groupBy key — all
+      // functionally dependent on the doc id — so the verdict lands
+      // next to the gate label with no join back
+      nbScore(toks, col(idCol) +: carry.map(col) :+ col("cls"), llr,
+          oovPrior)
+        .select(col(idCol) +: carry.map(col) ++: Seq(col("cls"),
+          col("n_tokens"), col("llr_micro"), col("pred")): _*)
+    }
   }
 
   // ------------------------------------------- DSIR data selection
@@ -2189,7 +2174,7 @@ object Curation {
   }
 
   /** Lazy plan of [[dsir]] over a prepared labeled feature-occurrence
-    * frame (split out so Bench can fingerprint it).
+    * frame.
     */
   private[graft] def dsirPlan(feats: DataFrame, idCol: String,
       buckets: Int, k: Int, salt: String = "dsir"): DataFrame =
@@ -2232,7 +2217,7 @@ object Curation {
   }
 
   /** Lazy plan of [[domainMixWeights]] over a prepared occurrence
-    * frame (split out so Bench can fingerprint it).
+    * frame.
     */
   private[graft] def domainMixWeightsPlan(occ: DataFrame, nDocs: DataFrame,
       domainCol: String, vocabSize: Int): DataFrame = {
@@ -2417,7 +2402,7 @@ object Curation {
     // top-k via TakeOrderedAndProject (per-partition heaps), THEN rank
     // the <=topK survivors — a global row_number window here would
     // sort the ENTIRE distinct vocabulary on one partition
-    // (the [[pmiCollocationsPlan]] pattern).
+    // (the [[pmiCollocations]] pattern).
     val ranked = occ
       .orderBy(col("n").desc, col("tok")).limit(topK)
       .withColumn("rank",
@@ -2472,24 +2457,6 @@ object Curation {
     seqd.crossJoin(broadcast(n))
       .select(col(idCol), expr(s"(seq * $nPhases) div n").as("phase"),
         col("seq"), col("n_tokens"), col("avg_nll_micro"))
-  }
-
-  /** Lazy plan of [[nbClassifier]] over a prepared labeled-occurrence
-    * frame (split out so Bench can fingerprint it — the cache bracket
-    * returns an opaque LogicalRDD).
-    */
-  private[graft] def nbClassifierPlan(labeledToks: DataFrame,
-      idCol: String, vocabSize: Int, carry: Seq[String] = Nil): DataFrame = {
-    val labels = labeledToks.groupBy(col(idCol))
-      .agg(max(col("cls")).as("cls"))
-    val (llr, oovPrior) = nbCostTables(labeledToks, labels, vocabSize)
-    // cls (and any carry column) rides the scoring groupBy key — all
-    // functionally dependent on the doc id — so the verdict lands next
-    // to the gate label with no join back
-    nbScore(labeledToks,
-        col(idCol) +: carry.map(col) :+ col("cls"), llr, oovPrior)
-      .select(col(idCol) +: carry.map(col) ++: Seq(col("cls"),
-        col("n_tokens"), col("llr_micro"), col("pred")): _*)
   }
 
   // --------------------------------------------- classifier evaluation
@@ -2639,19 +2606,11 @@ object Curation {
     * document keyed by language — the rollup shares that exchange.
     */
   def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
-      groupCol: String, vocabSize: Int): DataFrame =
-    perplexityBucketsPlan(knBigramLogLoss(df, idCol, textCol, vocabSize),
-      df.select(col(idCol), col(groupCol)), idCol, groupCol)
-
-  /** Lazy rollup of [[perplexityBuckets]] over a prepared per-document
-    * KN score frame (split out so Bench can fingerprint the full
-    * shape past the checkpointed scorer).
-    */
-  private[graft] def perplexityBucketsPlan(kn: DataFrame,
-      groups: DataFrame, idCol: String, groupCol: String): DataFrame = {
+      groupCol: String, vocabSize: Int): DataFrame = {
     val nt = ntile(3).over(Window.partitionBy(col(groupCol))
       .orderBy(col("avg_nll_micro"), col(idCol)))
-    kn.join(groups, Seq(idCol))
+    knBigramLogLoss(df, idCol, textCol, vocabSize)
+      .join(df.select(col(idCol), col(groupCol)), Seq(idCol))
       .withColumn("bucket",
         when(nt === 1, "head").when(nt === 2, "middle")
           .otherwise("tail"))
@@ -2715,46 +2674,38 @@ object Curation {
     */
   def pmiCollocations(df: DataFrame, idCol: String, textCol: String,
       minCount: Long, topK: Int): DataFrame = {
+    // the occurrence frame feeds the unigram, bigram and total counts
     val occ = bigramOccurrences(df, idCol, textCol)
-    graft.core.Caching.withCached(occ)(
-      pmiCollocationsPlan(occ, minCount, topK))
-  }
-
-  /** Lazy plan of [[pmiCollocations]] over a prepared bigram
-    * occurrence frame (which feeds the unigram, bigram, and total
-    * counts — hence the cache bracket in the public entry). Split out
-    * so Bench can fingerprint it.
-    */
-  private[graft] def pmiCollocationsPlan(occ: DataFrame,
-      minCount: Long, topK: Int): DataFrame = {
-    val uni = occ.groupBy(col("cur").as("tok"))
-      .agg(count(lit(1)).as("cu"))
-    val tot = uni.agg(sum("cu").as("t"))
-    val bg = occ.filter(col("prev").isNotNull)
-      .groupBy("prev", "cur").agg(count(lit(1)).as("cxy"))
-      .filter(col("cxy") >= minCount)
-    val btot = occ.filter(col("prev").isNotNull)
-      .agg(count(lit(1)).as("bt"))
-    val pmi = log(
-      (col("cxy").cast("double") / col("bt").cast("double")) /
-        ((col("cx").cast("double") / col("t").cast("double")) *
-          (col("cy").cast("double") / col("t").cast("double"))))
-    val scored = bg
-      .join(uni.select(col("tok").as("prev"), col("cu").as("cx")),
-        Seq("prev"))
-      .join(uni.select(col("tok").as("cur"), col("cu").as("cy")),
-        Seq("cur"))
-      .crossJoin(broadcast(tot)).crossJoin(broadcast(btot))
-      .select(col("prev").as("tok_a"), col("cur").as("tok_b"),
-        col("cxy").as("n_pair"),
-        floor(pmi * lit(1e6)).cast("long").as("pmi_micro"))
-      .orderBy(col("pmi_micro").desc, col("tok_a"), col("tok_b"))
-      .limit(topK)
-    scored.withColumn("rank", row_number().over(Window
-        .orderBy(col("pmi_micro").desc, col("tok_a"), col("tok_b")))
-        .cast("long"))
-      .select(col("rank"), col("tok_a"), col("tok_b"), col("n_pair"),
-        col("pmi_micro"))
+    graft.core.Caching.withCached(occ) {
+      val uni = occ.groupBy(col("cur").as("tok"))
+        .agg(count(lit(1)).as("cu"))
+      val tot = uni.agg(sum("cu").as("t"))
+      val bg = occ.filter(col("prev").isNotNull)
+        .groupBy("prev", "cur").agg(count(lit(1)).as("cxy"))
+        .filter(col("cxy") >= minCount)
+      val btot = occ.filter(col("prev").isNotNull)
+        .agg(count(lit(1)).as("bt"))
+      val pmi = log(
+        (col("cxy").cast("double") / col("bt").cast("double")) /
+          ((col("cx").cast("double") / col("t").cast("double")) *
+            (col("cy").cast("double") / col("t").cast("double"))))
+      val scored = bg
+        .join(uni.select(col("tok").as("prev"), col("cu").as("cx")),
+          Seq("prev"))
+        .join(uni.select(col("tok").as("cur"), col("cu").as("cy")),
+          Seq("cur"))
+        .crossJoin(broadcast(tot)).crossJoin(broadcast(btot))
+        .select(col("prev").as("tok_a"), col("cur").as("tok_b"),
+          col("cxy").as("n_pair"),
+          floor(pmi * lit(1e6)).cast("long").as("pmi_micro"))
+        .orderBy(col("pmi_micro").desc, col("tok_a"), col("tok_b"))
+        .limit(topK)
+      scored.withColumn("rank", row_number().over(Window
+          .orderBy(col("pmi_micro").desc, col("tok_a"), col("tok_b")))
+          .cast("long"))
+        .select(col("rank"), col("tok_a"), col("tok_b"), col("n_pair"),
+          col("pmi_micro"))
+    }
   }
 
   /** Count-min sketch calibration — the heavy-hitter sketch audited
@@ -3061,7 +3012,7 @@ object Curation {
     // top-k via TakeOrderedAndProject (per-partition heaps), THEN rank
     // the <=topK survivors — a global row_number window here would
     // sort the ENTIRE distinct vocabulary on one partition
-    // (the [[pmiCollocationsPlan]] pattern).
+    // (the [[pmiCollocations]] pattern).
     val top = sc.orderBy(col("chi2_micro").desc, col("tok").asc)
       .limit(topK)
     top.withColumn("rank", row_number().over(
@@ -3166,7 +3117,17 @@ object Curation {
     val docFeats = lrDocFeats(labeled, idCol).localCheckpoint(eager = true)
     try {
       val w = lrWeightsFromDocs(docFeats, iters, lrDen)
-      lrScore(docFeats, idCol, w).localCheckpoint(eager = true)
+      // one zero-exchange scoring pass: the weights ride as a literal
+      // map, n_feats is the feature-array length, z_micro the exact
+      // integer weight sum
+      val wm = typedLit(w.toMap)
+      docFeats.select(col(idCol), col("cls"),
+          size(col("feats")).cast("long").as("n_feats"),
+          aggregate(col("feats"), lit(0L),
+            (acc, b) => acc + coalesce(element_at(wm, b), lit(0L)))
+            .as("z_micro"))
+        .withColumn("pred", when(col("z_micro") > 0, 1L).otherwise(0L))
+        .localCheckpoint(eager = true)
     } finally org.apache.spark.sql.graftbridge.CheckpointBridge
       .releaseLocalCheckpoint(docFeats)
   }
@@ -3254,45 +3215,5 @@ object Curation {
     try lrWeightsFromDocs(docFeats, iters, lrDen)
     finally org.apache.spark.sql.graftbridge.CheckpointBridge
       .releaseLocalCheckpoint(docFeats)
-  }
-
-  /** Scoring plan of [[logisticRegression]]: trains eagerly via
-    * [[lrWeightsFromDocs]] (one short job per round, weight-sized
-    * collects) and returns the LAZY final scoring pass over the
-    * literal trained weights — the plan Bench fingerprints. Values
-    * are identical to the old broadcast-join formulation: every
-    * observed bucket is in the weight map (each receives a gradient
-    * row every round), so the old INNER join kept every feature row —
-    * n_feats is the array length and z_micro the same integer sum.
-    */
-  private[graft] def logisticRegressionPlan(labeled: DataFrame,
-      idCol: String, iters: Int, lrDen: Int): DataFrame = {
-    val docFeatsLazy = lrDocFeats(labeled, idCol)
-    val docFeats = docFeatsLazy.localCheckpoint(eager = true)
-    val w = lrWeightsFromDocs(docFeats, iters, lrDen)
-    // Score over the LAZY doc-feature plan: same rows as the
-    // checkpointed frame (lrDocFeats is deterministic up to feature
-    // order, which every consumer reduces order-free), but the
-    // returned plan keeps the real pre-checkpoint shape — scan,
-    // explode, feature gather, literal-weight scoring — that Bench
-    // fingerprints; the checkpoint above exists only to feed the GD
-    // rounds.
-    lrScore(docFeatsLazy, idCol, w)
-  }
-
-  /** The LAZY scoring projection over a doc-feature frame and trained
-    * weights: one zero-exchange pass — the weights ride as a literal
-    * map, n_feats is the feature-array length, z_micro the exact
-    * integer weight sum.
-    */
-  private def lrScore(docFeats: DataFrame, idCol: String,
-      w: Seq[(Long, Long)]): DataFrame = {
-    val wm = typedLit(w.toMap)
-    docFeats.select(col(idCol), col("cls"),
-      size(col("feats")).cast("long").as("n_feats"),
-      aggregate(col("feats"), lit(0L),
-        (acc, b) => acc + coalesce(element_at(wm, b), lit(0L)))
-        .as("z_micro"))
-      .withColumn("pred", when(col("z_micro") > 0, 1L).otherwise(0L))
   }
 }

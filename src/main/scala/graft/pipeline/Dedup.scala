@@ -528,7 +528,7 @@ object Dedup {
   }
 
   /** Lazy plan of [[bbitMinhashEstimate]] over a prepared
-    * (doc, sh, sig) frame (split out for plan tests / Bench).
+    * (doc, sh, sig) frame.
     */
   private[graft] def bbitPlan(docs: DataFrame, numHashes: Int, bands: Int,
       rows: Int, b: Int, threshold: Double): DataFrame = {

@@ -22,25 +22,20 @@ import org.apache.spark.sql.DataFrame
   * Determinism is untouched: detection runs bit-identically exactly
   * once, the frames are immutable local checkpoints, and keys carry
   * the owning SparkSession's identity plus the corpus's resolved
-  * input files (two scale factors in one test JVM never collide —
-  * the TrainedIndexStore discipline).
+  * input files with their sizes and modification times
+  * ([[StoreKey.inputFingerprint]]): two scale factors in one test JVM
+  * never collide, and an input rewritten in place is detected again.
   */
 object DedupStore {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  private def md5(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    d.map("%02x".format(_)).mkString
-  }
-
   private def key(kind: String, df: DataFrame, idCol: String,
       textCol: String, extra: String): String = {
     val sess = System.identityHashCode(df.sparkSession)
     val plan = df.queryExecution.analyzed.canonicalized.toString
-    val files = df.inputFiles.sorted.mkString(",")
-    s"$kind|$sess|${md5(plan)}|${md5(files)}|$idCol|$textCol|$extra"
+    val files = StoreKey.inputFingerprint(df)
+    s"$kind|$sess|${StoreKey.md5(plan)}|$files|$idCol|$textCol|$extra"
   }
 
   /** [[Dedup.ngramJaccardPairs]] memoized per (session, corpus,

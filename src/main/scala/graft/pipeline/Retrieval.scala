@@ -1058,20 +1058,6 @@ object Retrieval {
       rankTopK(bm25ScoresFromHits(index, hits, qTerms, p), k))
   }
 
-  /** [[bm25TopK]] over a prebuilt index (the [[bm25IndexTokens]]
-    * companion): same cache bracket, same ranking stack.
-    */
-  def bm25TopKIndexed(index: Bm25Index, queries: DataFrame,
-      qidCol: String, qtextCol: String, k: Int,
-      p: Bm25Params = Bm25Params()): DataFrame = {
-    require(k > 0, "k must be positive")
-    val qTerms = queryTerms(queries, qidCol, qtextCol)
-    val hits = index.postings.join(
-      broadcast(qTerms.select("tok").distinct()), Seq("tok"))
-    graft.core.Caching.withCached(hits)(
-      rankTopK(bm25ScoresFromHits(index, hits, qTerms, p), k))
-  }
-
   /** Full-vs-deduped ranking scorecards off ONE postings build (p156,
     * p180's retrieval section): the deduped index is the FULL index
     * with the dropped docs anti-joined away — bit-identical to
@@ -1108,32 +1094,6 @@ object Retrieval {
       rankTopK(bm25ScoresFromHits(dedup, dedupHits, qT, p), k)))
     rankingScorecard(cards(0), "full", topK = k)
       .unionByName(rankingScorecard(cards(1), "dedup_minid", topK = k))
-  }
-
-  /** Lazy (uncached, un-checkpointed) twin of [[bm25DedupImpactCards]]
-    * for plan fingerprints — same structure, nothing materialized.
-    */
-  private[graft] def bm25DedupImpactCardsPlan(docs: DataFrame,
-      idCol: String, textCol: String, queries: DataFrame, qidCol: String,
-      qtextCol: String, dropped: DataFrame, k: Int,
-      p: Bm25Params = Bm25Params()): DataFrame = {
-    val toks = TF.tokens(col(textCol))
-    val index = bm25IndexTokens(docs, idCol, toks)
-    val d = broadcast(dropped.select(col("doc_id")))
-    val dedupDoclen = index.doclen.join(d, Seq("doc_id"), "left_anti")
-    val dedup = Bm25Index(
-      index.postings.join(d, Seq("doc_id"), "left_anti"),
-      dedupDoclen,
-      dedupDoclen.agg(count(lit(1)).as("nd"), sum("dl").as("sdl")))
-    val qT = queryTerms(queries, qidCol, qtextCol)
-    val hits = prunedHits(docs, idCol, toks,
-      qT.select("tok").distinct())
-    val dedupHits = hits.join(d, Seq("doc_id"), "left_anti")
-    rankingScorecard(rankTopK(bm25ScoresFromHits(index, hits, qT, p), k),
-        "full", topK = k)
-      .unionByName(rankingScorecard(
-        rankTopK(bm25ScoresFromHits(dedup, dedupHits, qT, p), k),
-        "dedup_minid", topK = k))
   }
 
   /** Hard-negative mining for retrieval-model training data (the
@@ -1183,42 +1143,22 @@ object Retrieval {
     * scores stay exact int64 and the unexpanded ranking is invariant
     * under the uniform ×2.
     *
+    * Returns the plain ranking (index 0) AND the PMI-expanded one
+    * (index 1) off ONE pruned candidate-hit frame (p144's sharing):
+    * hits are pruned to the EXPANDED query vocabulary once and cached;
+    * the plain ranking's hits are that frame filtered to the original
+    * query terms — bit-identical to pruning the postings with each
+    * vocabulary separately, at one explode.
+    *
     * Scale shape: the collocation table is top-k-sized and broadcast
     * twice (top-1 window, then the expansion join); everything else
-    * is [[bm25TopK]]'s plan — ONE postings shuffle against the
-    * (slightly wider) query vocabulary, broadcast df, one query-keyed
-    * rank exchange.
-    *
-    * NOTE (r15 behavior change, deliberate): this returns the LAZY
-    * expanded ranking off [[bm25PlainAndPmiExpanded]]'s shared
-    * pruned-hit subtree — uncached, relying on runtime exchange reuse
-    * where the subtree repeats. Standalone callers that materialize
-    * the ranking several times should bracket it themselves
-    * (`Caching.withCached`) or call [[bm25PlainAndPmiExpanded]] with
-    * `lazyPlans = false` and take index 1, which caches the shared
-    * frame eagerly.
-    */
-  def bm25PmiExpandedTopK(docs: DataFrame, idCol: String,
-      textCol: String, queries: DataFrame, qidCol: String,
-      qtextCol: String, collocations: DataFrame, k: Int,
-      p: Bm25Params = Bm25Params()): DataFrame =
-    bm25PlainAndPmiExpanded(docs, idCol, textCol, queries, qidCol,
-      qtextCol, collocations, k, p, lazyPlans = true)(1)
-
-  /** The plain AND the PMI-expanded BM25 rankings off ONE pruned
-    * candidate-hit frame (p144's sharing, upgraded from sharing the
-    * full postings build): hits are pruned to the EXPANDED query
-    * vocabulary once; the plain ranking's hits are that frame
-    * filtered to the original query terms — bit-identical to pruning
-    * the postings with each vocabulary separately, at one explode.
-    * With `lazyPlans` the shared frame is left uncached (plan
-    * fingerprints / single-ranker callers); eager composites cache it.
+    * is [[bm25TopK]]'s plan — broadcast df, one query-keyed rank
+    * exchange per ranking.
     */
   def bm25PlainAndPmiExpanded(docs: DataFrame, idCol: String,
       textCol: String, queries: DataFrame, qidCol: String,
       qtextCol: String, collocations: DataFrame, k: Int,
-      p: Bm25Params = Bm25Params(),
-      lazyPlans: Boolean = false): Seq[DataFrame] = {
+      p: Bm25Params = Bm25Params()): Seq[DataFrame] = {
     require(k > 0, "k must be positive")
     val toks = TF.tokens(col(textCol))
     val index = bm25IndexTokens(docs, idCol, toks)
@@ -1226,16 +1166,14 @@ object Retrieval {
     val wTerms = pmiExpandedTerms(qT, collocations)
     val hitsWide = prunedHits(docs, idCol, toks,
       wTerms.select("tok").distinct())
-    def rankings(h: DataFrame): Seq[DataFrame] = Seq(
+    graft.core.Caching.withCachedMulti(hitsWide)(Seq(
       rankTopK(bm25ScoresFromHits(index,
-        h.join(broadcast(qT.select("tok").distinct()), Seq("tok")),
+        hitsWide.join(broadcast(qT.select("tok").distinct()), Seq("tok")),
         qT, p), k),
-      rankTopK(pmiWeightedScores(index, h, wTerms, p), k))
-    if (lazyPlans) rankings(hitsWide)
-    else graft.core.Caching.withCachedMulti(hitsWide)(rankings(hitsWide))
+      rankTopK(pmiWeightedScores(index, hitsWide, wTerms, p), k)))
   }
 
-  /** The weighted expanded term set of [[bm25PmiExpandedTopK]]:
+  /** The weighted expanded term set of [[bm25PlainAndPmiExpanded]]:
     * original terms at weight 2, each term's top-PMI right-collocate
     * at weight 1 (a collocate already in the query keeps 2).
     */
@@ -1254,9 +1192,9 @@ object Retrieval {
       .groupBy("query_id", "tok").agg(max(col("w")).as("w"))
   }
 
-  /** The weighted scoring body shared by the expanded ranker's two
-    * entry points — [[bm25ScoresFromHits]] with the per-term integer
-    * weight multiplied AFTER the micro floor.
+  /** The expanded ranker's weighted scoring body —
+    * [[bm25ScoresFromHits]] with the per-term integer weight
+    * multiplied AFTER the micro floor.
     */
   private def pmiWeightedScores(index: Bm25Index, hits: DataFrame,
       wTerms: DataFrame, p: Bm25Params): DataFrame = {
@@ -1275,21 +1213,5 @@ object Retrieval {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
         sum(col("contrib_micro")).as("score_micro"))
-  }
-
-  /** [[bm25PmiExpandedTopK]] over a prebuilt index — for callers that
-    * genuinely hold materialized postings; the tokens-path entry
-    * points above never build them.
-    */
-  def bm25PmiExpandedTopKIndexed(index: Bm25Index, queries: DataFrame,
-      qidCol: String, qtextCol: String, collocations: DataFrame, k: Int,
-      p: Bm25Params = Bm25Params()): DataFrame = {
-    require(k > 0, "k must be positive")
-    val qT = queryTerms(queries, qidCol, qtextCol)
-    val wTerms = pmiExpandedTerms(qT, collocations)
-    val hits = index.postings.join(
-      broadcast(wTerms.select("tok").distinct()), Seq("tok"))
-    graft.core.Caching.withCached(hits)(
-      rankTopK(pmiWeightedScores(index, hits, wTerms, p), k))
   }
 }

@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
-/** Key parts shared by [[ClassifierStore]] and [[TrainedIndexStore]].
+/** Key parts shared by [[ClassifierStore]], [[TrainedIndexStore]] and
+  * [[DedupStore]].
   *
   * A corpus is identified by its resolved input files AND each file's
   * current size and modification time, so rewriting a parquet path in

@@ -2073,7 +2073,7 @@ private[queries] object PipelineOracles {
     * oNbClassifier), distinct hashed feature presences, and `iters`
     * generated rounds of (gradient, floor-division weight update,
     * margin, floored sigmoid residual) — mirroring
-    * [[Curation.logisticRegressionPlan]] round for round. All
+    * [[Curation.logisticRegression]] round for round. All
     * cross-row arithmetic is int64; the `(g - ((g % m) + m) % m) // m`
     * dance makes the division exact so truncating and flooring
     * engines agree.

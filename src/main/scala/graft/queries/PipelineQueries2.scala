@@ -202,41 +202,37 @@ object PipelineQueries2 {
     // scanned ~4x by EACH of the four pipelines below (corpus side,
     // probe side, centroid collect, codebook collect) — materialize
     // it once for the duration of the card (measured 15s -> ~4s at
-    // sf0.1). Bench fingerprints the lazy twin (p122ResidualPqPlan).
-    val emb0 = hierEmbeddings(s, dir)
-    graft.core.Caching.withCached(emb0)(p122ResidualPqPlan(s, emb0))
-  }
-
-  /** Lazy plan of [[p122ResidualPq]] over a prepared fixture frame. */
-  private[graft] def p122ResidualPqPlan(s: SparkSession,
-      emb: DataFrame): DataFrame = {
-    val queries = emb.filter(col("vec_id") < 20)
-    val exact = Similarity.topK(emb, queries, "vec_id", "embedding", 10)
-      .select("query_id", "cand_id")
-    // codebook rows: cluster 0's four prototype representatives
-    // (0, 8, 16, 24) — residualized they span the prototype set
-    val pqRows = col("vec_id") < 32 && col("vec_id") % 8 === 0
-    def row(method: String, ann: DataFrame): DataFrame =
-      ann.select("query_id", "cand_id")
-        .join(exact, Seq("query_id", "cand_id"))
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(exact.agg(count(lit(1)).as("n_truth")))
-        .select(lit(method).as("method"), col("n_hits"), col("n_truth"),
-          floor((col("n_hits") * lit(1e6)) / col("n_truth")).cast("long")
-            .as("recall_micro"))
-    row("ivfpq_raw_hier",
-      Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-        coarseFilter = col("vec_id") < 8, pqFilter = pqRows,
-        m = 4, dim = 64, k = 10, nprobe = 1))
-      .unionByName(row("ivfpq_residual_hier",
-        Similarity.ivfResidualPqTopK(emb, queries, "vec_id", "embedding",
+    // sf0.1).
+    val emb = hierEmbeddings(s, dir)
+    graft.core.Caching.withCached(emb) {
+      val queries = emb.filter(col("vec_id") < 20)
+      val exact = Similarity.topK(emb, queries, "vec_id", "embedding", 10)
+        .select("query_id", "cand_id")
+      // codebook rows: cluster 0's four prototype representatives
+      // (0, 8, 16, 24) — residualized they span the prototype set
+      val pqRows = col("vec_id") < 32 && col("vec_id") % 8 === 0
+      def row(method: String, ann: DataFrame): DataFrame =
+        ann.select("query_id", "cand_id")
+          .join(exact, Seq("query_id", "cand_id"))
+          .agg(count(lit(1)).as("n_hits"))
+          .crossJoin(exact.agg(count(lit(1)).as("n_truth")))
+          .select(lit(method).as("method"), col("n_hits"), col("n_truth"),
+            floor((col("n_hits") * lit(1e6)) / col("n_truth")).cast("long")
+              .as("recall_micro"))
+      row("ivfpq_raw_hier",
+        Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
           coarseFilter = col("vec_id") < 8, pqFilter = pqRows,
-          m = 4, dim = 64, k = 10, nprobe = 1)))
-      .unionByName(row("ivfpq_residual_refine_hier",
-        Similarity.ivfResidualPqRefineTopK(emb, queries, "vec_id",
-          "embedding", coarseFilter = col("vec_id") < 8,
-          pqFilter = pqRows, m = 4, dim = 64, k = 10, nprobe = 1,
-          rerank = 30)))
+          m = 4, dim = 64, k = 10, nprobe = 1))
+        .unionByName(row("ivfpq_residual_hier",
+          Similarity.ivfResidualPqTopK(emb, queries, "vec_id", "embedding",
+            coarseFilter = col("vec_id") < 8, pqFilter = pqRows,
+            m = 4, dim = 64, k = 10, nprobe = 1)))
+        .unionByName(row("ivfpq_residual_refine_hier",
+          Similarity.ivfResidualPqRefineTopK(emb, queries, "vec_id",
+            "embedding", coarseFilter = col("vec_id") < 8,
+            pqFilter = pqRows, m = 4, dim = 64, k = 10, nprobe = 1,
+            rerank = 30)))
+    }
   }
 
   /** Entropy quality signals (p121): per-document character- and
@@ -1818,7 +1814,7 @@ object PipelineQueries2 {
 
   /** PMI query expansion (p144): BM25 with each query term's top-PMI
     * right-collocate added at half weight
-    * ([[Retrieval.bm25PmiExpandedTopK]], expansion source = the p116
+    * ([[Retrieval.bm25PlainAndPmiExpanded]], expansion source = the p116
     * top-100 collocation table), graded beside flat BM25 on the
     * planted-prefix relevance set — the scorecard answer to "does
     * automatic thesaurus expansion help or hurt on this corpus". One
@@ -1956,26 +1952,6 @@ object PipelineQueries2 {
       .select(col("query_id"), col("m").as("m_a"))
     Seq("bm25", "ql", "prf", "rrf").map { meth =>
       val other = metric(meth)
-        .select(col("query_id"), col("m").as("m_b"))
-      Retrieval.pairedSignificance(base.join(other, Seq("query_id")),
-        s"bm25f_vs_$meth", nPerms = 200, salt = "sig")
-    }.reduce(_.unionByName(_))
-  }
-
-  /** Lazy pre-checkpoint twin of [[p136Significance]] for the bench
-    * plan fingerprint (the public query now pins the per-method
-    * metric frames, leaving opaque LogicalRDDs in its plan).
-    */
-  private[queries] def p136SignificancePlan(s: SparkSession,
-      dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val qIds = Retrieval.plantedSample(docs, "doc_id")
-      .select(col("doc_id").as("query_id"))
-    val ranked = sharedRankings(s, dir).toMap
-    val base = Retrieval.perQueryNdcg(ranked("bm25f"), qIds, topK = 10)
-      .select(col("query_id"), col("m").as("m_a"))
-    Seq("bm25", "ql", "prf", "rrf").map { meth =>
-      val other = Retrieval.perQueryNdcg(ranked(meth), qIds, topK = 10)
         .select(col("query_id"), col("m").as("m_b"))
       Retrieval.pairedSignificance(base.join(other, Seq("query_id")),
         s"bm25f_vs_$meth", nPerms = 200, salt = "sig")

@@ -1,14 +1,10 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ListenerBridge
-import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.core.ExecutedPlans
 import graft.pipeline.{Curation, Similarity, TextFunctions => TF}
 
 /** Per-row kernels must be evaluated below an explode, not beside it.
@@ -38,20 +34,8 @@ class GenerateHoistSpec extends SparkSpec {
     }.flatten
 
   /** Optimized plans of every query `body` executes. */
-  private def captured(body: => Unit): Seq[LogicalPlan] = {
-    val plans = ArrayBuffer.empty[LogicalPlan]
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized(plans += qe.optimizedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      ListenerBridge.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    plans.synchronized(plans.toSeq)
-  }
+  private def captured(body: => Unit): Seq[LogicalPlan] =
+    ExecutedPlans.capture(spark)(body).map(_.optimizedPlan)
 
   private def assertHoisted(name: String, plans: Seq[LogicalPlan]): Unit = {
     // non-vacuous: the run really executed plans with a Generate

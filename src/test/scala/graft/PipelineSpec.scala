@@ -2229,6 +2229,22 @@ class PipelineSpec extends SparkSpec {
       iters = 3, lrDen = 1, profile = p)))
     assert(sorted(lrNew) != sorted(lrOld))
 
+    // the dedup store's pair set: the rewrite adds an exact copy of
+    // every document, so the new pair set cannot equal the old one
+    def pairs() = DedupStore.ngramJaccardPairs(spark.read.parquet(docPath),
+      "doc_id", "text", k = 4, threshold = 0.4,
+      maxShingleFreqFrac = Some(0.1))
+    val pjOld = pairs()
+    assert(pairs() eq pjOld)
+    writeInPlace(docs.unionByName(
+      docs.withColumn("doc_id", col("doc_id") + 1000000L)), "documents")
+    val pjNew = pairs()
+    assert(!(pjNew eq pjOld), "rewritten documents served stale pairs")
+    assert(sorted(pjNew) == sorted(Dedup.ngramJaccardPairs(
+      spark.read.parquet(docPath), "doc_id", "text", k = 4,
+      threshold = 0.4, maxShingleFreqFrac = Some(0.1))))
+    assert(sorted(pjNew) != sorted(pjOld))
+
     val f = col("vec_id") % 25 === 0
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val embPath = writeInPlace(emb, "embeddings")

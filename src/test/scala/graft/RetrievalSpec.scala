@@ -76,8 +76,8 @@ class RetrievalSpec extends SparkSpec {
         "qtext", k = 10)
       .orderBy("rank").select("doc_id", "rank", "score_micro")
       .as[(Long, Long, Long)].collect().toSeq
-    val noExp = Retrieval.bm25PmiExpandedTopK(docs, "doc_id", "text",
-        qs, "qid", "qtext", empty, k = 10)
+    val noExp = Retrieval.bm25PlainAndPmiExpanded(docs, "doc_id", "text",
+        qs, "qid", "qtext", empty, k = 10)(1)
       .orderBy("rank").select("doc_id", "rank", "score_micro")
       .as[(Long, Long, Long)].collect().toSeq
     // no expansion terms: same candidates, same order, scores exactly 2x
@@ -87,8 +87,8 @@ class RetrievalSpec extends SparkSpec {
     // into the candidate set at weight 1
     val coll = Seq(("apple", "durian", 500000L))
       .toDF("tok_a", "tok_b", "pmi_micro")
-    val exp = Retrieval.bm25PmiExpandedTopK(docs, "doc_id", "text",
-        qs, "qid", "qtext", coll, k = 10)
+    val exp = Retrieval.bm25PlainAndPmiExpanded(docs, "doc_id", "text",
+        qs, "qid", "qtext", coll, k = 10)(1)
       .select("doc_id").as[Long].collect().toSet
     assert(exp.contains(3L), s"expansion must retrieve doc 3: $exp")
     assert(!plain.map(_._1).contains(3L))
