@@ -43,8 +43,8 @@ object Bench {
     // in. The driver's per-round artifact stays single-run; medians
     // land in the committed BENCH_local_r*_medians.json.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
-    // SPARK_GRAFT_COLDSTORES=1: drop the trained-artifact stores
-    // (TokenizerStore / TrainedIndexStore) before every run, so
+    // SPARK_GRAFT_COLDSTORES=1: clear the ArtifactStore (tokenizers,
+    // ANN indexes, dedup pairs, classifiers) before every run, so
     // repeat medians measure COLD training cost instead of the
     // memoized within-session reuse (p118's 100-round WordPiece train
     // reads ~0.1s warm vs ~20s cold). Default off — within-session
@@ -59,12 +59,7 @@ object Bench {
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
     val results = selected.map { case (name, fn) =>
       val runs = (1 to repeat).flatMap { _ =>
-        if (coldStores) {
-          graft.pipeline.TokenizerStore.clear()
-          graft.pipeline.TrainedIndexStore.clear()
-          graft.pipeline.DedupStore.clear()
-          graft.pipeline.ClassifierStore.clear()
-        }
+        if (coldStores) graft.pipeline.ArtifactStore.clear()
         val t0 = System.nanoTime()
         val r = try {
           var t = 0.0

@@ -1824,7 +1824,7 @@ object Cli {
 
     case "kmeans" :: dir :: out :: rest if rest.lengthIs <= 1 =>
       val iters = rest.headOption.map(_.toInt).getOrElse(1)
-      write(pipeline.TrainedIndexStore.kmeansMeans(
+      write(pipeline.ArtifactStore.kmeansMeans(
         Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
         centroidFilter = col("vec_id") % 25 === 0, iters = iters), out)
 

@@ -97,9 +97,7 @@ object Scaling {
     val runs = (1 to repeat).map { _ =>
       // cold stores: the scaling of the compute itself, not of the
       // within-session memoization
-      graft.pipeline.TokenizerStore.clear()
-      graft.pipeline.TrainedIndexStore.clear()
-      graft.pipeline.DedupStore.clear()
+      graft.pipeline.ArtifactStore.clear()
       val t0 = System.nanoTime()
       SparkEntry.queries(query)(spark, dir).count()
       val t = (System.nanoTime() - t0) / 1e9

@@ -1140,7 +1140,7 @@ object Similarity {
     */
   def pqTrainedCodes(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, dim: Int, centroidFilter: Column, iters: Int): DataFrame = {
-    val books = TrainedIndexStore.pqBooks(corpus, idCol, vecCol, m, dim,
+    val books = ArtifactStore.pqBooks(corpus, idCol, vecCol, m, dim,
       centroidFilter, iters)
     pqCodeArray(corpus, idCol, vecCol, m, dim, books)
       .select(col("vec_id"), posexplode(col("codes")))
@@ -1247,7 +1247,7 @@ object Similarity {
       vecCol: String, m: Int, dim: Int, centroidFilter: Column,
       iters: Int, k: Int): DataFrame =
     pqTopKWith(corpus, queries, idCol, vecCol, m, dim,
-      TrainedIndexStore.pqBooks(corpus, idCol, vecCol, m, dim,
+      ArtifactStore.pqBooks(corpus, idCol, vecCol, m, dim,
         centroidFilter, iters),
       k)
 
@@ -1995,7 +1995,7 @@ object Similarity {
     def fd(a: Column, m: Column): Column =
       call_function("div", a - pmod(a, m), m)
     moduli.map { m =>
-      val means = TrainedIndexStore.kmeansMeans(corpus, idCol, vecCol,
+      val means = ArtifactStore.kmeansMeans(corpus, idCol, vecCol,
         col(idCol) % m === 0, iters)
       val cents = broadcast(centroidsFromMeans(means)
         .select(col("cent_id").as("cand_id"), col("ce"),

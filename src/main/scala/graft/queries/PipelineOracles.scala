@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{ConnectedComponents, Sessionize}
-import graft.pipeline.{Bpe, Curation, Dedup, DedupStore, Ingest, Multimodal, Retrieval, Similarity, TextFunctions => TF}
+import graft.pipeline.{Bpe, Curation, Dedup, Ingest, Multimodal, Retrieval, Similarity, TextFunctions => TF}
 
 /** DuckDB oracle SQL builders for [[PipelineQueries]] — part 1 of
   * the round-15 split of the 10k-line query file (round-14 review

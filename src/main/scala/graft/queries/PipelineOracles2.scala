@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{ConnectedComponents, Sessionize}
-import graft.pipeline.{Bpe, Curation, Dedup, DedupStore, Ingest, Multimodal, Retrieval, Similarity, TextFunctions => TF}
+import graft.pipeline.{Bpe, Curation, Dedup, Ingest, Multimodal, Retrieval, Similarity, TextFunctions => TF}
 
 /** DuckDB oracle SQL for [[PipelineQueries]] — part 2 of the
   * round-15 split: the per-query oracle map (`oracle0`) and the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{ConnectedComponents, Sessionize}
-import graft.pipeline.{Bpe, ClassifierStore, Curation, Dedup, DedupStore, Ingest, Multimodal, Retrieval, Similarity, TextFunctions => TF}
+import graft.pipeline.{ArtifactStore, Bpe, Curation, Dedup, Ingest, Multimodal, Retrieval, Similarity, TextFunctions => TF}
 
 /** Beyond-reference data-pipeline queries (dedup, similarity search,
   * text analysis, multimodal, event sessionization) over the driver's
@@ -55,7 +55,7 @@ object PipelineQueries {
     * segment 3 still spans 4k effective values.
     */
   def p03Simhash(s: SparkSession, dir: String): DataFrame =
-    DedupStore.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
+    ArtifactStore.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
       bits = 64, segments = 4, maxHamming = 2)
 
   /** 4-gram-Jaccard pairs via inverted shingle index, with BOTH scale
@@ -68,7 +68,7 @@ object PipelineQueries {
     * qualifying pair at this SF.
     */
   def p04NgramJaccard(s: SparkSession, dir: String): DataFrame =
-    DedupStore.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
+    ArtifactStore.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
       k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
 
   // ------------------------------------------------------------ similarity
@@ -103,7 +103,7 @@ object PipelineQueries {
     */
   def p52IvfTrained(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val means = graft.pipeline.TrainedIndexStore.kmeansMeans(emb,
+    val means = ArtifactStore.kmeansMeans(emb,
       "vec_id", "embedding", centroidFilter = col("vec_id") % 25 === 0,
       iters = 2)
     Similarity.ivfTopKWith(emb, emb.filter(col("vec_id") < 20), "vec_id",
@@ -290,7 +290,7 @@ object PipelineQueries {
     // wordSalad gate profile: the published thresholds admit zero
     // documents of the punctuation-free synthetic corpus, which would
     // train the model on all-negative labels (see GateProfile)
-    ClassifierStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
+    ArtifactStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
       vocabSize = 500, profile = Curation.GateProfile.wordSalad)
 
   /** Classifier-vs-gates audit (p84): per source, where the learned
@@ -303,7 +303,7 @@ object PipelineQueries {
     * source-cardinality exchange and no join.
     */
   def p84ClassifierAudit(s: SparkSession, dir: String): DataFrame =
-    ClassifierStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
+    ArtifactStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
         vocabSize = 500, carry = Seq("source"),
         profile = Curation.GateProfile.wordSalad)
       .groupBy("source").agg(
@@ -395,7 +395,7 @@ object PipelineQueries {
     */
   def p69ClusterBest(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val comp = DedupStore.dedupDecisions(docs, "doc_id", "text",
+    val comp = ArtifactStore.dedupDecisions(docs, "doc_id", "text",
       k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     val w = Window.partitionBy("cluster_id")
       .orderBy(col("score_micro").desc, col("doc_id"))
@@ -435,11 +435,10 @@ object PipelineQueries {
     * have blown the plan long before the end.
     */
   def p71BpeTrain(s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.TokenizerStore
-      .bpe(t(s, dir, "documents"), dir, "text", nMerges = 100)._1
+    ArtifactStore.bpe(t(s, dir, "documents"), "text", nMerges = 100)._1
 
   /** Tokenize the corpus with the p71-trained merge table
-    * ([[graft.pipeline.TokenizerStore]] + [[Bpe.encodeWith]] — the
+    * ([[ArtifactStore.bpe]] + [[Bpe.encodeWith]] — the
     * tokenizer lifecycle's other half): train to exhaustion, then
     * tokenize every document through the trainer's OWN final
     * segmentation as the broadcast dictionary — the trained artifact
@@ -453,8 +452,7 @@ object PipelineQueries {
     */
   def p75BpeEncode(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val (_, vocab) = graft.pipeline.TokenizerStore
-      .bpe(docs, dir, "text", nMerges = 100)
+    val (_, vocab) = ArtifactStore.bpe(docs, "text", nMerges = 100)
     Bpe.encodeWith(docs, "doc_id", "text", vocab)
   }
 
@@ -923,13 +921,13 @@ object PipelineQueries {
 
   /** Full k-means training loop: three Lloyd iterations from the p19
     * seed centroids, driver-held centroid state between steps. Served
-    * from [[graft.pipeline.TrainedIndexStore]] — the session trains
+    * from [[ArtifactStore.kmeansMeans]] — the session trains
     * this quantizer once and every consumer (this card, the streaming
     * assigner, any scorecard row) reuses the frozen means.
     */
   val kmeansIters = 3
   def p22KmeansTrain(s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.TrainedIndexStore.kmeansMeans(t(s, dir, "embeddings"),
+    ArtifactStore.kmeansMeans(t(s, dir, "embeddings"),
       "vec_id", "embedding", centroidFilter = col("vec_id") % 25 === 0,
       iters = kmeansIters)
 
@@ -989,7 +987,7 @@ object PipelineQueries {
     */
   def p37DupClusters(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    DedupStore.dedupDecisions(docs, "doc_id", "text",
+    ArtifactStore.dedupDecisions(docs, "doc_id", "text",
         k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
       .select(col("node").as("doc_id"), col("component").as("cluster_id"),
         col("keep"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{ConnectedComponents, Sessionize}
-import graft.pipeline.{Bpe, ClassifierStore, Curation, Dedup, DedupStore, Ingest, Multimodal, Retrieval, Similarity, TextFunctions => TF}
+import graft.pipeline.{ArtifactStore, Bpe, Curation, Dedup, Ingest, Multimodal, Retrieval, Similarity, TextFunctions => TF}
 
 /** Query-card defs p96+ (events, retrieval, manifests, index
   * lifecycle, audits) — part 3 of the round-15 split of the
@@ -93,7 +93,7 @@ object PipelineQueries2 {
     */
   def p113Auc(s: SparkSession, dir: String): DataFrame =
     Curation.rocAuc(
-      ClassifierStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
+      ArtifactStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
         vocabSize = 500, profile = Curation.GateProfile.wordSalad),
       "llr_micro", "cls")
 
@@ -138,7 +138,7 @@ object PipelineQueries2 {
     * iteration by iteration.
     */
   def p117LrClassifier(s: SparkSession, dir: String): DataFrame =
-    ClassifierStore.lrScored(t(s, dir, "documents"), "doc_id",
+    ArtifactStore.lrScored(t(s, dir, "documents"), "doc_id",
       "text", buckets = 64, iters = 12, lrDen = 1,
       profile = Curation.GateProfile.wordSalad)
 
@@ -151,8 +151,7 @@ object PipelineQueries2 {
     * every merge decision AND its exact-integer score.
     */
   def p118Wordpiece(s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.TokenizerStore
-      .wordPiece(t(s, dir, "documents"), dir, "text", nMerges = 100)._1
+    ArtifactStore.wordPiece(t(s, dir, "documents"), "text", nMerges = 100)._1
 
   /** Hybrid retrieval (p119): the p112 BM25 top-10 fused with the
     * dense cosine top-10 over the SAME query ids (doc_id ↔ vec_id) by
@@ -370,9 +369,9 @@ object PipelineQueries2 {
     */
   def p139ClassifierAgreement(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val nb = ClassifierStore.nbScored(docs, "doc_id", "text",
+    val nb = ArtifactStore.nbScored(docs, "doc_id", "text",
       vocabSize = 500, profile = Curation.GateProfile.wordSalad)
-    val lr = ClassifierStore.lrScored(docs, "doc_id", "text",
+    val lr = ArtifactStore.lrScored(docs, "doc_id", "text",
       buckets = 64, iters = 12, lrDen = 1,
       profile = Curation.GateProfile.wordSalad)
     Curation.classifierAgreement(nb, "pred", lr, "pred", "doc_id")
@@ -388,7 +387,7 @@ object PipelineQueries2 {
     */
   def p138PagerankHubs(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = DedupStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
+    val pairs = ArtifactStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
         threshold = 0.4, maxShingleFreqFrac = Some(0.1))
       .select(col("doc_a"), col("doc_b"))
     val edges = pairs
@@ -426,7 +425,7 @@ object PipelineQueries2 {
     */
   def p154KCore(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = DedupStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
+    val pairs = ArtifactStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
         threshold = 0.4, maxShingleFreqFrac = Some(0.1))
       .select(col("doc_a"), col("doc_b"))
     Seq(2L, 3L).map { kk =>
@@ -449,7 +448,7 @@ object PipelineQueries2 {
     */
   def p155PrAuc(s: SparkSession, dir: String): DataFrame =
     Curation.averagePrecision(
-      ClassifierStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
+      ArtifactStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
         vocabSize = 500, profile = Curation.GateProfile.wordSalad),
       "llr_micro", "cls")
 
@@ -470,7 +469,7 @@ object PipelineQueries2 {
   def p156DedupRetrievalImpact(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val queries = Retrieval.plantedQueries(docs, "doc_id", "text")
-    val dropped = DedupStore.dedupDecisions(docs, "doc_id", "text",
+    val dropped = ArtifactStore.dedupDecisions(docs, "doc_id", "text",
         k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
       .filter(col("keep") === 0).select(col("node").as("doc_id"))
     // one postings build serves both cards (the deduped index is the
@@ -490,7 +489,7 @@ object PipelineQueries2 {
     */
   def p157OperatingPoints(s: SparkSession, dir: String): DataFrame =
     Curation.classifierOperatingPoints(
-      ClassifierStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
+      ArtifactStore.nbScored(t(s, dir, "documents"), "doc_id", "text",
         vocabSize = 500, profile = Curation.GateProfile.wordSalad),
       "llr_micro", "cls",
       // the corpus LLR mass spans ~[-0.8M, 13.6M] (median ~4M): these
@@ -531,7 +530,7 @@ object PipelineQueries2 {
       .select(col("doc_id"),
         when(col("h") < 80, "train").when(col("h") < 90, "valid")
           .otherwise("test").as("split"))
-    val cc = DedupStore.dedupDecisions(docs, "doc_id", "text",
+    val cc = ArtifactStore.dedupDecisions(docs, "doc_id", "text",
       k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     cc.join(split.select(col("doc_id").as("node"),
         col("split").as("from_split")), Seq("node"))
@@ -1296,10 +1295,10 @@ object PipelineQueries2 {
           item.cast("string").as("item"),
           explode(map(metrics.flatMap(m =>
             Seq(lit(m), col(m).cast("long"))): _*)).as(Seq("metric", "value")))
-    val pairs0 = DedupStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
+    val pairs0 = ArtifactStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
       threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     val parts = graft.core.Caching.withCachedMulti(pairs0) {
-      val dec0 = DedupStore.dedupDecisions(docs, "doc_id", "text",
+      val dec0 = ArtifactStore.dedupDecisions(docs, "doc_id", "text",
         k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
       graft.core.Caching.withCachedMulti(dec0) {
         val toks = docs.select(col("doc_id"),
@@ -1669,7 +1668,7 @@ object PipelineQueries2 {
     */
   def p151SourceDupRates(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val cc = DedupStore.dedupDecisions(docs, "doc_id", "text",
+    val cc = ArtifactStore.dedupDecisions(docs, "doc_id", "text",
       k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     docs.select(col("doc_id"), col("source"),
         size(TF.tokens(col("text"))).cast("long").as("n_toks"))
@@ -1697,7 +1696,7 @@ object PipelineQueries2 {
     */
   def p152SplitLeakage(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = DedupStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
+    val pairs = ArtifactStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
         threshold = 0.4, maxShingleFreqFrac = Some(0.1))
       .select(col("doc_a"), col("doc_b"))
     val split = docs.select(col("doc_id"),
@@ -1717,7 +1716,7 @@ object PipelineQueries2 {
       .agg(count(lit(1)).as("n"))
       .select(concat(col("s1"), lit("|"), col("s2")).as("bucket"),
         col("n"))
-    val cc = DedupStore.dedupDecisions(docs, "doc_id", "text",
+    val cc = ArtifactStore.dedupDecisions(docs, "doc_id", "text",
       k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     val summary = cc.join(split.select(col("doc_id").as("node"),
         col("split")), Seq("node"))
@@ -1758,7 +1757,7 @@ object PipelineQueries2 {
     */
   def p149SurvivorPolicies(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = DedupStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
+    val pairs = ArtifactStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
       threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     Dedup.survivorPolicyCard(scoredDocs(docs), "doc_id", "n_toks",
       "score_micro", pairs)
@@ -1877,9 +1876,9 @@ object PipelineQueries2 {
         .select(col("doc_id"),
           coalesce(col("component"), col("doc_id")).as("cluster"))
     }
-    val pa = partition(DedupStore.ngramJaccardPairs(docs, "doc_id", "text",
+    val pa = partition(ArtifactStore.ngramJaccardPairs(docs, "doc_id", "text",
       k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1)))
-    val pb = partition(DedupStore.simhashPairs(docs, "doc_id", "text",
+    val pb = partition(ArtifactStore.simhashPairs(docs, "doc_id", "text",
       bits = 64, segments = 4, maxHamming = 2))
     graft.operators.RandIndex.adjustedRand(pa, "doc_id", "cluster",
       pb, "doc_id", "cluster")
@@ -1897,7 +1896,7 @@ object PipelineQueries2 {
     */
   def p141Triangles(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = DedupStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
+    val pairs = ArtifactStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
       threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     graft.operators.Triangles.perNode(pairs, "doc_a", "doc_b")
       .select(col("node").as("doc_id"), col("degree"), col("tri_count"))
@@ -1920,15 +1919,14 @@ object PipelineQueries2 {
     * matrix across all three tokenizer families (BPE p71/p75, unigram
     * p87/p88, WordPiece p118/p137). Encoding is the same broadcast
     * dictionary join as BPE's ([[Bpe.encodeWith]]), against the
-    * [[graft.pipeline.TokenizerStore]]-registered artifact (trained
+    * [[ArtifactStore.wordPiece]]-registered artifact (trained
     * once per session, never per consumer); the oracle replays
     * the training trajectory with the likelihood-ratio winner and
     * joins the final segmentation back to every word position.
     */
   def p137WordpieceEncode(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val (_, vocab) = graft.pipeline.TokenizerStore
-      .wordPiece(docs, dir, "text", nMerges = 100)
+    val (_, vocab) = ArtifactStore.wordPiece(docs, "text", nMerges = 100)
     Bpe.encodeWith(docs, "doc_id", "text", vocab)
   }
 
@@ -2082,7 +2080,7 @@ object PipelineQueries2 {
     */
   def p125DedupSweep(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val pairs = DedupStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
+    val pairs = ArtifactStore.ngramJaccardPairs(docs, "doc_id", "text", k = 4,
       threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     val toks = docs.select(col("doc_id"),
       size(TF.tokens(col("text"))).cast("long").as("n_toks"))
@@ -2116,7 +2114,7 @@ object PipelineQueries2 {
     */
   def p124Calibration(s: SparkSession, dir: String): DataFrame =
     Curation.calibrationReport(
-      ClassifierStore.lrScored(t(s, dir, "documents"), "doc_id",
+      ArtifactStore.lrScored(t(s, dir, "documents"), "doc_id",
         "text", buckets = 64, iters = 12, lrDen = 1,
         profile = Curation.GateProfile.wordSalad),
       "z_micro", "cls", bucketMicro = 400000L)
@@ -2209,7 +2207,7 @@ object PipelineQueries2 {
     */
   def p107DedupImpact(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val dec = DedupStore.dedupDecisions(docs, "doc_id", "text",
+    val dec = ArtifactStore.dedupDecisions(docs, "doc_id", "text",
       k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     val toks = docs.select(col("doc_id"),
       size(TF.tokens(col("text"))).cast("long").as("n_toks"))

@@ -711,7 +711,7 @@ object StreamingJobs {
       iters: Int): DataFrame = {
     val S = graft.pipeline.Similarity
     val cents = S.centroidsFromMeans(
-        graft.pipeline.TrainedIndexStore.kmeansMeans(corpus, "vec_id",
+        graft.pipeline.ArtifactStore.kmeansMeans(corpus, "vec_id",
           "embedding", centroidFilter, iters))
       .collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Float](1)))

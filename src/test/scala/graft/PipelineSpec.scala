@@ -1687,8 +1687,8 @@ class PipelineSpec extends SparkSpec {
   test("tokenizer store trains once per key and hands back the same artifact") {
     val docs = Seq((1L, "low lower lowest"), (2L, "low low newer"),
       (3L, "newer newest")).toDF("doc_id", "text")
-    val a = TokenizerStore.bpe(docs, "store-fixture", "text", nMerges = 10)
-    val b = TokenizerStore.bpe(docs, "store-fixture", "text", nMerges = 10)
+    val a = ArtifactStore.bpe(docs, "text", nMerges = 10)
+    val b = ArtifactStore.bpe(docs, "text", nMerges = 10)
     // the memo returns the SAME driver objects — zero retraining
     assert((a._1 eq b._1) && (a._2 eq b._2))
     // and the artifact is bit-equal to a direct train
@@ -1699,11 +1699,10 @@ class PipelineSpec extends SparkSpec {
       v.orderBy("word").collect().toSeq)
     Bpe.releaseVocab(v)
     // a different size is a different artifact
-    val c = TokenizerStore.bpe(docs, "store-fixture", "text", nMerges = 3)
+    val c = ArtifactStore.bpe(docs, "text", nMerges = 3)
     assert(!(c._1 eq a._1))
     // wordpiece keys do not collide with bpe keys of the same shape
-    val w = TokenizerStore.wordPiece(docs, "store-fixture", "text",
-      nMerges = 10)
+    val w = ArtifactStore.wordPiece(docs, "text", nMerges = 10)
     assert(!(w._1 eq a._1))
   }
 
@@ -2079,14 +2078,14 @@ class PipelineSpec extends SparkSpec {
     // and one decision frame (the key is the canonicalized plan +
     // input files, not the DataFrame reference); a different corpus
     // (another SF dir) never collides
-    val a = DedupStore.ngramJaccardPairs(
+    val a = ArtifactStore.ngramJaccardPairs(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
-    val b = DedupStore.ngramJaccardPairs(
+    val b = ArtifactStore.ngramJaccardPairs(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     assert(a eq b)
-    val c = DedupStore.ngramJaccardPairs(
+    val c = ArtifactStore.ngramJaccardPairs(
       spark.read.parquet(s"$sf001/documents.parquet"), "doc_id",
       "text", k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     assert(!(a eq c))
@@ -2096,7 +2095,7 @@ class PipelineSpec extends SparkSpec {
       "text", k = 4, threshold = 0.4,
       maxShingleFreqFrac = Some(0.1))
     assert(a.exceptAll(direct).isEmpty && direct.exceptAll(a).isEmpty)
-    val dec = DedupStore.dedupDecisions(
+    val dec = ArtifactStore.dedupDecisions(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", k = 4, threshold = 0.4, maxShingleFreqFrac = Some(0.1))
     val decDirect = graft.operators.ConnectedComponents.dedupDecisions(
@@ -2104,10 +2103,10 @@ class PipelineSpec extends SparkSpec {
     assert(dec.exceptAll(decDirect).isEmpty &&
       decDirect.exceptAll(dec).isEmpty)
     // the simhash entry follows the same contract
-    val s1 = DedupStore.simhashPairs(
+    val s1 = ArtifactStore.simhashPairs(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", bits = 64, segments = 4, maxHamming = 2)
-    val s2 = DedupStore.simhashPairs(
+    val s2 = ArtifactStore.simhashPairs(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", bits = 64, segments = 4, maxHamming = 2)
     assert(s1 eq s2)
@@ -2123,18 +2122,18 @@ class PipelineSpec extends SparkSpec {
     // (key = canonicalized plan + input files, not the reference);
     // different hyperparameters or another SF dir never collide
     val p = Curation.GateProfile.wordSalad
-    val a = ClassifierStore.nbScored(
+    val a = ArtifactStore.nbScored(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", vocabSize = 500, profile = p)
-    val b = ClassifierStore.nbScored(
+    val b = ArtifactStore.nbScored(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", vocabSize = 500, profile = p)
     assert(a eq b)
-    val other = ClassifierStore.nbScored(
+    val other = ArtifactStore.nbScored(
       spark.read.parquet(s"$sf001/documents.parquet"), "doc_id",
       "text", vocabSize = 500, profile = p)
     assert(!(a eq other))
-    val narrower = ClassifierStore.nbScored(
+    val narrower = ArtifactStore.nbScored(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", vocabSize = 100, profile = p)
     assert(!(a eq narrower))
@@ -2144,10 +2143,10 @@ class PipelineSpec extends SparkSpec {
       "text", vocabSize = 500, profile = p)
     assert(a.exceptAll(direct).isEmpty && direct.exceptAll(a).isEmpty)
     // the LR entry follows the same contract
-    val l1 = ClassifierStore.lrScored(
+    val l1 = ArtifactStore.lrScored(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", buckets = 64, iters = 12, lrDen = 1, profile = p)
-    val l2 = ClassifierStore.lrScored(
+    val l2 = ArtifactStore.lrScored(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", buckets = 64, iters = 12, lrDen = 1, profile = p)
     assert(l1 eq l2)
@@ -2156,7 +2155,7 @@ class PipelineSpec extends SparkSpec {
       "text", buckets = 64, iters = 12, lrDen = 1, profile = p)
     assert(l1.exceptAll(lDirect).isEmpty &&
       lDirect.exceptAll(l1).isEmpty)
-    val fewerIters = ClassifierStore.lrScored(
+    val fewerIters = ArtifactStore.lrScored(
       spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id",
       "text", buckets = 64, iters = 2, lrDen = 1, profile = p)
     assert(!(l1 eq fewerIters))
@@ -2169,8 +2168,8 @@ class PipelineSpec extends SparkSpec {
     val embA = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val embB = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val f = col("vec_id") % 25 === 0
-    val a = TrainedIndexStore.kmeansMeans(embA, "vec_id", "embedding", f, 2)
-    val b = TrainedIndexStore.kmeansMeans(embB, "vec_id", "embedding", f, 2)
+    val a = ArtifactStore.kmeansMeans(embA, "vec_id", "embedding", f, 2)
+    val b = ArtifactStore.kmeansMeans(embB, "vec_id", "embedding", f, 2)
     assert(a eq b, "fresh reads of the same table must share the artifact")
     // bit-equal to a direct train
     val direct = Similarity.kmeansTrain(embA, "vec_id", "embedding", f, 2)
@@ -2178,25 +2177,25 @@ class PipelineSpec extends SparkSpec {
     assert(a.collect().sortBy(r => (r.getLong(0), r.getLong(1))).toSeq
       == direct)
     // different iteration counts / filters are different artifacts
-    val c = TrainedIndexStore.kmeansMeans(embA, "vec_id", "embedding", f, 1)
+    val c = ArtifactStore.kmeansMeans(embA, "vec_id", "embedding", f, 1)
     assert(!(c eq a))
-    val d = TrainedIndexStore.kmeansMeans(embA, "vec_id", "embedding",
+    val d = ArtifactStore.kmeansMeans(embA, "vec_id", "embedding",
       col("vec_id") % 50 === 0, 2)
     assert(!(d eq a))
     // a DIFFERENT directory with the same plan shape must NOT collide
     val other = spark.read.parquet(s"$sf001/embeddings.parquet")
-    val e = TrainedIndexStore.kmeansMeans(other, "vec_id", "embedding", f, 2)
+    val e = ArtifactStore.kmeansMeans(other, "vec_id", "embedding", f, 2)
     assert(!(e eq a))
     assert(e.count() != a.count() || e.collect().toSet != a.collect().toSet)
     // PQ books memoize the same way
-    val p = TrainedIndexStore.pqBooks(embA, "vec_id", "embedding", 4, 64,
+    val p = ArtifactStore.pqBooks(embA, "vec_id", "embedding", 4, 64,
       col("vec_id") < 8, 2)
-    val q = TrainedIndexStore.pqBooks(embB, "vec_id", "embedding", 4, 64,
+    val q = ArtifactStore.pqBooks(embB, "vec_id", "embedding", 4, 64,
       col("vec_id") < 8, 2)
     assert(p eq q)
   }
 
-  test("classifier and trained-index stores retrain on an input rewritten in place") {
+  test("artifact store retrains on an input rewritten in place") {
     import java.nio.file.{Files, StandardCopyOption}
     // the same file path gets new bytes (the path-only key would serve
     // the artifact trained on the old contents)
@@ -2217,7 +2216,7 @@ class PipelineSpec extends SparkSpec {
     val p = Curation.GateProfile.wordSalad
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val docPath = writeInPlace(docs, "documents")
-    def lr() = ClassifierStore.lrScored(spark.read.parquet(docPath),
+    def lr() = ArtifactStore.lrScored(spark.read.parquet(docPath),
       "doc_id", "text", buckets = 64, iters = 3, lrDen = 1, profile = p)
     val lrOld = lr()
     assert(lr() eq lrOld)
@@ -2231,8 +2230,8 @@ class PipelineSpec extends SparkSpec {
 
     // the dedup store's pair set: the rewrite adds an exact copy of
     // every document, so the new pair set cannot equal the old one
-    def pairs() = DedupStore.ngramJaccardPairs(spark.read.parquet(docPath),
-      "doc_id", "text", k = 4, threshold = 0.4,
+    def pairs() = ArtifactStore.ngramJaccardPairs(
+      spark.read.parquet(docPath), "doc_id", "text", k = 4, threshold = 0.4,
       maxShingleFreqFrac = Some(0.1))
     val pjOld = pairs()
     assert(pairs() eq pjOld)
@@ -2248,7 +2247,7 @@ class PipelineSpec extends SparkSpec {
     val f = col("vec_id") % 25 === 0
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val embPath = writeInPlace(emb, "embeddings")
-    def km() = TrainedIndexStore.kmeansMeans(spark.read.parquet(embPath),
+    def km() = ArtifactStore.kmeansMeans(spark.read.parquet(embPath),
       "vec_id", "embedding", f, 2)
     val kmOld = km()
     assert(km() eq kmOld)
@@ -2258,6 +2257,85 @@ class PipelineSpec extends SparkSpec {
     assert(sorted(kmNew) == sorted(Similarity.kmeansTrain(
       spark.read.parquet(embPath), "vec_id", "embedding", f, 2)))
     assert(sorted(kmNew) != sorted(kmOld))
+  }
+
+  test("artifact store keys local corpora by their rows") {
+    // a local relation prints only its schema in the plan string: two
+    // same-schema local corpora must not share one artifact
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    def local(keep: Long => Boolean) = spark.createDataFrame(
+      java.util.Arrays.asList(
+        emb.collect().filter(r => keep(r.getLong(0))): _*), emb.schema)
+    val embA = local(_ < 250L)
+    val embB = local(_ >= 250L)
+    val f = col("vec_id") % 25 === 0
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val a = ArtifactStore.kmeansMeans(embA, "vec_id", "embedding", f, 2)
+    val b = ArtifactStore.kmeansMeans(embB, "vec_id", "embedding", f, 2)
+    assert(!(a eq b), "a second local corpus was served the first's means")
+    assert(sorted(a) ==
+      sorted(Similarity.kmeansTrain(embA, "vec_id", "embedding", f, 2)))
+    assert(sorted(b) ==
+      sorted(Similarity.kmeansTrain(embB, "vec_id", "embedding", f, 2)))
+    // the tokenizer entries key on the corpus the same way
+    val docsA = Seq((1L, "low lower lowest"), (2L, "low low newer"))
+      .toDF("doc_id", "text")
+    val docsB = Seq((1L, "newer newest"), (2L, "wide wider widest"))
+      .toDF("doc_id", "text")
+    assert(!(ArtifactStore.bpe(docsA, "text", nMerges = 5)._1 eq
+      ArtifactStore.bpe(docsB, "text", nMerges = 5)._1))
+  }
+
+  test("artifact store memo builds once under concurrency") {
+    val key = s"memo-spec-${java.util.UUID.randomUUID}"
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val calls = (1 to 2).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[AnyRef] {
+          def call(): AnyRef = {
+            start.await()
+            ArtifactStore.memo(key) {
+              builds.incrementAndGet()
+              Thread.sleep(200)
+              new Object
+            }
+          }
+        })
+      }
+      start.countDown()
+      val Seq(x, y) = calls.map(_.get())
+      assert(builds.get == 1)
+      assert(x eq y)
+    } finally pool.shutdown()
+  }
+
+  test("artifact store memo allows a build to look up another key") {
+    val key = s"memo-spec-${java.util.UUID.randomUUID}"
+    val inner = new Object
+    val outer = ArtifactStore.memo(s"$key-outer") {
+      List(ArtifactStore.memo(s"$key-inner")(inner))
+    }
+    assert(outer.head eq inner)
+    assert(ArtifactStore.memo(s"$key-inner")(new Object) eq inner)
+  }
+
+  test("artifact store memo retries a build that threw") {
+    val key = s"memo-spec-${java.util.UUID.randomUUID}"
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def get(): AnyRef = ArtifactStore.memo(key) {
+      if (builds.incrementAndGet() == 1)
+        throw new IllegalStateException("first build fails")
+      new Object
+    }
+    intercept[IllegalStateException](get())
+    val v = get()
+    assert(builds.get == 2)
+    assert(get() eq v)
+    assert(builds.get == 2)
   }
 
   test("k-anonymity histogram counts signature equivalence classes") {

@@ -23,10 +23,7 @@ class PlansSpec extends SparkSpec {
     * column pruning cannot drop operators.
     */
   private def executions(name: String): Seq[QueryExecution] = {
-    graft.pipeline.TokenizerStore.clear()
-    graft.pipeline.TrainedIndexStore.clear()
-    graft.pipeline.DedupStore.clear()
-    graft.pipeline.ClassifierStore.clear()
+    graft.pipeline.ArtifactStore.clear()
     try ExecutedPlans.capture(spark) {
       SparkEntry.queries(name)(spark, sf0001)
         .write.format("noop").mode("overwrite").save()
@@ -441,7 +438,7 @@ class PlansSpec extends SparkSpec {
     // centroid state lives on the driver between iterations, so the
     // FINAL iteration's plan is the same shape as a single update —
     // no lineage deepening with the iteration count (pin the RAW
-    // primitive; the public p22 serves from TrainedIndexStore below)
+    // primitive; the public p22 serves from ArtifactStore below)
     val p = plan(graft.pipeline.Similarity.kmeansTrain(
       spark.read.parquet(s"$sf0001/embeddings.parquet"), "vec_id",
       "embedding",

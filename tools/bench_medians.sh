@@ -1,9 +1,9 @@
 #!/bin/bash
 # Repeat-median bench artifacts for a round, BOTH store temperatures:
-#   BENCH_local_r<N>_medians.json      — WARM: TokenizerStore /
-#     TrainedIndexStore / DedupStore reused within the session (the
-#     production economics: train/detect once, many consumers).
-#   BENCH_local_r<N>_coldmedians.json  — COLD: stores cleared before
+#   BENCH_local_r<N>_medians.json      — WARM: ArtifactStore entries
+#     reused within the session (the production economics:
+#     train/detect once, many consumers).
+#   BENCH_local_r<N>_coldmedians.json  — COLD: store cleared before
 #     every run (SPARK_GRAFT_COLDSTORES=1), so the medians price the
 #     training/detection cost itself.
 # The round-14 review's one measurement-integrity gap: warm medians
