@@ -58,14 +58,6 @@ object GraftSession {
     if (master.nonEmpty) b.master(master)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Memory-backed ImageIO streams for the in-memory codec operators
-    // (see the rationale on graft.pipeline.Multimodal, which sets the
-    // same flag as an executor-side classload fallback). Deliberately
-    // explicit at session build rather than only as a classload side
-    // effect: the very first codec task in the process should already
-    // run cache-free, and the process-global scope is documented here
-    // where the process is configured.
-    javax.imageio.ImageIO.setUseCache(false)
     spark
   }
 }

@@ -1,9 +1,15 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 
+import graft.functions.StringKernels.lowerIcu
 import graft.pipeline.{TextFunctions => TF}
 
 /** Corpus-curation operators for assembling a training set: stratified
@@ -1180,7 +1186,7 @@ object Curation {
       carry: Seq[String] = Nil, minWords: Long = 50,
       minStopwords: Long = 2): DataFrame = {
     val toks = TF.tokens(col(textCol))
-    val lowered = transform(toks, t => lower(t))
+    val lowered = transform(toks, t => lowerIcu(t))
     val lines = split(col(textCol), "\n")
     val d = df
       .withColumn("n_toks", size(toks).cast("long"))
@@ -1427,7 +1433,7 @@ object Curation {
       .withColumn("has_brace",
         when(col(textCol).like("%{%"), 1L).otherwise(0L))
       .withColumn("has_lorem",
-        when(lower(col(textCol)).like("%lorem ipsum%"), 1L).otherwise(0L))
+        when(lowerIcu(col(textCol)).like("%lorem ipsum%"), 1L).otherwise(0L))
       .withColumn("clean_fp",
         substring(md5(concat_ws("\n", kept)), 1, 16))
     d.select(
@@ -3092,20 +3098,19 @@ object Curation {
     * weight update is an exact floor-division by (n·`lrDen`)
     * (learning rate 1/`lrDen`, starting from w = 0).
     *
-    * Scale shape: the weight vector (≤`buckets` rows of exact ints)
-    * lives ON THE DRIVER between rounds — the [[Similarity]] k-means
-    * move — so every round is an INDEPENDENT flat plan of two
-    * shuffles: the gradient rollup keyed by bucket (≤`buckets` rows
-    * out, map-side combined, weight-sized collect) and the margin
-    * rollup keyed by document (int payloads only, against the
-    * literal-weight broadcast). Chaining rounds as one lazy plan
-    * would re-derive every earlier round once per use — the
-    * exponential-lineage trap the BPE trainer documents. The doc
-    * count rides the gradient plan as a single-row broadcast (no
-    * driver `count()` pre-pass). At 100 TB the fit would run on a
-    * label sample ([[stratifiedSample]]) and the final
-    * broadcast-scoring pass over the full corpus, exactly like
-    * [[nbCostTables]].
+    * Scale shape: the per-document feature frame ([[lrDocFeats]], one
+    * shuffle) is checkpointed once; the weight vector (≤`buckets`
+    * exact ints) lives ON THE DRIVER between rounds — the
+    * [[Similarity]] k-means move — and each round is ONE single-stage
+    * job over the checkpoint blocks whose tasks return partial
+    * gradients of ≤`buckets` entries ([[lrWeightsFromDocs]]; the first
+    * round's job also counts the documents). Chaining rounds as one
+    * lazy plan would re-derive every earlier round once per use — the
+    * exponential-lineage trap the BPE trainer documents. The final
+    * scoring pass is zero-exchange, with the weights as a literal map.
+    * At 100 TB the fit would run on a label sample
+    * ([[stratifiedSample]]) and the final scoring pass over the full
+    * corpus, exactly like [[nbCostTables]].
     */
   def logisticRegression(df: DataFrame, idCol: String, textCol: String,
       buckets: Int, iters: Int, lrDen: Int = 4,
@@ -3128,8 +3133,7 @@ object Curation {
             .as("z_micro"))
         .withColumn("pred", when(col("z_micro") > 0, 1L).otherwise(0L))
         .localCheckpoint(eager = true)
-    } finally org.apache.spark.sql.graftbridge.CheckpointBridge
-      .releaseLocalCheckpoint(docFeats)
+    } finally CheckpointBridge.releaseLocalCheckpoint(docFeats)
   }
 
   /** Per-document feature frame of the LR trainer: one row per
@@ -3145,55 +3149,100 @@ object Curation {
     labeled.groupBy(col(idCol)).agg(max(col("cls")).as("cls"),
       collect_list(col("bucket")).as("feats"))
 
-  /** One GD round's residual column over the doc-feature frame:
-    * round 1 is the closed form at w = 0; later rounds score the
-    * document against the driver-held weights riding as a literal map
-    * (σ over z/10⁶, floored back to micro). Exactly the expressions
-    * the exploded join formulation evaluated — z is an integer sum,
-    * so re-association across the array is exact; every observed
-    * bucket is present in `w` after round 1 (the gradient covers all
-    * of them), so the 0-weight fallback can never fire on a bucket
-    * the join formulation would have dropped.
+  /** One document's residual in micro units for GD round `t`: round 1
+    * is the closed form at w = 0; later rounds score the document
+    * against the driver-held weights (σ of z/10⁶, floored back to
+    * micro). These are exactly the double operations of the SQL
+    * formulation (`exp` compiles to `java.lang.Math.exp` in Spark's
+    * generated code), so the trajectory is bit-identical to it, as
+    * GuardBandSpec's replica checks. z is an integer sum, so
+    * re-association across the array is exact; every observed bucket
+    * is in `w` after round 1 (the gradient covers all of them), so the
+    * 0-weight fallback never fires. Every long op is exact: an
+    * overflow fails as Spark's ANSI arithmetic does.
     */
-  private def lrResidual(t: Int, w: Map[Long, Long]): Column = {
-    if (t == 1) lit(500000L) - col("cls") * lit(1000000L)
+  private def lrDocResidual(cls: Long, feats: ArrayData, t: Int,
+      w: Map[Long, Long]): Long =
+    if (t == 1) Math.subtractExact(500000L, Math.multiplyExact(cls, 1000000L))
     else {
-      val wm = typedLit(w)
-      val z = aggregate(col("feats"), lit(0L),
-        (acc, b) => acc + coalesce(element_at(wm, b), lit(0L)))
-      val sigma = lit(1.0) /
-        (lit(1.0) + exp(-(z.cast("double") / lit(1e6))))
-      floor((sigma - col("cls").cast("double")) * 1e6).cast("long")
+      var z = 0L
+      var i = 0
+      while (i < feats.numElements()) {
+        z = Math.addExact(z, w.getOrElse(feats.getLong(i), 0L))
+        i += 1
+      }
+      val sigma = 1.0 / (1.0 + java.lang.Math.exp(-(z.toDouble / 1e6)))
+      Math.floor((sigma - cls.toDouble) * 1e6).toLong
     }
+
+  /** One partition's share of GD round `t`: its document count and,
+    * per bucket, the sum of the residuals of its documents, each
+    * document adding its residual once per occurrence of the bucket in
+    * its feature array (the exploded form's rows). A document with a
+    * null label or feature array contributes no residual, as SQL's
+    * `sum` skips a null one.
+    */
+  private def lrPartialGradient(rows: Iterator[InternalRow], clsAt: Int,
+      featsAt: Int, t: Int,
+      w: Map[Long, Long]): (Long, Array[(Long, Long)]) = {
+    val g = mutable.LongMap.empty[Long]
+    var n = 0L
+    rows.foreach { row =>
+      n += 1
+      if (!row.isNullAt(clsAt) && !row.isNullAt(featsAt)) {
+        val feats = row.getArray(featsAt)
+        val r = lrDocResidual(row.getLong(clsAt), feats, t, w)
+        var i = 0
+        while (i < feats.numElements()) {
+          val b = feats.getLong(i)
+          g(b) = Math.addExact(g.getOrElse(b, 0L), r)
+          i += 1
+        }
+      }
+    }
+    (n, g.toArray)
   }
 
   /** The gradient-descent loop of [[logisticRegression]] over a
-    * MATERIALIZED [[lrDocFeats]] frame: each round is a single
-    * 2-stage job (per-doc residual + exploded bucket rollup, ≤
-    * `buckets` rows collected); weights live on the driver between
-    * rounds ([[graft.pipeline.Similarity]]'s k-means convention), and
-    * the weight update replays [[floorDiv]] in exact integer
-    * arithmetic. The r15 shape — per round, a resid/z/grad join
-    * cascade re-planned over the cached exploded frame — spent ~1.5 s
-    * of AQE stage scheduling and two broadcast builds per round at 32
-    * cores on KB-sized frames (the driver's #1 cost, 19.9 s cold);
-    * the fused round keeps the identical integer trajectory.
+    * MATERIALIZED [[lrDocFeats]] frame (`cls` bigint, `feats`
+    * array<bigint>). Each round is ONE single-stage Spark job straight
+    * over the checkpoint blocks, MLlib's per-iteration aggregate
+    * idiom: every task scores each of its documents once and adds the
+    * residual to that document's buckets in a partial gradient of at
+    * most `buckets` entries; the driver merges the partials (exact
+    * integer sums) and applies the [[floorDiv]] update, replayed in
+    * exact integer arithmetic. Round 1's job also counts the
+    * documents, so there is no `count()` pre-pass. Weights live on the
+    * driver between rounds ([[graft.pipeline.Similarity]]'s k-means
+    * convention) and ride to the tasks in the job's closure.
+    *
+    * Not a SQL round: a per-doc residual projection plus an exploded
+    * bucket rollup is a freshly planned two-stage query per round, with
+    * ~0.07 s of task work behind 0.16–0.2 s of planning, AQE and job
+    * submission, even with its exchange removed.
     */
   private[graft] def lrWeightsFromDocs(docFeats: DataFrame,
       iters: Int, lrDen: Int): Seq[(Long, Long)] = {
     require(iters > 0, "iters must be positive")
-    val spark = docFeats.sparkSession
-    import spark.implicits._
-    val mVal = docFeats.count() * lrDen
+    val docs = CheckpointBridge.checkpointedRows(docFeats)
+    val clsAt = docFeats.schema.fieldIndex("cls")
+    val featsAt = docFeats.schema.fieldIndex("feats")
+    var mVal = 0L
     var w = Map.empty[Long, Long]
     for (t <- 1 to iters) {
-      // Hoist rule: the residual is projected BELOW the explode — beside
-      // the generator it would run once per feature bucket, not per doc
-      val grad = docFeats
-        .select(col("feats"), lrResidual(t, w).as("r"))
-        .select(explode(col("feats")).as("bucket"), col("r"))
-        .groupBy(col("bucket")).agg(sum(col("r")).as("g"))
-        .as[(Long, Long)].collect()
+      val wt = w // the tasks read this round's weights, not the var
+      var n = 0L
+      val grad = mutable.LongMap.empty[Long]
+      docs.sparkContext.runJob(docs,
+        (rows: Iterator[InternalRow]) =>
+          lrPartialGradient(rows, clsAt, featsAt, t, wt),
+        (_: Int, part: (Long, Array[(Long, Long)])) => {
+          n += part._1
+          part._2.foreach { case (b, g) =>
+            grad(b) = Math.addExact(grad.getOrElse(b, 0L), g)
+          }
+        })
+      if (t == 1) mVal = n * lrDen
       w = grad.foldLeft(w) { case (acc, (b, g)) =>
         // exact −floorDiv(g, m): pmod then an exactly-divisible div
         val mod = ((g % mVal) + mVal) % mVal
@@ -3213,7 +3262,6 @@ object Curation {
       iters: Int, lrDen: Int): Seq[(Long, Long)] = {
     val docFeats = lrDocFeats(labeled, idCol).localCheckpoint(eager = true)
     try lrWeightsFromDocs(docFeats, iters, lrDen)
-    finally org.apache.spark.sql.graftbridge.CheckpointBridge
-      .releaseLocalCheckpoint(docFeats)
+    finally CheckpointBridge.releaseLocalCheckpoint(docFeats)
   }
 }

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.StringKernels.lowerIcu
+
 /** Text-analysis primitives for large-scale training-data pipelines:
   * tokenization, shingling, portable hashing, language-ID, quality
   * scoring, token counting, fingerprinting.
@@ -41,7 +43,7 @@ object TextFunctions {
     * approximation of byte-pair pre-tokenization rules).
     */
   def bpeTokens(text: Column): Column =
-    regexp_extract_all(lower(text), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))
+    regexp_extract_all(lowerIcu(text), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))
 
   /** Distinct word k-shingles of a token array. Rows with fewer than
     * `k` tokens yield an empty array.
@@ -101,7 +103,7 @@ object TextFunctions {
 
   /** Count of tokens found in `words` (lower-cased match). */
   def stopwordHits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => lower(t).isin(words: _*)))
+    size(filter(toks, t => lowerIcu(t).isin(words: _*)))
 
   /** Predicted language: argmax of per-language stopword hits, ties
     * broken by list order (en > es > de > fr). Deterministic integer
@@ -160,7 +162,7 @@ object TextFunctions {
     */
   def ccnetNormalize(text: Column): Column =
     concat_ws(" ", tokens(regexp_replace(
-      regexp_replace(lower(text), "[0-9]", "0"), "[^a-z0-9\\s]", " ")))
+      regexp_replace(lowerIcu(text), "[0-9]", "0"), "[^a-z0-9\\s]", " ")))
 
   /** Per-ROW micro-floored Shannon entropy of a symbol array — the
     * stateless twin of [[Curation.entropyStats]]'s grouped branch:

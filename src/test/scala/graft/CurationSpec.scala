@@ -513,4 +513,49 @@ class CurationSpec extends SparkSpec {
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(b2 == h2)
   }
+
+  test("LR gradient rounds run one single-stage Spark job each, with no SQL execution") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    import org.apache.spark.sql.graftbridge.{CheckpointBridge, ListenerBridge}
+    val labeled = Curation.funnelLabels(
+        spark.read.parquet(s"$sf0001/documents.parquet"), "doc_id", "text",
+        profile = Curation.GateProfile.wordSalad)
+      .select(col("doc_id"), col("cls"),
+        explode(array_distinct(transform(TF.tokens(col("text")),
+          t => TF.hash60(t) % 64))).as("bucket"))
+    val docFeats = Curation.lrDocFeats(labeled, "doc_id")
+      .localCheckpoint(eager = true)
+    val sc = spark.sparkContext
+    val group = "lr-round-shape"
+    def ours(props: java.util.Properties) =
+      props != null && props.getProperty("spark.jobGroup.id") == group
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.incrementAndGet()
+    }
+    try {
+      ListenerBridge.drain(sc)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, group)
+      var w = Seq.empty[(Long, Long)]
+      val executions =
+        try graft.core.ExecutedPlans.capture(spark) {
+          w = Curation.lrWeightsFromDocs(docFeats, iters = 3, lrDen = 1)
+        } finally {
+          sc.clearJobGroup()
+          ListenerBridge.drain(sc)
+          sc.removeSparkListener(listener)
+        }
+      assert(w.nonEmpty)
+      assert(executions.isEmpty,
+        s"${executions.size} SQL executions ran inside the GD loop")
+      assert(jobs.get == 3, s"3 rounds ran ${jobs.get} jobs")
+      assert(stages.get == 3, s"3 rounds ran ${stages.get} stages")
+    } finally CheckpointBridge.releaseLocalCheckpoint(docFeats)
+  }
 }
