@@ -297,7 +297,7 @@ object Curation {
       domainCol: String, weights: DataFrame, shardToks: Long,
       salt: String = "mix", buckets: Int = 256): DataFrame =
     mixturePlace(df, idCol, textCol, domainCol, weights, shardToks,
-      salt, buckets, seqBase = None, tokBase = None)
+      salt, buckets, resumed = None)
 
   /** Incremental manifest append — the batch twin of the streaming
     * stride scheduler ([[graft.streaming.StreamingJobs
@@ -317,9 +317,13 @@ object Curation {
     * WITHIN each appended batch — append never reshuffles history,
     * the same trade the stream makes.
     *
-    * Scale shape: resumed state is |domains| + 1 broadcast rows; the
-    * delta rides the identical two-level scans as the full build, so
-    * appending Δ docs costs O(Δ), not O(corpus).
+    * Scale shape: resumed state is ONE broadcast row (a per-domain
+    * count map plus the token mass) from one aggregate over the
+    * manifest, so the plan reads `existing` twice — the union and
+    * that aggregate — and a chain of k appends embeds the base
+    * manifest 2^k times; the delta rides the identical two-level
+    * scans as the full build, so appending Δ docs costs O(Δ), not
+    * O(corpus).
     */
   def mixtureAppend(existing: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, domainCol: String,
@@ -327,25 +331,28 @@ object Curation {
       buckets: Int = 256): DataFrame = {
     val cols = Seq(col(idCol), col(domainCol), col("n_toks"),
       col("vtime"), col("chunk_idx"), col("chunk_off"))
-    val seqBase = existing.groupBy(col(domainCol))
-      .agg(count(lit(1)).as("__i0"))
-    val tokBase = existing
-      .agg(coalesce(sum(col("n_toks")), lit(0L)).as("__tok0"))
+    val resumed = existing.groupBy(col(domainCol))
+      .agg(count(lit(1)).as("__c"), sum(col("n_toks")).as("__t"))
+      .agg(map_from_entries(collect_list(struct(col(domainCol),
+          col("__c")))).as("__seq0"),
+        coalesce(sum(col("__t")), lit(0L)).as("__tok0"))
     existing.select(cols: _*).unionByName(
       mixturePlace(delta, idCol, textCol, domainCol, weights,
-        shardToks, salt, buckets, Some(seqBase), Some(tokBase))
+        shardToks, salt, buckets, Some(resumed))
         .select(cols: _*))
   }
 
   /** The placement core shared by [[mixtureInterleave]] (no resumed
     * state — both bases fold to literal zero, leaving the full
-    * build's plan untouched) and [[mixtureAppend]] (per-domain
-    * sequence base + global token base, broadcast).
+    * build's plan untouched) and [[mixtureAppend]] (one broadcast
+    * row: `__seq0` maps each domain to its sequence base — absent,
+    * i.e. 0, for a domain new in the delta — and `__tok0` is the
+    * global token base).
     */
   private def mixturePlace(df: DataFrame, idCol: String,
       textCol: String, domainCol: String, weights: DataFrame,
       shardToks: Long, salt: String, buckets: Int,
-      seqBase: Option[DataFrame], tokBase: Option[DataFrame]): DataFrame = {
+      resumed: Option[DataFrame]): DataFrame = {
     require(shardToks > 0, "shardToks must be positive")
     require(buckets > 0, "buckets must be positive")
     val hBucketWidth = lit((1L << 60) / buckets + 1L)
@@ -363,16 +370,13 @@ object Curation {
           .partitionBy(col(domainCol)).orderBy(col("__hb"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col(domainCol), col("__hb"), col("__coff"))
-    val seqd = seqBase.fold(
-      base.join(broadcast(domOffsets), Seq(domainCol, "__hb")))(sb =>
-      base.join(broadcast(domOffsets), Seq(domainCol, "__hb"))
-        .join(broadcast(sb), Seq(domainCol), "left"))
-    val iExpr = seqBase.fold(
-      col("__coff") + row_number().over(withinDom).cast("long"))(_ =>
-      coalesce(col("__i0"), lit(0L)) + col("__coff") +
-        row_number().over(withinDom).cast("long"))
+    val offset = base.join(broadcast(domOffsets), Seq(domainCol, "__hb"))
+    val seqd = resumed.fold(offset)(r => offset.crossJoin(broadcast(r))
+      .withColumn("__i0",
+        coalesce(col("__seq0")(col(domainCol)), lit(0L))))
+    val iExpr = col("__coff") + row_number().over(withinDom).cast("long")
     val keyed = seqd
-      .withColumn("__i", iExpr)
+      .withColumn("__i", resumed.fold(iExpr)(_ => col("__i0") + iExpr))
       .join(broadcast(weights), Seq(domainCol))
       .withColumn("vtime",
         when(col("weight_micro") <= 0L, raise_error(concat(
@@ -397,12 +401,8 @@ object Curation {
           .orderBy(col("__vb"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("__vb"), col("__off"))
-    val placed = tokBase.fold(
-      vb.join(broadcast(vOffsets), Seq("__vb")))(tb =>
-      vb.join(broadcast(vOffsets), Seq("__vb"))
-        .crossJoin(broadcast(tb)))
-    val tok0 = tokBase.fold(lit(0L))(_ => col("__tok0"))
-    placed
+    val tok0 = resumed.fold(lit(0L))(_ => col("__tok0"))
+    vb.join(broadcast(vOffsets), Seq("__vb"))
       .withColumn("start_tok",
         tok0 + col("__off") + sum(col("n_toks")).over(withinV)
           - col("n_toks"))

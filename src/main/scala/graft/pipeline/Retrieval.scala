@@ -26,13 +26,12 @@ import graft.pipeline.{TextFunctions => TF}
   * in the top-k window break on `doc_id`.
   *
   * Scale shape (the 100-TB story):
-  *  - the inverted index is ONE token-count shuffle with map-side
-  *    combine (`postings`: tok → (doc, tf)); at scale it would be
-  *    written bucketed BY tok so query joins co-locate without a
-  *    further exchange;
+  *  - candidate hits are ONE doc_id-keyed token-count shuffle that
+  *    carries only query-term occurrences ([[prunedHits]]: tok →
+  *    (doc, tf)); no ranker shuffles the full-vocabulary postings;
   *  - query terms are a (|Q|·terms)-row table — broadcast onto the
-  *    postings scan, so candidate generation is a map-side semi-join
-  *    (no corpus-side exchange keyed by anything but tok);
+  *    exploded corpus scan, so candidate generation is a map-side
+  *    semi-join ahead of that shuffle;
   *  - per-term document frequencies are computed AFTER the query-term
   *    prune, so the df table is bounded by the query vocabulary, not
   *    the corpus vocabulary;
@@ -90,55 +89,26 @@ object Retrieval {
     */
   final case class Bm25Params(k1: Double = 1.2, b: Double = 0.75)
 
-  /** The fitted index: `postings(tok, doc_id, tf)`,
-    * `doclen(doc_id, dl)`, single-row `stats(nd, sdl)`.
+  /** The fitted corpus statistics: `doclen(doc_id, dl)` and the
+    * single-row `stats(nd, sdl)`. Term frequencies are never part of
+    * the index: every ranker reads them from a candidate-hit frame
+    * ([[prunedHits]], or a prune of [[positionalPostings]]).
     */
-  final case class Bm25Index(postings: DataFrame, doclen: DataFrame,
-      stats: DataFrame)
+  final case class Bm25Index(doclen: DataFrame, stats: DataFrame)
 
-  /** Build the inverted index from a document table. One shuffle for
-    * the postings (map-side combined token counts), one single-row
-    * aggregate for the corpus stats; document lengths are a
-    * zero-exchange projection over the same scan.
-    */
-  def bm25Index(docs: DataFrame, idCol: String, textCol: String): Bm25Index =
-    bm25IndexTokens(docs, idCol, TF.tokens(col(textCol)))
-
-  /** [[bm25Index]] over a PRE-TOKENIZED token-array expression — for
-    * callers that already hold the token array (chunked documents
-    * rebuilt from slices of a tokenized stream). `TF.tokens` is a
-    * whitespace split of whitespace-joined nonempty tokens, so
-    * `tokens(concat_ws(" ", toks)) == toks` exactly; skipping the
-    * round trip removes one string materialization and two
-    * re-tokenizations per row (guide §1.2 step 2: per-task work) with
-    * bit-identical postings/lengths.
-    */
-  def bm25IndexTokens(docs: DataFrame, idCol: String,
-      toks: Column): Bm25Index = {
-    val doclen = docs.select(col(idCol).as("doc_id"),
-      size(toks).cast("long").as("dl"))
-    val postings = docs
-      .select(col(idCol).as("doc_id"), explode(toks).as("tok"))
-      .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
-    val stats = doclen.agg(count(lit(1)).as("nd"), sum("dl").as("sdl"))
-    Bm25Index(postings, doclen, stats)
-  }
-
-  /** Simple BM25F weighted-field index (Robertson & Zaragoza 2009
-    * §6, the "simple BM25F" variant): term frequencies and document
-    * lengths are per-field values combined with INTEGER field weights
-    * — tf̃(t,d) = Σ_f w_f·tf_f(t,d), dl̃(d) = Σ_f w_f·dl_f(d) — after
-    * which the plain BM25 saturation/normalization applies unchanged,
-    * so the whole [[bm25ScoresFromHits]]/[[rankTopK]] stack serves
-    * fielded retrieval as-is. Integer weights keep every combined tf
-    * and dl an exact int64, preserving the oracle contract. Document
-    * frequency falls out correctly: the combined postings hold one
-    * row per (term, doc) that matches in ANY field.
+  /** Simple BM25F weighted-field corpus statistics (Robertson &
+    * Zaragoza 2009 §6, the "simple BM25F" variant): term frequencies
+    * and document lengths are per-field values combined with INTEGER
+    * field weights — tf̃(t,d) = Σ_f w_f·tf_f(t,d), dl̃(d) = Σ_f
+    * w_f·dl_f(d) — after which the plain BM25 saturation/normalization
+    * applies unchanged, so the whole [[bm25ScoresFromHits]]/[[rankTopK]]
+    * stack serves fielded retrieval as-is. Integer weights keep every
+    * combined tf and dl an exact int64, preserving the oracle
+    * contract. Plain BM25 is the one-field case `Seq(toks -> 1L)`.
     *
-    * Scale shape identical to [[bm25Index]] — one map-side-combined
-    * postings shuffle per field unioned into one combine (Spark
-    * merges the union into a single exchange), a zero-exchange
-    * weighted-length projection, and a single-row stats aggregate.
+    * Scale shape: a zero-exchange weighted-length projection and a
+    * single-row stats aggregate; the weighted tf̃ comes from
+    * [[prunedHits]] over the same `fields`.
     *
     * @param fields (tokenArrayColumn, weight) per field; weights must
     *               be positive integers
@@ -150,13 +120,8 @@ object Retrieval {
     val doclen = docs.select(col(idCol).as("doc_id"),
       fields.map { case (f, w) => size(f).cast("long") * lit(w) }
         .reduce(_ + _).as("dl"))
-    val postings = fields.map { case (f, w) =>
-        docs.select(col(idCol).as("doc_id"), explode(f).as("tok"),
-          lit(w).as("w"))
-      }.reduce(_.unionByName(_))
-      .groupBy("tok", "doc_id").agg(sum(col("w")).as("tf"))
     val stats = doclen.agg(count(lit(1)).as("nd"), sum("dl").as("sdl"))
-    Bm25Index(postings, doclen, stats)
+    Bm25Index(doclen, stats)
   }
 
   /** End-to-end BM25F search over weighted fields — [[bm25fIndex]]
@@ -170,8 +135,7 @@ object Retrieval {
     require(k > 0, "k must be positive")
     val index = bm25fIndex(docs, idCol, fields)
     val qTerms = queryTerms(queries, qidCol, qtextCol)
-    val hits = prunedHitsFields(docs, idCol, fields,
-      qTerms.select("tok").distinct())
+    val hits = prunedHits(docs, idCol, fields, qTerms)
     graft.core.Caching.withCached(hits)(
       rankTopK(bm25ScoresFromHits(index, hits, qTerms, p), k))
   }
@@ -186,25 +150,36 @@ object Retrieval {
         explode(TF.tokens(col(qtextCol))).as("tok"))
       .distinct()
 
-  /** The candidate-hit frame `postings ⋈ broadcast(query toks)` built
-    * WITHOUT the full-vocabulary postings shuffle: the query-term
-    * prune is a filter on the (tok, doc) GROUP KEY, so applying it to
-    * the exploded occurrences BEFORE the tf count is bit-identical to
-    * applying it to the finished postings — same (tok, doc_id, tf)
-    * rows, same df/cf rollups downstream (guide §2.3: filter before
-    * the exchange; §3.2: semi-join prefilter of the big side). The
-    * exchange carries only query-term occurrences — bounded by
-    * |query vocabulary| · df — instead of every token of the corpus;
-    * at web scale that is orders of magnitude fewer bytes for a
-    * ranking whose scores only ever read query-term postings.
-    * `qToks` must be the DISTINCT query-term set (one `tok` column).
+  /** The candidate-hit frame `postings ⋈ broadcast(query toks)` —
+    * (tok, doc_id, tf̃) with tf̃ = Σ_f w_f·tf_f over the weighted
+    * `fields` of [[bm25fIndex]] — built WITHOUT the full-vocabulary
+    * postings shuffle: the query-term prune is a filter on the
+    * (tok, doc) GROUP KEY, so applying it to the exploded occurrences
+    * BEFORE the weighted tf combine is bit-identical to applying it to
+    * the finished postings — same (tok, doc_id, tf) rows, same df/cf
+    * rollups downstream (guide §2.3: filter before the exchange; §3.2:
+    * semi-join prefilter of the big side). The exchange carries only
+    * query-term occurrences — bounded by |query vocabulary| · df —
+    * instead of every token of the corpus; at web scale that is
+    * orders of magnitude fewer bytes for a ranking whose scores only
+    * ever read query-term postings. Document frequency falls out
+    * correctly: one row per (term, doc) that matches in ANY field.
+    * With one field at weight 1, `sum(w)` is the plain tf count (the
+    * literal weight folds into the aggregate, so the exchange still
+    * carries only (tok, doc_id)).
+    *
+    * @param terms query terms (any frame with a `tok` column); the
+    *              prune broadcasts their distinct set
     */
   private[graft] def prunedHits(docs: DataFrame, idCol: String,
-      toks: Column, qToks: DataFrame): DataFrame =
-    docs.select(col(idCol).as("doc_id"), explode(toks).as("tok"))
-      .join(broadcast(qToks), Seq("tok"))
+      fields: Seq[(Column, Long)], terms: DataFrame): DataFrame =
+    fields.map { case (f, w) =>
+        docs.select(col(idCol).as("doc_id"), explode(f).as("tok"),
+          lit(w).as("w"))
+      }.reduce(_.unionByName(_))
+      .join(broadcast(terms.select("tok").distinct()), Seq("tok"))
       .repartition(col("doc_id"))
-      .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
+      .groupBy("tok", "doc_id").agg(sum(col("w")).as("tf"))
 
   /** ONE corpus tokenization serving several rankers: the FULL
     * positional postings — (tok, doc_id, tf, tf_pre) with `tf_pre`
@@ -223,8 +198,8 @@ object Retrieval {
     *  - when weighted fields PARTITION the token sequence at
     *    `prefixLen` (p132's prefix/body split), the combined
     *    tf̃ = w₁·tf_pre + w₂·(tf − tf_pre) equals
-    *    [[prunedHitsFields]]'s union-explode sum exactly — both
-    *    count every position once with its field's weight;
+    *    [[prunedHits]]'s union-explode sum exactly — both count
+    *    every position once with its field's weight;
     *  - feedback postings (per-(doc, tok) counts over a feedback doc
     *    set) are a semi-join prune of occ on doc_id.
     *
@@ -242,41 +217,6 @@ object Retrieval {
         sum(when(col("pos") < prefixLen, lit(1L)).otherwise(lit(0L)))
           .as("tf_pre"))
 
-  /** [[prunedHits]] for the weighted-field index: per-field exploded
-    * occurrences are pruned to the query vocabulary BEFORE the
-    * weighted tf combine — identical commutation argument, identical
-    * rows to `bm25fIndex(...).postings ⋈ query toks`.
-    */
-  private[graft] def prunedHitsFields(docs: DataFrame, idCol: String,
-      fields: Seq[(Column, Long)], qToks: DataFrame): DataFrame =
-    fields.map { case (f, w) =>
-        docs.select(col(idCol).as("doc_id"), explode(f).as("tok"),
-          lit(w).as("w"))
-      }.reduce(_.unionByName(_))
-      .join(broadcast(qToks), Seq("tok"))
-      .repartition(col("doc_id"))
-      .groupBy("tok", "doc_id").agg(sum(col("w")).as("tf"))
-
-  /** Per-(query, doc) BM25 scores in integer micro-points.
-    *
-    * The candidate join broadcasts the query-term table onto the
-    * postings; df is counted over the PRUNED postings (exact — the
-    * prune is by term, and df is a per-term count), so the df/idf
-    * side stays query-vocabulary-sized and broadcasts back onto the
-    * candidates.
-    */
-  def bm25Scores(index: Bm25Index, qTerms: DataFrame,
-      p: Bm25Params = Bm25Params()): DataFrame = {
-    val hits = index.postings.join(
-      broadcast(qTerms.select("tok").distinct()), Seq("tok"))
-    bm25ScoresFromHits(index, hits, qTerms, p)
-  }
-
-  /** The per-(term, doc) BM25 contribution in integer micro-points,
-    * over in-scope `tf, df, dl, nd, sdl` columns — ONE fixed
-    * operation order, shared by the batch scorer and the
-    * [[impactIndex]] so their floors agree bit-for-bit.
-    */
   /** The pre-floor double of [[contribMicro]] (idf · norm · 10⁶) —
     * exposed so the guard-band audit (GuardBandSpec) can measure how
     * far every produced value sits from its floor boundary: Java and
@@ -295,22 +235,25 @@ object Retrieval {
     idf * norm * lit(1e6)
   }
 
+  /** The per-(term, doc) BM25 contribution in integer micro-points,
+    * over in-scope `tf, df, dl, nd, sdl` columns — ONE fixed
+    * operation order, shared by the batch scorer and the
+    * [[impactIndex]] so their floors agree bit-for-bit.
+    */
   private def contribMicro(p: Bm25Params): Column =
     floor(contribDouble(p)).cast("long")
 
-  /** [[bm25Scores]] over a prepared candidate-hit frame. `hits` feeds
-    * BOTH the df rollup and the scoring join, so eager callers
-    * bracket it with [[graft.core.Caching.withCached]] — otherwise
-    * the postings shuffle runs twice.
-    *
-    * df is counted over the PRUNED postings — exact, because the
-    * prune is per-term and df is a per-term count — so the idf side
-    * stays query-vocabulary-sized.
+  /** The floored per-(tok, doc) contribution `(tok, doc_id,
+    * contrib_micro)` of a hit frame `(tok, doc_id, tf)` — the one
+    * chain behind [[bm25ScoresFromHits]], the PMI-weighted ranker and
+    * [[impactIndex]]; each adds its own query join and rollup. df is
+    * counted over `hits` itself: exact over a query-pruned frame,
+    * because the prune is per-term and df is a per-term count, so the
+    * idf side stays query-vocabulary-sized.
     */
-  private[graft] def bm25ScoresFromHits(index: Bm25Index,
-      hits: DataFrame, qTerms: DataFrame, p: Bm25Params): DataFrame = {
-    val df = hits.groupBy("tok")
-      .agg(count(lit(1)).as("df"))
+  private def contributions(index: Bm25Index, hits: DataFrame,
+      p: Bm25Params): DataFrame = {
+    val df = hits.groupBy("tok").agg(count(lit(1)).as("df"))
     // Join order is load-bearing (guide §2.4, §3.3): doclen attaches
     // to the (tok, doc)-sized hits BEFORE the query join multiplies
     // rows by matching queries, so the big corpus-keyed join never
@@ -335,12 +278,23 @@ object Retrieval {
       .join(index.doclen, Seq("doc_id"))
       .join(broadcast(df), Seq("tok"))
       .crossJoin(broadcast(index.stats))
-      .withColumn("contrib_micro", contribMicro(p))
+      .select(col("tok"), col("doc_id"),
+        contribMicro(p).as("contrib_micro"))
+  }
+
+  /** Per-(query, doc) BM25 scores in integer micro-points over a
+    * prepared candidate-hit frame ([[prunedHits]]). `hits` feeds BOTH
+    * the df rollup and the scoring join, so eager callers bracket it
+    * with [[graft.core.Caching.withCached]] — otherwise the hit
+    * shuffle runs twice.
+    */
+  private[graft] def bm25ScoresFromHits(index: Bm25Index,
+      hits: DataFrame, qTerms: DataFrame, p: Bm25Params): DataFrame =
+    contributions(index, hits, p)
       .join(broadcast(qTerms), Seq("tok"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
         sum(col("contrib_micro")).as("score_micro"))
-  }
 
   /** The impact-scored inverted index: every (tok, doc_id) with its
     * FULL precomputed BM25 contribution — the impact-ordered-index
@@ -351,18 +305,17 @@ object Retrieval {
     * streaming search twin joins each micro-batch against — corpus
     * work happens ONCE at index build (the caller persists the
     * result; see [[graft.streaming.StreamingJobs.bm25Search]]), never
-    * per batch.
+    * per batch. The only consumer of every token, so it builds the
+    * full-vocabulary postings itself; its df side is therefore
+    * vocabulary-sized rather than query-vocabulary-sized.
     */
   def impactIndex(docs: DataFrame, idCol: String, textCol: String,
       p: Bm25Params = Bm25Params()): DataFrame = {
-    val index = bm25Index(docs, idCol, textCol)
-    val df = index.postings.groupBy("tok").agg(count(lit(1)).as("df"))
-    index.postings
-      .join(df, Seq("tok"))
-      .join(index.doclen, Seq("doc_id"))
-      .crossJoin(broadcast(index.stats))
-      .select(col("tok"), col("doc_id"),
-        contribMicro(p).as("contrib_micro"))
+    val toks = TF.tokens(col(textCol))
+    val postings = docs
+      .select(col(idCol).as("doc_id"), explode(toks).as("tok"))
+      .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
+    contributions(bm25fIndex(docs, idCol, Seq(toks -> 1L)), postings, p)
   }
 
   /** Per-query top-k ranking over a score frame; the window shares
@@ -401,13 +354,12 @@ object Retrieval {
     require(fbDocs > 0 && fbTerms > 0 && k > 0,
       "fbDocs, fbTerms, k must be positive")
     val toks = TF.tokens(col(textCol))
-    val index = bm25IndexTokens(docs, idCol, toks)
+    val index = bm25fIndex(docs, idCol, Seq(toks -> 1L))
     val qT = queryTerms(queries, qidCol, qtextCol)
-    val hits1 = prunedHits(docs, idCol, toks,
-      qT.select("tok").distinct())
+    val hits1 = prunedHits(docs, idCol, Seq(toks -> 1L), qT)
     val pass1 = graft.core.Caching.withCached(hits1)(
       rankTopK(bm25ScoresFromHits(index, hits1, qT, p), fbDocs))
-    prfFromPass1(docs, idCol, toks, qT,
+    prfFromPass1(docs, idCol, toks, index, qT,
       pass1.select(col("query_id"), col("doc_id")), fbTerms, k, p)
   }
 
@@ -426,17 +378,15 @@ object Retrieval {
     * restricting the postings after), corpus work ∝ feedback set.
     */
   private[graft] def prfFromPass1(docs: DataFrame, idCol: String,
-      toks: Column, qT: DataFrame, pass1: DataFrame, fbTerms: Int,
-      k: Int, p: Bm25Params): DataFrame = {
-    val index = bm25IndexTokens(docs, idCol, toks)
+      toks: Column, index: Bm25Index, qT: DataFrame, pass1: DataFrame,
+      fbTerms: Int, k: Int, p: Bm25Params): DataFrame = {
     val fbPostings = docs
       .join(broadcast(pass1.select(col("doc_id").as("__fb_doc"))),
         col(idCol) === col("__fb_doc"), "left_semi")
       .select(col(idCol).as("doc_id"), explode(toks).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
     val qT2 = prfExpandedTerms(fbPostings, qT, pass1, fbTerms)
-    val hits2 = prunedHits(docs, idCol, toks,
-      qT2.select("tok").distinct())
+    val hits2 = prunedHits(docs, idCol, Seq(toks -> 1L), qT2)
     graft.core.Caching.withCached(hits2)(
       rankTopK(bm25ScoresFromHits(index, hits2, qT2, p), k))
   }
@@ -485,6 +435,21 @@ object Retrieval {
     rankTopK(bm25ScoresFromHits(index, hits2, qT2, p), k)
   }
 
+  /** The three pre-floor doubles of [[qlTopK]] (each × 10⁶), keyed by
+    * component — exposed for the guard-band audit (GuardBandSpec):
+    * `aq_term` over (tok → cf, sdl), `delta` over (tf, cf, sdl),
+    * `len` over (dl).
+    */
+  private[graft] def qlFloorDoubles(mu: Double): Map[String, Column] = {
+    val muP = lit(mu) *
+      (col("cf").cast("double") / col("sdl").cast("double"))
+    Map(
+      "aq_term" -> (log(muP) * lit(1e6)),
+      "delta" -> (log((col("tf").cast("double") + muP) / muP) *
+        lit(1e6)),
+      "len" -> (log(col("dl").cast("double") + lit(mu)) * lit(1e6)))
+  }
+
   /** Dirichlet-smoothed query-likelihood ranking (Zhai & Lafferty
     * 2001) — the language-modeling member of the classic ranking pair
     * next to BM25: score(q, d) = Σ_t ln((tf + μ·P(t|C)) / (dl + μ)),
@@ -503,30 +468,14 @@ object Retrieval {
     * query-vocabulary-sized broadcast sides, one query-keyed ranking
     * exchange; the candidate-hit frame is cache-bracketed.
     */
-  /** The three pre-floor doubles of [[qlTopK]] (each × 10⁶), keyed by
-    * component — exposed for the guard-band audit (GuardBandSpec):
-    * `aq_term` over (tok → cf, sdl), `delta` over (tf, cf, sdl),
-    * `len` over (dl).
-    */
-  private[graft] def qlFloorDoubles(mu: Double): Map[String, Column] = {
-    val muP = lit(mu) *
-      (col("cf").cast("double") / col("sdl").cast("double"))
-    Map(
-      "aq_term" -> (log(muP) * lit(1e6)),
-      "delta" -> (log((col("tf").cast("double") + muP) / muP) *
-        lit(1e6)),
-      "len" -> (log(col("dl").cast("double") + lit(mu)) * lit(1e6)))
-  }
-
   def qlTopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String, k: Int,
       mu: Double = 100.0): DataFrame = {
     require(k > 0, "k must be positive")
-    val toks = TF.tokens(col(textCol))
-    val index = bm25IndexTokens(docs, idCol, toks)
+    val fields = Seq(TF.tokens(col(textCol)) -> 1L)
+    val index = bm25fIndex(docs, idCol, fields)
     val qTerms = queryTerms(queries, qidCol, qtextCol)
-    val hits = prunedHits(docs, idCol, toks,
-      qTerms.select("tok").distinct())
+    val hits = prunedHits(docs, idCol, fields, qTerms)
     graft.core.Caching.withCached(hits)(
       qlRankFromHits(index, hits, qTerms, k, mu))
   }
@@ -603,25 +552,6 @@ object Retrieval {
         col("rrf_micro"))
   }
 
-  /** Phrase-boosted re-ranking: BM25 candidates post-checked for
-    * EXACT phrase containment, phrase hits ranked first (the standard
-    * phrase-query upgrade of a bag-of-words retriever — Lucene's
-    * PhraseQuery semantics, realized positionally through gram
-    * hashing rather than position lists). A document "contains the
-    * phrase" iff the full query string appears as a contiguous token
-    * 4-gram, checked by joining the candidates' 4-gram 60-bit hashes
-    * (the [[TextFunctions.shingleHashes]] convention the dedup stack
-    * already uses — `Curation.exactSubstringSpans` is the positional
-    * sibling) against the query-phrase hash. Queries longer or
-    * shorter than 4 tokens simply never match a 4-gram — identical
-    * semantics in both engines.
-    *
-    * Scale shape: the corpus-scale work is all inside [[bm25TopK]].
-    * The phrase check explodes grams ONLY for candidate documents — a
-    * semi-join prune to ≤|Q|·k docs — and matches on an 8-byte hash
-    * key; the final re-rank window shares the query-keyed exchange
-    * the top-k already produced.
-    */
   /** Exact-phrase containment feature over a candidate set: one row
     * per (query, doc) whose document contains the query text as a
     * verbatim 4-token phrase (`phrase_hit = 1`) — the containment
@@ -649,6 +579,25 @@ object Retrieval {
       .withColumn("phrase_hit", lit(1L))
   }
 
+  /** Phrase-boosted re-ranking: BM25 candidates post-checked for
+    * EXACT phrase containment, phrase hits ranked first (the standard
+    * phrase-query upgrade of a bag-of-words retriever — Lucene's
+    * PhraseQuery semantics, realized positionally through gram
+    * hashing rather than position lists). A document "contains the
+    * phrase" iff the full query string appears as a contiguous token
+    * 4-gram, checked by joining the candidates' 4-gram 60-bit hashes
+    * (the [[TextFunctions.shingleHashes]] convention the dedup stack
+    * already uses — `Curation.exactSubstringSpans` is the positional
+    * sibling) against the query-phrase hash. Queries longer or
+    * shorter than 4 tokens simply never match a 4-gram — identical
+    * semantics in both engines.
+    *
+    * Scale shape: the corpus-scale work is all inside [[bm25TopK]].
+    * The phrase check explodes grams ONLY for candidate documents — a
+    * semi-join prune to ≤|Q|·k docs — and matches on an 8-byte hash
+    * key; the final re-rank window shares the query-keyed exchange
+    * the top-k already produced.
+    */
   def phraseRerank(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String, k: Int,
       p: Bm25Params = Bm25Params()): DataFrame = {
@@ -669,23 +618,6 @@ object Retrieval {
         col("phrase_hit"), col("score_micro"))
   }
 
-  /** Proximity-boosted re-ranking — the term-proximity factor classic
-    * IR adds on top of bag-of-words scores (Rasolofo & Savoy 2003
-    * pairwise form): documents whose DISTINCT matched query terms
-    * occur close together are boosted by `10⁶ div (minDist + k₀)`,
-    * where minDist is the smallest positional distance between
-    * occurrences of two different query terms (a verbatim-adjacent
-    * pair gives the maximal boost; single-term matches get 0). The
-    * boost and the combined score are exact integers, so ranking
-    * replays in any engine; ties break on the doc id.
-    *
-    * Scale shape: the corpus-scale work is all inside the base
-    * ranking. The pair scan runs ONLY inside (query, candidate-doc)
-    * groups — match positions per candidate are query-length-bounded,
-    * so the self-join is quadratic only in per-doc match count, never
-    * in corpus or document length; the re-rank window shares the
-    * query-keyed exchange.
-    */
   /** Minimum distinct-term pair distance over a candidate set — the
     * positional feature [[proximityRerank]] boosts on, exposed so
     * feature consumers (the p173 learning-to-rank head) share the
@@ -712,6 +644,23 @@ object Retrieval {
       .agg(min(abs(col("pa") - col("pb"))).as("min_pair_dist"))
   }
 
+  /** Proximity-boosted re-ranking — the term-proximity factor classic
+    * IR adds on top of bag-of-words scores (Rasolofo & Savoy 2003
+    * pairwise form): documents whose DISTINCT matched query terms
+    * occur close together are boosted by `10⁶ div (minDist + k₀)`,
+    * where minDist is the smallest positional distance between
+    * occurrences of two different query terms (a verbatim-adjacent
+    * pair gives the maximal boost; single-term matches get 0). The
+    * boost and the combined score are exact integers, so ranking
+    * replays in any engine; ties break on the doc id.
+    *
+    * Scale shape: the corpus-scale work is all inside the base
+    * ranking. The pair scan runs ONLY inside (query, candidate-doc)
+    * groups — match positions per candidate are query-length-bounded,
+    * so the self-join is quadratic only in per-doc match count, never
+    * in corpus or document length; the re-rank window shares the
+    * query-keyed exchange.
+    */
   def proximityRerank(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String, k: Int,
       k0: Int = 4, p: Bm25Params = Bm25Params()): DataFrame = {
@@ -1029,34 +978,17 @@ object Retrieval {
         expr("dcg_sum div n_queries").as("ndcg_micro"))
   }
 
-  /** End-to-end BM25 search: index the corpus, score every query
-    * against it, keep the top `k` documents per query by
-    * (score DESC, doc_id). The candidate-hit frame is cache-bracketed
-    * (it feeds the df rollup and the scoring join), so the postings
-    * shuffle runs ONCE.
+  /** End-to-end BM25 search: score every query against the corpus
+    * and keep the top `k` documents per query by (score DESC,
+    * doc_id) — [[bm25fTopK]] over the one field `text` at weight 1.
+    * The candidate-hit frame is cache-bracketed (it feeds the df
+    * rollup and the scoring join), so the hit shuffle runs ONCE.
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String, k: Int,
       p: Bm25Params = Bm25Params()): DataFrame =
-    bm25TopKTokens(docs, idCol, TF.tokens(col(textCol)), queries,
+    bm25fTopK(docs, idCol, Seq(TF.tokens(col(textCol)) -> 1L), queries,
       qidCol, qtextCol, k, p)
-
-  /** [[bm25TopK]] over a token-array expression, with the candidate
-    * hits built by [[prunedHits]] — the full-vocabulary postings
-    * shuffle never runs; doclen/stats come from the (lazy) index
-    * whose postings are never evaluated.
-    */
-  def bm25TopKTokens(docs: DataFrame, idCol: String, toks: Column,
-      queries: DataFrame, qidCol: String, qtextCol: String, k: Int,
-      p: Bm25Params = Bm25Params()): DataFrame = {
-    require(k > 0, "k must be positive")
-    val index = bm25IndexTokens(docs, idCol, toks)
-    val qTerms = queryTerms(queries, qidCol, qtextCol)
-    val hits = prunedHits(docs, idCol, toks,
-      qTerms.select("tok").distinct())
-    graft.core.Caching.withCached(hits)(
-      rankTopK(bm25ScoresFromHits(index, hits, qTerms, p), k))
-  }
 
   /** Full-vs-deduped ranking scorecards off ONE postings build (p156,
     * p180's retrieval section): the deduped index is the FULL index
@@ -1072,13 +1004,11 @@ object Retrieval {
       textCol: String, queries: DataFrame, qidCol: String,
       qtextCol: String, dropped: DataFrame, k: Int,
       p: Bm25Params = Bm25Params()): DataFrame = {
-    val toks = TF.tokens(col(textCol))
-    val index = bm25IndexTokens(docs, idCol, toks)
+    val fields = Seq(TF.tokens(col(textCol)) -> 1L)
+    val index = bm25fIndex(docs, idCol, fields)
     val d = broadcast(dropped.select(col("doc_id")))
     val dedupDoclen = index.doclen.join(d, Seq("doc_id"), "left_anti")
-    val dedup = Bm25Index(
-      index.postings.join(d, Seq("doc_id"), "left_anti"),
-      dedupDoclen,
+    val dedup = Bm25Index(dedupDoclen,
       dedupDoclen.agg(count(lit(1)).as("nd"), sum("dl").as("sdl")))
     val qT = queryTerms(queries, qidCol, qtextCol)
     // ONE pruned candidate-hit frame serves both corpora: the deduped
@@ -1086,8 +1016,7 @@ object Retrieval {
     // to pruning the deduped postings — both operations are per-row
     // filters on different keys, so they commute); the shared cache
     // now holds query-term hits, not the full-vocabulary postings
-    val hits = prunedHits(docs, idCol, toks,
-      qT.select("tok").distinct())
+    val hits = prunedHits(docs, idCol, fields, qT)
     val dedupHits = hits.join(d, Seq("doc_id"), "left_anti")
     val cards = graft.core.Caching.withCachedMulti(hits)(Seq(
       rankTopK(bm25ScoresFromHits(index, hits, qT, p), k),
@@ -1119,11 +1048,10 @@ object Retrieval {
       positives: DataFrame, k: Int,
       p: Bm25Params = Bm25Params()): DataFrame = {
     require(k > 0, "k must be positive")
-    val toks = TF.tokens(col(textCol))
-    val index = bm25IndexTokens(docs, idCol, toks)
+    val fields = Seq(TF.tokens(col(textCol)) -> 1L)
+    val index = bm25fIndex(docs, idCol, fields)
     val qTerms = queryTerms(queries, qidCol, qtextCol)
-    val hits = prunedHits(docs, idCol, toks,
-      qTerms.select("tok").distinct())
+    val hits = prunedHits(docs, idCol, fields, qTerms)
     graft.core.Caching.withCached(hits)(
       rankTopK(
         bm25ScoresFromHits(index, hits, qTerms, p)
@@ -1160,12 +1088,11 @@ object Retrieval {
       qtextCol: String, collocations: DataFrame, k: Int,
       p: Bm25Params = Bm25Params()): Seq[DataFrame] = {
     require(k > 0, "k must be positive")
-    val toks = TF.tokens(col(textCol))
-    val index = bm25IndexTokens(docs, idCol, toks)
+    val fields = Seq(TF.tokens(col(textCol)) -> 1L)
+    val index = bm25fIndex(docs, idCol, fields)
     val qT = queryTerms(queries, qidCol, qtextCol)
     val wTerms = pmiExpandedTerms(qT, collocations)
-    val hitsWide = prunedHits(docs, idCol, toks,
-      wTerms.select("tok").distinct())
+    val hitsWide = prunedHits(docs, idCol, fields, wTerms)
     graft.core.Caching.withCachedMulti(hitsWide)(Seq(
       rankTopK(bm25ScoresFromHits(index,
         hitsWide.join(broadcast(qT.select("tok").distinct()), Seq("tok")),
@@ -1194,24 +1121,16 @@ object Retrieval {
 
   /** The expanded ranker's weighted scoring body —
     * [[bm25ScoresFromHits]] with the per-term integer weight
-    * multiplied AFTER the micro floor.
+    * multiplied AFTER the micro floor: the query-dependent weight
+    * multiplies the floored integer, exactly as it did when the whole
+    * expression sat after the query join.
     */
   private def pmiWeightedScores(index: Bm25Index, hits: DataFrame,
-      wTerms: DataFrame, p: Bm25Params): DataFrame = {
-    val df = hits.groupBy("tok").agg(count(lit(1)).as("df"))
-    // doclen AND the floored per-(tok, doc) contribution before the
-    // query join — see [[bm25ScoresFromHits]]; the query-dependent
-    // weight multiplies the floored integer, exactly as it did when
-    // the whole expression sat after the join
-    hits
-      .join(index.doclen, Seq("doc_id"))
-      .join(broadcast(df), Seq("tok"))
-      .crossJoin(broadcast(index.stats))
-      .withColumn("c0_micro", contribMicro(p))
+      wTerms: DataFrame, p: Bm25Params): DataFrame =
+    contributions(index, hits, p)
       .join(broadcast(wTerms), Seq("tok"))
-      .withColumn("contrib_micro", col("c0_micro") * col("w"))
+      .withColumn("contrib_micro", col("contrib_micro") * col("w"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
         sum(col("contrib_micro")).as("score_micro"))
-  }
 }

@@ -2003,8 +2003,9 @@ private[queries] object PipelineOracles {
     * every budget-strided document's first `qTerms` tokens
     * ([[oQStride]] — absolute |Q| at any SF), df over the
     * query-pruned postings, and the exact micro-floored per-term
-    * contributions of [[Retrieval.bm25Scores]] — same operation order
-    * as the Spark expressions, so the floors agree bit-for-bit.
+    * contributions of [[Retrieval.bm25ScoresFromHits]] — same
+    * operation order as the Spark expressions, so the floors agree
+    * bit-for-bit.
     */
   def oBm25(k1: Double, b: Double, qTerms: Int,
       topK: Int): String =
@@ -2603,7 +2604,8 @@ private[queries] object PipelineOracles {
     * weighted-field postings and lengths (title = toks[1:8] at weight
     * 3, body = toks[9:] at weight 1), then the shared BM25 scoring
     * formula (k1 = 1.2, b = 0.75) over the combined exact-integer
-    * tf/dl — mirroring [[Retrieval.bm25fIndex]].
+    * tf/dl — mirroring [[Retrieval.bm25fIndex]] and
+    * [[Retrieval.prunedHits]].
     */
   def oBm25f: String = {
     val avgdl = "(CAST(st.sdl AS DOUBLE) / CAST(st.nd AS DOUBLE))"

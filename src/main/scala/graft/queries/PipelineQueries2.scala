@@ -291,12 +291,12 @@ object PipelineQueries2 {
     * arithmetic, fewer rebuilds. Shared by the p130 scorecard and the
     * p136 significance test.
     */
-  private[queries] def sharedRankings(s: SparkSession,
+  private[graft] def sharedRankings(s: SparkSession,
       dir: String): Seq[(String, DataFrame)] = {
     val docs = t(s, dir, "documents")
     val docToks = TF.tokens(col("text"))
     val queries = Retrieval.plantedQueries(docs, "doc_id", "text")
-    val index = Retrieval.bm25IndexTokens(docs, "doc_id", docToks)
+    val index = Retrieval.bm25fIndex(docs, "doc_id", Seq(docToks -> 1L))
     val qT = Retrieval.queryTerms(queries, "query_id", "qtext")
     val qVocab = qT.select("tok").distinct()
     // ONE corpus tokenization for the whole card (r16): the five
@@ -323,9 +323,9 @@ object PipelineQueries2 {
       fbTerms = 5, k = 10, Retrieval.Bm25Params())
     // bm25f: p132's weighted fields partition the token sequence at
     // position 8, so tf̃ = 3·tf_pre + (tf − tf_pre) over occ, and the
-    // weighted doclen/stats come from [[Retrieval.bm25fIndex]] (its
-    // postings plan is never executed). Same hits rows, same tf̃,
-    // same doclen floors — values identical to [[p132Bm25f]]'s.
+    // weighted doclen/stats come from [[Retrieval.bm25fIndex]]. Same
+    // hits rows, same tf̃, same doclen floors — values identical to
+    // [[p132Bm25f]]'s.
     val fIndex = Retrieval.bm25fIndex(docs, "doc_id",
       Seq((slice(docToks, 1, 8), 3L),
         (slice(docToks, lit(9), size(docToks)), 1L)))
@@ -645,10 +645,9 @@ object PipelineQueries2 {
     * The base manifest is MATERIALIZED (localCheckpoint) before the
     * append references it — in production an append reads a
     * PERSISTED manifest, never a live recomputation, and without the
-    * bracket the base build's plan is inlined three times (the
-    * resumed per-domain counters, the token mass, and the union),
-    * which is where p172's 198-shuffle lineage came from (round-14
-    * review nit #3). Output rows are byte-identical; the plan
+    * bracket the base build's plan is inlined into both the
+    * resumed-state aggregate and the union, which is where p172's
+    * 198-shuffle lineage came from (round-14 review nit #3). Output rows are byte-identical; the plan
     * fingerprint now measures what the append actually costs on top
     * of a stored manifest — the O(Δ) claim.
     */
@@ -1234,8 +1233,8 @@ object PipelineQueries2 {
     // -> top-10 docs): overlapping windows mean one document can
     // occupy several top slots, and a 10-chunk pool can crowd the
     // relevant document out entirely before the MaxP rollup dedupes
-    val chunkRank = Retrieval.bm25TopKTokens(chunks, "chunk_id",
-      col("chunk_toks"), queries, "query_id", "qtext", k = 30)
+    val chunkRank = Retrieval.bm25fTopK(chunks, "chunk_id",
+      Seq(col("chunk_toks") -> 1L), queries, "query_id", "qtext", k = 30)
     val maxp = chunkRank
       .select(col("query_id"),
         call_function("div", col("doc_id"), lit(10000L)).as("doc_id"),

@@ -50,10 +50,10 @@ class GuardBandSpec extends SparkSpec {
   test("bm25 and ql log floors sit far from their boundaries") {
     val docs = Tables.read(spark, sf001, "documents")
     val queries = Retrieval.plantedQueries(docs, "doc_id", "text")
-    val idx = Retrieval.bm25Index(docs, "doc_id", "text")
+    val fields = Seq(TF.tokens(col("text")) -> 1L)
+    val idx = Retrieval.bm25fIndex(docs, "doc_id", fields)
     val qT = Retrieval.queryTerms(queries, "query_id", "qtext")
-    val hits = idx.postings
-      .join(qT.select("tok").distinct(), Seq("tok"))
+    val hits = Retrieval.prunedHits(docs, "doc_id", fields, qT)
     val dfc = hits.groupBy("tok").agg(count(lit(1)).as("df"))
     val cand = hits.join(dfc, Seq("tok"))
       .join(idx.doclen, Seq("doc_id")).crossJoin(idx.stats)
@@ -85,10 +85,10 @@ class GuardBandSpec extends SparkSpec {
         pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
       .filter(col("keep") === 0).select(col("node").as("doc_id"))
     val deduped = docs.join(dropped, Seq("doc_id"), "left_anti")
-    val idx = Retrieval.bm25Index(deduped, "doc_id", "text")
+    val fields = Seq(TF.tokens(col("text")) -> 1L)
+    val idx = Retrieval.bm25fIndex(deduped, "doc_id", fields)
     val qT = Retrieval.queryTerms(queries, "query_id", "qtext")
-    val hits = idx.postings
-      .join(qT.select("tok").distinct(), Seq("tok"))
+    val hits = Retrieval.prunedHits(deduped, "doc_id", fields, qT)
     val dfc = hits.groupBy("tok").agg(count(lit(1)).as("df"))
     val cand = hits.join(dfc, Seq("tok"))
       .join(idx.doclen, Seq("doc_id")).crossJoin(idx.stats)
@@ -137,11 +137,12 @@ class GuardBandSpec extends SparkSpec {
         "text", chunkToks = 32, strideToks = 24)
       .select((col("doc_id") * 10000L + col("chunk_seq")).as("cid"),
         col("chunk_text"))
-    for ((tag, idx) <- Seq(
-        "chunk" -> Retrieval.bm25Index(chunks, "cid", "chunk_text"),
-        "paddedDoc" -> Retrieval.bm25Index(docs, "doc_id", "text"))) {
-      val hits = idx.postings
-        .join(qT.select("tok").distinct(), Seq("tok"))
+    for ((tag, corpus, id, text) <- Seq(
+        ("chunk", chunks, "cid", "chunk_text"),
+        ("paddedDoc", docs, "doc_id", "text"))) {
+      val fields = Seq(TF.tokens(col(text)) -> 1L)
+      val idx = Retrieval.bm25fIndex(corpus, id, fields)
+      val hits = Retrieval.prunedHits(corpus, id, fields, qT)
       val dfc = hits.groupBy("tok").agg(count(lit(1)).as("df"))
       val cand = hits.join(dfc, Seq("tok"))
         .join(idx.doclen, Seq("doc_id")).crossJoin(idx.stats)

@@ -586,6 +586,7 @@ class PlansSpec extends SparkSpec {
     ps.foreach(p => assert(nonStrideBnlj(p) <= 1, p))
     // per-query ranking limits inside the window exchange
     assert(ps.exists(_.contains("WindowGroupLimit")), all)
+    assertPrunedBeforeShuffle(ps)
   }
 
   test("bm25f weighted-field index keeps the p112 plan shape (p132)") {
@@ -597,6 +598,22 @@ class PlansSpec extends SparkSpec {
     ps.foreach(p => assert(!p.contains("CartesianProduct"), p))
     ps.foreach(p => assert(nonStrideBnlj(p) <= 1, p))
     assert(ps.exists(_.contains("WindowGroupLimit")), all)
+    assertPrunedBeforeShuffle(ps)
+  }
+
+  /** The candidate hits are pruned to the query vocabulary BEFORE
+    * they shuffle: no executed exchange is keyed by (tok, doc_id) —
+    * the full-vocabulary postings shuffle — and the corpus-side
+    * exchange is the doc_id-keyed repartition.
+    */
+  private def assertPrunedBeforeShuffle(ps: Seq[String]): Unit = {
+    val keys = ps.flatMap(_.linesIterator)
+      .flatMap("""Arguments: hashpartitioning\((.*), \d+\)""".r
+        .findFirstMatchIn(_))
+      .map(_.group(1).split(", ").map(_.takeWhile(_ != '#')).toSet)
+    assert(!keys.contains(Set("tok", "doc_id")),
+      s"a (tok, doc_id)-keyed exchange ran: $keys")
+    assert(keys.contains(Set("doc_id")), s"no doc_id-keyed exchange: $keys")
   }
 
   /** BNLJ detail blocks that are NOT a plantedSample stride filter

@@ -63,6 +63,36 @@ class RetrievalSpec extends SparkSpec {
     }
   }
 
+  test("p130's shared rankings equal the standalone rankers row for row") {
+    // sharedRankings derives bm25, bm25f, ql and prf from ONE
+    // positional-postings frame (tf_pre arithmetic, broadcast
+    // prunes); each standalone ranker tokenizes and prunes the corpus
+    // itself — the plain formulation the fast path must reproduce
+    val docs = graft.core.Tables.read(spark, sf0001, "documents")
+    val queries = Retrieval.plantedQueries(docs, "doc_id", "text")
+    val toks = graft.pipeline.TextFunctions.tokens(col("text"))
+    val plain = Map(
+      "bm25" -> Retrieval.bm25TopK(docs, "doc_id", "text", queries,
+        "query_id", "qtext", k = 10),
+      "bm25f" -> Retrieval.bm25fTopK(docs, "doc_id",
+        Seq((slice(toks, 1, 8), 3L), (slice(toks, lit(9), size(toks)), 1L)),
+        queries, "query_id", "qtext", k = 10),
+      "ql" -> Retrieval.qlTopK(docs, "doc_id", "text", queries,
+        "query_id", "qtext", k = 10, mu = 100.0),
+      "prf" -> Retrieval.bm25Prf(docs, "doc_id", "text", queries,
+        "query_id", "qtext", fbDocs = 3, fbTerms = 5, k = 10))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "doc_id", "score_micro")
+        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
+    val shared = graft.queries.PipelineQueries2
+      .sharedRankings(spark, sf0001).toMap
+    for ((m, df) <- plain) {
+      val want = rows(df)
+      assert(want.nonEmpty, s"$m: standalone ranking is empty")
+      assert(rows(shared(m)) == want, s"$m: shared ranking differs")
+    }
+  }
+
   test("pmi expansion: empty table is rank-invariant; a collocate retrieves new docs") {
     val docs = Seq(
       (1L, "apple banana"),

@@ -1228,9 +1228,11 @@ class StreamingSpec extends SparkSpec {
         .map(r => r._2 -> r._5).toMap
       assert(hits == Map(100L -> 1L, 101L -> 0L), streamed.toString)
       // scores equal the batch scorer over the same 2-token prefix
-      val batch = R.bm25Scores(R.bm25Index(ref, "doc_id", "text"),
-          R.queryTerms(Seq((1L, "apple banana"))
-            .toDF("query_id", "qtext"), "query_id", "qtext"))
+      val fields = Seq(TF.tokens(col("text")) -> 1L)
+      val qT = R.queryTerms(Seq((1L, "apple banana"))
+        .toDF("query_id", "qtext"), "query_id", "qtext")
+      val batch = R.bm25ScoresFromHits(R.bm25fIndex(ref, "doc_id", fields),
+          R.prunedHits(ref, "doc_id", fields, qT), qT, R.Bm25Params())
         .select("query_id", "doc_id", "n_terms", "score_micro")
         .as[(Long, Long, Long, Long)].collect().toSeq.sorted
       assert(streamed.filter(_._1 == 1L).map(r =>
@@ -1266,9 +1268,12 @@ class StreamingSpec extends SparkSpec {
         .select("query_id", "doc_id", "n_terms", "score_micro")
         .as[(Long, Long, Long, Long)].collect().toSeq.sorted
       // batch twin through the OTHER path: df-pruned scoring
-      val batch = R.bm25Scores(R.bm25Index(ref, "doc_id", "text"),
-          R.queryTerms(rows.toDF("query_id", "text", "ts"),
-            "query_id", "text"))
+      val fields =
+        Seq(graft.pipeline.TextFunctions.tokens(col("text")) -> 1L)
+      val qT = R.queryTerms(rows.toDF("query_id", "text", "ts"),
+        "query_id", "text")
+      val batch = R.bm25ScoresFromHits(R.bm25fIndex(ref, "doc_id", fields),
+          R.prunedHits(ref, "doc_id", fields, qT), qT, R.Bm25Params())
         .select("query_id", "doc_id", "n_terms", "score_micro")
         .as[(Long, Long, Long, Long)].collect().toSeq.sorted
       assert(streamed == batch, s"\n$streamed\nvs\n$batch")
