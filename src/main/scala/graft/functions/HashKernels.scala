@@ -3,11 +3,13 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernels for the portable-hash dedup operators.
@@ -28,12 +30,147 @@ object HashKernels {
   /** hash60: first 8 md5 bytes big-endian, dropped low nibble. */
   def hash60(md: MessageDigest, s: UTF8String): Long = {
     md.reset()
-    val d = md.digest(s.getBytes)
+    top60(md.digest(s.getBytes))
+  }
+
+  private def top60(d: Array[Byte]): Long = {
     var h = 0L
     var i = 0
     while (i < 8) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
     h >>> 4
   }
+
+  private val md5s: ThreadLocal[MessageDigest] =
+    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
+
+  /** hash60 of raw bytes — `conv(substring(md5(b), 1, 15), 16, 10)`
+    * as a long — on this thread's digest.
+    */
+  def hash60(bytes: Array[Byte]): Long = {
+    val md = md5s.get()
+    md.reset()
+    top60(md.digest(bytes))
+  }
+
+  /** `hash60(x) % m` for every element of a string array; a null
+    * element stays null.
+    */
+  def hash60Mod(arr: ArrayData, m: Long): ArrayData = {
+    val n = arr.numElements()
+    val out = new Array[Any](n)
+    val md = md5s.get()
+    var i = 0
+    while (i < n) {
+      if (!arr.isNullAt(i)) out(i) = hash60(md, arr.getUTF8String(i)) % m
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  private val signSalt = "fs".getBytes("UTF-8")
+
+  /** Signed feature-hash vector of a string array (Weinberger et al.
+    * 2009): each non-empty feature f adds +1 to slot `hash60(f) % dim`
+    * if `hash60("fs" ‖ f)` is even, −1 if odd; null and empty features
+    * are skipped. The slot sums are exact integers cast once to float.
+    * A null array gives `dim` nulls, as the per-slot HOF formulation
+    * (`transform(sequence(0, dim − 1), j => aggregate(…))`) does.
+    */
+  def hashedDocVector(feats: ArrayData, dim: Int): ArrayData =
+    if (feats == null) new GenericArrayData(new Array[Any](dim))
+    else {
+      val sums = new Array[Long](dim)
+      val md = md5s.get()
+      var i = 0
+      while (i < feats.numElements()) {
+        if (!feats.isNullAt(i)) {
+          val f = feats.getUTF8String(i)
+          if (f.numBytes() > 0) {
+            val b = (hash60(md, f) % dim).toInt
+            md.reset()
+            md.update(signSalt)
+            md.update(f.getBytes)
+            sums(b) += (if (top60(md.digest()) % 2 == 0) 1L else -1L)
+          }
+        }
+        i += 1
+      }
+      val out = new Array[Float](dim)
+      var j = 0
+      while (j < dim) { out(j) = sums(j).toFloat; j += 1 }
+      ArrayData.toArrayData(out)
+    }
+}
+
+/** [[HashKernels.hash60]] of a string or binary column: one static call
+  * per row inside whole-stage codegen (a string is cast to its UTF-8
+  * bytes, as `md5` casts it). Replaces
+  * `conv(substring(md5(c), 1, 15), 16, 10).cast("long")`: the hex
+  * string, substring, base conversion and cast.
+  */
+case class Hash60(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
+  override def dataType: DataType = LongType
+  override def prettyName: String = "hash60"
+
+  override protected def nullSafeEval(input: Any): Any =
+    HashKernels.hash60(input.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.hash60($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** [[HashKernels.hash60Mod]] of a string-array column: `hash60(t) % m`
+  * per element, one md5 per element in one compiled call.
+  */
+case class Hash60Mod(child: Expression, m: Long) extends UnaryExpression {
+
+  require(m > 0, "modulus must be positive")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "hash60_mod"
+
+  override protected def nullSafeEval(input: Any): Any =
+    HashKernels.hash60Mod(input.asInstanceOf[ArrayData], m)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.hash60Mod($c, ${m}L)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** [[HashKernels.hashedDocVector]] of a string-array column: one pass
+  * over the features instead of `dim` passes. Never null.
+  */
+case class HashedDocVector(child: Expression, dim: Int) extends UnaryExpression {
+
+  require(dim >= 1, "dim must be >= 1")
+
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(FloatType, containsNull = true)
+  override def prettyName: String = "hashed_doc_vector"
+
+  override def eval(input: InternalRow): Any =
+    HashKernels.hashedDocVector(child.eval(input).asInstanceOf[ArrayData], dim)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val feats = if (child.nullable) s"${c.isNull} ? null : ${c.value}" else c.value
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  graft.functions.HashKernels.hashedDocVector($feats, $dim);
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 /** MinHash signature over a string array: for seed j,
@@ -211,6 +348,18 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
 }
 
 object HashKernelFunctions {
+
+  /** Portable 60-bit hash of a string column (native kernel). */
+  def hash60(c: Column): Column =
+    ColumnBridge.column(Hash60(ColumnBridge.expression(c)))
+
+  /** `hash60(t) % m` for each element of a string-array column. */
+  def hash60Mod(arr: Column, m: Long): Column =
+    ColumnBridge.column(Hash60Mod(ColumnBridge.expression(arr), m))
+
+  /** Signed feature-hash vector of a string-array column, `dim` wide. */
+  def hashedDocVector(feats: Column, dim: Int): Column =
+    ColumnBridge.column(HashedDocVector(ColumnBridge.expression(feats), dim))
 
   /** MinHash signature of a string-array column (native kernel). */
   def minhashSig(shinglesCol: Column, seeds: Seq[(Long, Long)]): Column =

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Codegen'd vector kernels for the similarity operators.
   *
@@ -179,8 +179,8 @@ case class CentroidArgminF(child: Expression, ids: Array[Long],
     StructField("cell", LongType, nullable = false)))
   override def prettyName: String = "centroid_argmin_f"
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+  /** Index of the winning centroid and its sim: the interpreted loop. */
+  private def winner(v: ArrayData): (Int, Double) = {
     val n = v.numElements()
     var s = 0.0
     var i = 0
@@ -201,6 +201,16 @@ case class CentroidArgminF(child: Expression, ids: Array[Long],
       }
       c += 1
     }
+    (best, bestSim)
+  }
+
+  /** The winning `cell` of a non-null vector, outside any plan (the
+    * Lloyd rounds' tasks call it on checkpointed rows).
+    */
+  def cellOf(v: ArrayData): Long = ids(winner(v)._1)
+
+  override protected def nullSafeEval(a: Any): Any = {
+    val (best, bestSim) = winner(a.asInstanceOf[ArrayData])
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](bestSim, -ids(best), ids(best)))
   }
@@ -440,7 +450,14 @@ object VectorExpressions {
     * driver-held centroid set; ties to the smaller id (sorted here, so
     * callers may pass any order).
     */
-  def centroidArgminF(vec: Column, cents: Seq[(Long, Seq[Float])]): Column = {
+  def centroidArgminF(vec: Column, cents: Seq[(Long, Seq[Float])]): Column =
+    ColumnBridge.column(centroidArgminKernel(cents)
+      .withNewChildren(Seq(ColumnBridge.expression(vec))))
+
+  /** The [[CentroidArgminF]] kernel over `cents` (sorted by id, norms
+    * precomputed), bound to column 0 of an `array<float>` row.
+    */
+  def centroidArgminKernel(cents: Seq[(Long, Seq[Float])]): CentroidArgminF = {
     val sorted = cents.sortBy(_._1)
     val norms = sorted.map { case (_, ce) =>
       // EXACTLY l2normF's loop (float→double square sum in index order)
@@ -449,8 +466,8 @@ object VectorExpressions {
       while (i < ce.length) { val x = ce(i).toDouble; s += x * x; i += 1 }
       math.sqrt(s)
     }.toArray
-    ColumnBridge.column(CentroidArgminF(ColumnBridge.expression(vec),
-      sorted.map(_._1).toArray, sorted.map(_._2.toArray).toArray, norms))
+    CentroidArgminF(BoundReference(0, ArrayType(FloatType), nullable = true),
+      sorted.map(_._1).toArray, sorted.map(_._2.toArray).toArray, norms)
   }
 
   /** Nearest-entry id by squared L2 over a float codebook; ties to the

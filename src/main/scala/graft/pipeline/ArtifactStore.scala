@@ -97,21 +97,16 @@ object ArtifactStore {
     memo(key("wordpiece", docs, textCol, nMerges))(
       Bpe.trainWordPieceWithVocab(docs, textCol, nMerges))
 
-  /** [[Similarity.kmeansTrain]]'s final fixed-point means, collected
-    * once and rebuilt as a LOCAL DataFrame sorted by (cent_id, dim), a
-    * total order, so consumers broadcast a centroid-sized relation
-    * instead of re-running `iters` Lloyd rounds.
+  /** [[Similarity.kmeansTrain]]'s final fixed-point means: a LOCAL
+    * DataFrame sorted by (cent_id, dim), a total order, so consumers
+    * broadcast a centroid-sized relation instead of re-running `iters`
+    * Lloyd rounds.
     */
   def kmeansMeans(corpus: DataFrame, idCol: String, vecCol: String,
       centroidFilter: Column, iters: Int): DataFrame =
     memo(key("kmeans", corpus, idCol, vecCol,
-        ColumnBridge.structuralKey(centroidFilter), iters)) {
-      val out = Similarity.kmeansTrain(corpus, idCol, vecCol,
-        centroidFilter, iters)
-      val rows = out.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
-      corpus.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), out.schema)
-    }
+        ColumnBridge.structuralKey(centroidFilter), iters))(
+      Similarity.kmeansTrain(corpus, idCol, vecCol, centroidFilter, iters))
 
   /** [[Similarity.pqTrainMeans]] as the per-subspace codebooks every
     * trained-PQ consumer folds into its scan.

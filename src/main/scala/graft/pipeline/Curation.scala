@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
+import graft.functions.{FunnelCounters, HashKernelFunctions}
 import graft.functions.StringKernels.lowerIcu
 import graft.pipeline.{TextFunctions => TF}
 
@@ -1169,14 +1170,31 @@ object Curation {
       .withColumn("n_dropped", col("n_segs") - col("n_kept"))
   }
 
+  /** Counters column of the funnel gates: [[graft.functions.FunnelCounters]]
+    * over `textCol`, computed in one native pass and read by
+    * [[gopherGates]], [[c4PageGates]] and [[funnelFlags]] as fields.
+    */
+  private val Fc = "__fc"
+  private def fc(field: String): Column = col(Fc).getField(field)
+
+  private def withFunnelCounters(df: DataFrame, textCol: String,
+      minLineWords: Int, requireTerminalPunct: Boolean): DataFrame =
+    df.withColumn(Fc, FunnelCounters.column(col(textCol),
+      TF.gopherStopwords, TF.stopwords.head._2, minLineWords,
+      requireTerminalPunct))
+
   /** Gopher rule-set page gates (Rae et al. 2021, §A1.1) as a
     * reusable projection — shared verbatim by the batch query (p61)
     * and the streaming ingest twin ([[graft.streaming.StreamingJobs]]),
     * so the gate a stream applies at admission time is provably the
     * one the batch pass applies. Every rule is an integer
-    * cross-multiplied comparison; zero exchange, no state.
-    */
-  /** `minWords`/`minStopwords` default to the PUBLISHED thresholds
+    * cross-multiplied comparison over the document's funnel counters
+    * (word count, summed word length, '#' count, ellipsis and bullet
+    * lines, alphabetic words, required stopwords present), which one
+    * native pass computes ([[graft.functions.FunnelCounters]]); zero
+    * exchange, no state.
+    *
+    * `minWords`/`minStopwords` default to the PUBLISHED thresholds
     * (Rae et al. 2021, §A1.1: ≥50 words, ≥2 required stopwords); they
     * are parameters because real curation tunes them per corpus — a
     * caller that relaxes them owns documenting why (see the CLI
@@ -1184,49 +1202,33 @@ object Curation {
     */
   def gopherGates(df: DataFrame, idCol: String, textCol: String,
       carry: Seq[String] = Nil, minWords: Long = 50,
-      minStopwords: Long = 2): DataFrame = {
-    val toks = TF.tokens(col(textCol))
-    val lowered = transform(toks, t => lowerIcu(t))
-    val lines = split(col(textCol), "\n")
-    val d = df
-      .withColumn("n_toks", size(toks).cast("long"))
-      .withColumn("sum_len",
-        aggregate(toks, lit(0L), (acc, x) => acc + length(x)))
-      .withColumn("n_lines", size(lines).cast("long"))
-      .withColumn("n_hash",
-        (length(col(textCol)) -
-          length(regexp_replace(col(textCol), "#", ""))).cast("long"))
-      .withColumn("n_ellipsis_lines",
-        size(filter(lines, l => rtrim(l).like("%..."))).cast("long"))
-      .withColumn("n_bullet_lines",
-        size(filter(lines, l =>
-          substring(ltrim(l), 1, 1).isin("-", "*", "•"))).cast("long"))
-      .withColumn("n_alpha_words",
-        size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("long"))
-      .withColumn("n_stop_present",
-        TF.gopherStopwords.map(w =>
-          when(array_contains(lowered, w), 1L).otherwise(0L))
-          .reduce(_ + _))
+      minStopwords: Long = 2): DataFrame =
+    gopherFlags(withFunnelCounters(df, textCol, 5, requireTerminalPunct = true),
+      idCol, carry, minWords, minStopwords)
+
+  /** [[gopherGates]] over a frame that already carries the counters. */
+  private def gopherFlags(d: DataFrame, idCol: String, carry: Seq[String],
+      minWords: Long, minStopwords: Long): DataFrame = {
+    val nToks = fc("n_toks")
     val flags = Seq(
       // Thresholds as published (Rae et al. 2021, §A1.1): 50-100k
       // words, mean word length 3-10, symbol-to-word ratio <= 0.1,
       // <= 30% ellipsis lines, <= 90% bullet lines, >= 80% words with
       // an alphabetic character, and at least TWO of the required
       // stopwords present.
-      "r_words" -> (col("n_toks") >= minWords && col("n_toks") <= 100000L),
-      "r_mean_len" -> (col("sum_len") >= col("n_toks") * 3 &&
-        col("sum_len") <= col("n_toks") * 10),
-      "r_hash" -> (col("n_hash") * 10 <= col("n_toks")),
-      "r_ellipsis" -> (col("n_ellipsis_lines") * 10 <= col("n_lines") * 3),
-      "r_bullet" -> (col("n_bullet_lines") * 10 <= col("n_lines") * 9),
-      "r_alpha" -> (col("n_alpha_words") * 5 >= col("n_toks") * 4),
-      "r_stop" -> (col("n_stop_present") >= minStopwords))
-    val withFlags = flags.foldLeft(d) { case (acc, (n, c)) =>
-      acc.withColumn(n, when(c, 1L).otherwise(0L)) }
-    withFlags.select(
+      "r_words" -> (nToks >= minWords && nToks <= 100000L),
+      "r_mean_len" -> (fc("sum_len") >= nToks * 3 &&
+        fc("sum_len") <= nToks * 10),
+      "r_hash" -> (fc("n_hash") * 10 <= nToks),
+      "r_ellipsis" -> (fc("n_ellipsis_lines") * 10 <= fc("n_lines") * 3),
+      "r_bullet" -> (fc("n_bullet_lines") * 10 <= fc("n_lines") * 9),
+      "r_alpha" -> (fc("n_alpha_words") * 5 >= nToks * 4),
+      "r_stop" -> (fc("n_stop_present") >= minStopwords))
+    d.select(
       (col(idCol) +: carry.map(col)) ++
-        (col("n_toks") +: flags.map { case (n, _) => col(n) }) :+
-        flags.map { case (n, _) => col(n) }.reduce(_ * _).as("keep"): _*)
+        (nToks.as("n_toks") +: flags.map { case (n, c) =>
+          when(c, 1L).otherwise(0L).as(n) }): _*)
+      .withColumn("keep", flags.map { case (n, _) => col(n) }.reduce(_ * _))
   }
 
   /** Within-document repetition signals — the OTHER half of Gopher's
@@ -1407,43 +1409,47 @@ object Curation {
     * sentence marks, and at least one surviving line. The thresholds
     * are parameters because real curation tunes them per corpus — a
     * caller that relaxes them owns documenting why (see the CLI
-    * `curate` profile). The cleaned text is emitted as an md5 fingerprint
-    * so correctness is certified on the actual filtered
+    * `curate` profile). The line, kept-line, terminal-line, sentence
+    * and brace counts are funnel counters from one native pass
+    * ([[graft.functions.FunnelCounters]]); "lorem ipsum" is matched on
+    * the native lowercase. The cleaned text is emitted as an md5
+    * fingerprint so correctness is certified on the actual filtered
     * reconstruction, not just counts. Zero-exchange single-scan
     * projection.
     */
   def c4PageGates(df: DataFrame, idCol: String, textCol: String,
       carry: Seq[String] = Nil, minLineWords: Int = 5,
       requireTerminalPunct: Boolean = true,
-      minSentences: Long = 3): DataFrame = {
-    val lines = split(col(textCol), "\n")
-    val endsTerminal = (l: Column) =>
-      substring(rtrim(l), -1, 1).isin(".", "!", "?", "\"")
-    val kept = filter(lines, l =>
+      minSentences: Long = 3): DataFrame =
+    c4Flags(withFunnelCounters(df, textCol, minLineWords, requireTerminalPunct),
+      idCol, textCol, carry, minLineWords, requireTerminalPunct, minSentences)
+
+  /** [[c4PageGates]] over a frame that already carries the counters,
+    * computed with the same `minLineWords` and `requireTerminalPunct`.
+    */
+  private def c4Flags(d: DataFrame, idCol: String, textCol: String,
+      carry: Seq[String], minLineWords: Int, requireTerminalPunct: Boolean,
+      minSentences: Long): DataFrame = {
+    val kept = filter(split(col(textCol), "\n"), l =>
       size(split(trim(l), "\\s+")) >= minLineWords &&
-        (if (requireTerminalPunct) endsTerminal(l) else lit(true)))
-    val d = df
-      .withColumn("n_lines", size(lines).cast("long"))
-      .withColumn("n_kept", size(kept).cast("long"))
-      .withColumn("n_punct_lines",
-        size(filter(lines, endsTerminal)).cast("long"))
-      .withColumn("n_sentences",
-        (length(col(textCol)) -
-          length(regexp_replace(col(textCol), "[.!?]", ""))).cast("long"))
-      .withColumn("has_brace",
-        when(col(textCol).like("%{%"), 1L).otherwise(0L))
-      .withColumn("has_lorem",
-        when(lowerIcu(col(textCol)).like("%lorem ipsum%"), 1L).otherwise(0L))
-      .withColumn("clean_fp",
-        substring(md5(concat_ws("\n", kept)), 1, 16))
+        (if (requireTerminalPunct)
+          substring(rtrim(l), -1, 1).isin(".", "!", "?", "\"")
+        else lit(true)))
+    // a null text has null counters; its flags read 0, as the per-line
+    // HOF formulation's `like`/`when` gave
+    val hasBrace = when(fc("has_brace") === 1L, 1L).otherwise(0L)
+    val hasLorem =
+      when(lowerIcu(col(textCol)).like("%lorem ipsum%"), 1L).otherwise(0L)
     d.select(
       (col(idCol) +: carry.map(col)) ++ Seq(
-        col("n_lines"), col("n_kept"), col("n_punct_lines"),
-        col("n_sentences"), col("has_brace"), col("has_lorem"),
-        when(col("has_brace") === 0 && col("has_lorem") === 0 &&
-          col("n_sentences") >= minSentences && col("n_kept") >= 1, 1L)
+        fc("n_lines").as("n_lines"), fc("n_kept").as("n_kept"),
+        fc("n_punct_lines").as("n_punct_lines"),
+        fc("n_sentences").as("n_sentences"), hasBrace.as("has_brace"),
+        hasLorem.as("has_lorem"),
+        when(hasBrace === 0 && hasLorem === 0 &&
+          fc("n_sentences") >= minSentences && fc("n_kept") >= 1, 1L)
           .otherwise(0L).as("page_keep"),
-        col("clean_fp")): _*)
+        substring(md5(concat_ws("\n", kept)), 1, 16).as("clean_fp")): _*)
   }
 
   /** Threshold bundle for the three-gate funnel. [[GateProfile.published]]
@@ -1471,30 +1477,29 @@ object Curation {
     * quality score (≥ 0.5), the Gopher rule set, and the C4 page
     * gates (published thresholds by default — see [[GateProfile]]),
     * composed as one zero-exchange
-    * projection chain over a single scan. Output carries `score_keep`,
+    * projection chain over a single scan. The funnel counters
+    * ([[graft.functions.FunnelCounters]]) are computed ONCE per row
+    * and feed all three gates; every ratio and threshold, and
+    * [[TF.qualityScore]], stays a Column expression over them, so the
+    * doubles come from the same Spark ops (an empty text divides by
+    * its zero length, as before). Output carries `score_keep`,
     * the Gopher `keep`, and the C4 `page_keep` per document plus any
     * `carry` columns.
     */
   def funnelFlags(df: DataFrame, idCol: String, textCol: String,
       carry: Seq[String] = Nil,
       profile: GateProfile = GateProfile.published): DataFrame = {
-    val gated = gopherGates(df, idCol, textCol, carry = textCol +: carry,
+    val d = withFunnelCounters(df, textCol, profile.minLineWords,
+      profile.requireTerminalPunct)
+    val gated = gopherFlags(d, idCol, carry = textCol +: Fc +: carry,
       minWords = profile.minWords, minStopwords = profile.minStopwords)
-    val toks = TF.tokens(col(textCol))
-    val scored = gated
-      .withColumn("mean_len",
-        aggregate(toks, lit(0L), (a, x) => a + length(x)).cast("double") /
-          col("n_toks").cast("double"))
-      .withColumn("punct_ratio",
-        TF.punctCount(col(textCol)).cast("double") /
-          length(col(textCol)).cast("double"))
-      .withColumn("stop_ratio",
-        TF.stopwordHits(toks, TF.stopwords.head._2).cast("double") /
-          col("n_toks").cast("double"))
-      .withColumn("score_keep",
-        when(TF.qualityScore(col("n_toks"), col("mean_len"),
-          col("punct_ratio"), col("stop_ratio")) >= 0.5, 1L).otherwise(0L))
-    c4PageGates(scored, idCol, textCol,
+    val nToks = col("n_toks").cast("double")
+    val scored = gated.withColumn("score_keep",
+      when(TF.qualityScore(col("n_toks"),
+        fc("sum_len").cast("double") / nToks,
+        fc("n_punct").cast("double") / fc("n_chars").cast("double"),
+        fc("n_en_stop").cast("double") / nToks) >= 0.5, 1L).otherwise(0L))
+    c4Flags(scored, idCol, textCol,
       carry = carry ++ Seq("keep", "score_keep"),
       minLineWords = profile.minLineWords,
       requireTerminalPunct = profile.requireTerminalPunct,
@@ -2096,7 +2101,7 @@ object Curation {
     */
   private[graft] def dsirBuckets(textCol: Column, buckets: Int): Column = {
     val toks = TF.tokens(textCol)
-    val uni = transform(toks, t => TF.hash60(t) % buckets)
+    val uni = HashKernelFunctions.hash60Mod(toks, buckets)
     val bi = zip_with(
       slice(toks, lit(1), size(toks) - 1),
       slice(toks, lit(2), size(toks) - 1),
@@ -3117,8 +3122,8 @@ object Curation {
       profile: GateProfile = GateProfile.published): DataFrame = {
     val labeled = funnelLabels(df, idCol, textCol, profile = profile)
       .select(col(idCol), col("cls"),
-        explode(array_distinct(transform(TF.tokens(col(textCol)),
-          t => TF.hash60(t) % buckets))).as("bucket"))
+        explode(array_distinct(HashKernelFunctions.hash60Mod(
+          TF.tokens(col(textCol)), buckets))).as("bucket"))
     val docFeats = lrDocFeats(labeled, idCol).localCheckpoint(eager = true)
     try {
       val w = lrWeightsFromDocs(docFeats, iters, lrDen)

@@ -1,8 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+
+import graft.functions.{HashKernelFunctions, HashKernels, VectorExpressions}
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -709,15 +716,11 @@ object Similarity {
     * are bit-identical to the old interpreted-HOF form (and to the
     * DuckDB oracle, which still derives them via md5 in SQL).
     */
-  private[graft] def planeWeights(plane: Int, dim: Int): Array[Float] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  private[graft] def planeWeights(plane: Int, dim: Int): Array[Float] =
     (1 to dim).map { i =>
-      val hex = md.digest(s"hp${plane}_$i".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString
-      val h = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-      (h % 2001L - 1000L).toFloat
+      (HashKernels.hash60(s"hp${plane}_$i".getBytes("UTF-8")) % 2001L -
+        1000L).toFloat
     }.toArray
-  }
 
   /** Random-hyperplane LSH bucket id: bit p of the result is the sign
     * of ⟨vec, w_p⟩ for hyperplane p ∈ [0, planes). The hyperplane
@@ -772,28 +775,17 @@ object Similarity {
   /** Per-ROW variant of [[hashedDocVectors]] for streaming ingest:
     * the same signed feature-hash vector built entirely inside one
     * row — no groupBy, no state — so a document's embedding exists
-    * the moment it arrives. Two chained projections: the first
-    * materializes each feature's (bucket, sign) once (two md5 per
-    * feature, not per feature×dimension), the second folds them into
-    * the `dim`-wide integer sums. Bit-identical to the batch
-    * aggregation (exact integer sums are order-free), so stream-side
-    * vectors join corpus-side batch vectors with no drift.
+    * the moment it arrives. One native pass over the features
+    * ([[graft.functions.HashedDocVector]]): each non-empty feature adds
+    * its sign to its bucket, two md5 per feature. The per-slot HOF
+    * form (`transform(sequence(0, dim − 1), j => aggregate(…))`) cost
+    * dim × features interpreted steps per row. Bit-identical to the
+    * batch aggregation (exact integer sums are order-free), so
+    * stream-side vectors join corpus-side batch vectors with no drift.
     */
   def withHashedDocVector(df: DataFrame, feats: Column, dim: Int,
-      out: String = "embedding"): DataFrame = {
-    val TF = graft.pipeline.TextFunctions
-    val bs = transform(filter(feats, f => length(f) > 0), f =>
-      struct((TF.hash60(f) % dim).as("b"),
-        when(TF.hash60(concat(lit("fs"), f)) % 2 === 0, 1L)
-          .otherwise(-1L).as("s")))
-    df.withColumn("__bs", bs)
-      .withColumn(out,
-        transform(sequence(lit(0), lit(dim - 1)), j =>
-          aggregate(col("__bs"), lit(0L), (acc, x) =>
-            acc + when(x.getField("b") === j, x.getField("s"))
-              .otherwise(0L)).cast("float")))
-      .drop("__bs")
-  }
+      out: String = "embedding"): DataFrame =
+    df.withColumn(out, HashKernelFunctions.hashedDocVector(feats, dim))
 
   /** Deterministic signed permutation of 1..dim — the cheapest
     * orthogonal transform: `perm` is the argsort of md5-derived keys
@@ -803,11 +795,7 @@ object Similarity {
     */
   private[graft] def signedPerm(dim: Int,
       salt: String): (Seq[Int], Seq[Int]) = {
-    def h(s: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-      java.lang.Long.parseLong(hex.substring(0, 15), 16)
-    }
+    def h(s: String): Long = HashKernels.hash60(s.getBytes("UTF-8"))
     val perm = (1 to dim).sortBy(i => (h(s"rp${salt}_$i"), i))
     val signs = (1 to dim).map(i => if (h(s"rs${salt}_$i") % 2 == 0) 1 else -1)
     (perm, signs)
@@ -961,55 +949,140 @@ object Similarity {
       collectCentroids(corpus, idCol, vecCol, centroidFilter))
 
   /** Lloyd iterated to a fixed count: [[kmeansUpdate]]'s step, with the
-    * refined centroids fed back in. Between iterations the k·d
-    * fixed-point means are collected to the driver and re-broadcast —
-    * centroids are driver state in any k-means (tiny: cells × dims),
-    * which keeps every iteration an independent one-shuffle plan (the
-    * update groupBy) instead of a lineage that deepens with the
-    * iteration count.
+    * refined centroids fed back in. The projected vectors are
+    * local-checkpointed once; each round is then ONE single-stage
+    * Spark job over the checkpoint blocks ([[lloydRounds]]): tasks
+    * assign every vector with the native argmin kernel and return
+    * per-(cell, dim) partial counts and fixed-point sums, and the
+    * driver merges them. Centroids are driver state in any k-means
+    * (tiny: cells × dims), so no round plans a query and no lineage
+    * deepens with the iteration count.
     *
-    * Determinism: the rebuilt centroid elements are
+    * Determinism: means are `floor(Σ floor(x·1e6) / n)` in exact
+    * integer sums and one double division, as [[lloydStep]]'s SQL
+    * computes them; the rebuilt centroid elements are
     * `(mean_fixed / 1e6).toFloat` — an exact integer divided in double
     * then rounded once to float, the same two IEEE ops any engine
     * performs — so iterated assignments stay bit-reproducible.
     *
     * Output is [[kmeansUpdate]]'s shape for the final iteration, with
-    * `cent_id` normalized to long.
+    * `cent_id` normalized to long, as a local relation sorted by
+    * (cent_id, dim).
     */
   def kmeansTrain(corpus: DataFrame, idCol: String, vecCol: String,
       centroidFilter: Column, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    var cents = collectCentroids(corpus, idCol, vecCol, centroidFilter)
-    var out: DataFrame = null
-    for (i <- 1 to iters) {
-      out = lloydStep(corpus, idCol, vecCol, cents)
-      if (i < iters) {
-        // rebuilt centroid elements are (mean_fixed / 1e6).toFloat —
-        // the same two IEEE ops as before; the refined rows now stay
-        // driver-side instead of round-tripping through a toDF the
-        // next lloydStep would immediately re-collect
-        val rows = out.select("cent_id", "dim", "mean_fixed").collect()
-        cents = rows.groupBy(_.getLong(0)).toSeq
-          .map { case (id, rs) =>
-            (id, rs.sortBy(_.getLong(1))
-              .map(r => (r.getLong(2).toDouble / 1e6).toFloat).toSeq)
-          }
-          .sortBy(_._1)
-      }
-    }
-    out.select(col("cent_id").cast("long").as("cent_id"), col("dim"),
-      col("n"), col("mean_fixed"))
+    val cents = collectCentroids(corpus, idCol, vecCol, centroidFilter)
+    val vecs = corpus.select(col(vecCol).as("v")).localCheckpoint(eager = true)
+    val means =
+      try lloydRounds(vecs, cents, iters)
+      finally CheckpointBridge.releaseLocalCheckpoint(vecs)
+    val schema = StructType(Seq("cent_id", "dim", "n", "mean_fixed")
+      .map(StructField(_, LongType, nullable = true)))
+    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(
+      means.map { case ((c, d), (n, m)) => Row(c, d, n, m.orNull) }: _*),
+      schema)
   }
 
-  private def lloydStep(corpus: DataFrame, idCol: String, vecCol: String,
+  /** `iters` Lloyd rounds over a MATERIALIZED single-column vector
+    * frame (`array<float>`), from driver-held centroids: one
+    * single-stage job per round, MLlib's per-iteration aggregate
+    * idiom (as [[Curation.lrWeightsFromDocs]]). Returns the final
+    * round's `(cent_id, dim) -> (n, mean_fixed)`, sorted.
+    *
+    * Each task assigns each vector once with the SAME argmin kernel
+    * [[lloydStep]] projects ([[graft.functions.CentroidArgminF]]) and
+    * adds it to its cell's per-dim member count and `Math.addExact` sum
+    * of `floor(x·1e6)`. As SQL's `count(1)` and `sum` treat them, a null
+    * vector is in no cell (it has no dims), a null element counts in
+    * `n` but not in the sum, and a dim whose elements are all null has
+    * a null mean (which, fed into another round, fails as a null
+    * centroid element does in [[lloydStep]]'s collect).
+    */
+  private[graft] def lloydRounds(vecs: DataFrame,
+      cents0: Seq[(Long, Seq[Float])],
+      iters: Int): Seq[((Long, Long), (Long, Option[Long]))] = {
+    require(vecs.schema.fields.map(_.dataType) match {
+        case Array(ArrayType(FloatType, _)) => true
+        case _ => false
+      }, s"expected one array<float> column, got ${vecs.schema.simpleString}")
+    val rows = CheckpointBridge.checkpointedRows(vecs)
+    var cents = cents0
+    var means = Seq.empty[((Long, Long), (Long, Option[Long]))]
+    for (i <- 1 to iters) {
+      require(cents.nonEmpty, "need at least one centroid")
+      val kernel = VectorExpressions.centroidArgminKernel(cents)
+      // per cell: member count, non-null count, fixed-point sum per dim
+      val acc = mutable.LongMap.empty[Array[Array[Long]]]
+      rows.sparkContext.runJob(rows,
+        (it: Iterator[InternalRow]) => lloydPartial(it, kernel),
+        (_: Int, part: Array[(Long, Array[Array[Long]])]) =>
+          part.foreach { case (cell, p) =>
+            val a = acc.getOrElseUpdate(cell, Array.fill(3)(Array.empty[Long]))
+            for (k <- 0 until 3) {
+              val (big, small) =
+                if (a(k).length >= p(k).length) (a(k), p(k)) else (p(k), a(k))
+              var j = 0
+              while (j < small.length) {
+                big(j) = Math.addExact(big(j), small(j)); j += 1
+              }
+              a(k) = big
+            }
+          })
+      means = acc.toSeq.sortBy(_._1).flatMap { case (cell, Array(n, nn, sx)) =>
+        n.indices.filter(n(_) > 0).map { d =>
+          (cell, d.toLong) -> (n(d),
+            if (nn(d) == 0) None
+            else Some(Math.floor(sx(d).toDouble / n(d).toDouble).toLong))
+        }
+      }
+      if (i < iters) {
+        cents = means.groupBy(_._1._1).toSeq.sortBy(_._1).map { case (c, ms) =>
+          (c, ms.sortBy(_._1._2).map { case ((_, d), (_, m)) =>
+            (m.getOrElse(throw new NullPointerException(
+              s"null mean at cell $c, dim $d")).toDouble / 1e6).toFloat })
+        }
+      }
+    }
+    means
+  }
+
+  /** One partition's share of a Lloyd round: per assigned cell, three
+    * per-dim arrays (member count, non-null count, Σ floor(x·1e6)).
+    */
+  private def lloydPartial(rows: Iterator[InternalRow],
+      kernel: graft.functions.CentroidArgminF): Array[(Long, Array[Array[Long]])] = {
+    val acc = mutable.LongMap.empty[Array[Array[Long]]]
+    rows.foreach { row =>
+      if (!row.isNullAt(0)) {
+        val v = row.getArray(0)
+        val len = v.numElements()
+        val cell = kernel.cellOf(v)
+        val a = acc.getOrElseUpdate(cell, Array.fill(3)(new Array[Long](len)))
+        if (a(0).length < len) for (k <- 0 until 3) a(k) = java.util.Arrays.copyOf(a(k), len)
+        var j = 0
+        while (j < len) {
+          a(0)(j) += 1
+          if (!v.isNullAt(j)) {
+            a(1)(j) += 1
+            a(2)(j) = Math.addExact(a(2)(j),
+              Math.floor(v.getFloat(j).toDouble * 1e6).toLong)
+          }
+          j += 1
+        }
+      }
+    }
+    acc.toArray
+  }
+
+  private[graft] def lloydStep(corpus: DataFrame, idCol: String, vecCol: String,
       centRows: Seq[(Long, Seq[Float])]): DataFrame = {
-    // Assignment as the zero-exchange argmin projection (see
-    // [[semanticCells]]): each Lloyd round is now ONE update shuffle
-    // instead of assignment shuffle + update shuffle, and the vector
-    // no longer rides a max(struct) exchange. Centroids were already
-    // driver state between rounds ([[kmeansTrain]] collects means);
-    // they arrive here as driver rows directly. Same sim math and
-    // smaller-id tie rule — means are bit-identical.
+    // The plain SQL formulation of one Lloyd round ([[kmeansUpdate]],
+    // and the reference [[kmeansTrain]]'s single-job rounds are checked
+    // against). Assignment is the zero-exchange argmin projection (see
+    // [[semanticCells]]), so the only shuffle is the update, and the
+    // vector never rides a max(struct) exchange. Same sim math and
+    // smaller-id tie rule as [[lloydRounds]] — means are bit-identical.
     // Hoist rule: the argmin is projected BELOW the posexplode, because
     // a kernel written beside a generator lands in a Project above the
     // Generate and runs once per exploded dimension, not once per row.
@@ -1978,7 +2051,7 @@ object Similarity {
     *  - `n_cells`: trained cells actually holding vectors.
     *
     * Scale shape: per modulus the train is [[kmeansTrain]]'s
-    * two-shuffle-per-round plan; the final assignment scores
+    * one single-stage job per round; the final assignment scores
     * |corpus|·k pairs against BROADCAST centroids and
     * [[prunePartitionTopK]] keeps only each vector's best + runner-up
     * cells map-side, so the ranking shuffle moves 2·|corpus| rows,

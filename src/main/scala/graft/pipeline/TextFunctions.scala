@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashKernelFunctions
 import graft.functions.StringKernels.lowerIcu
 
 /** Text-analysis primitives for large-scale training-data pipelines:
@@ -30,10 +31,13 @@ object TextFunctions {
 
   /** Portable 60-bit hash: first 15 hex digits of md5, big-endian.
     * DuckDB equivalent: `CAST('0x' || substr(md5(x),1,15) AS BIGINT)`.
-    * Always non-negative (60 bits < 63).
+    * Always non-negative (60 bits < 63). One native expression
+    * ([[graft.functions.Hash60]]: the first 8 digest bytes, low nibble
+    * dropped) with exactly the value of
+    * `conv(substring(md5(c), 1, 15), 16, 10).cast("long")`, which would
+    * build the hex string, cut it and parse it back per row.
     */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  def hash60(c: Column): Column = HashKernelFunctions.hash60(c)
 
   /** Whitespace tokenization (the BPE-ish variant is [[bpeTokens]]). */
   def tokens(text: Column): Column = split(trim(text), "\\s+")

@@ -52,9 +52,11 @@ class GenerateHoistSpec extends SparkSpec {
       .select("vec_id", "embedding")
 
   test("k-means Lloyd rounds assign each vector once, then explode") {
-    assertHoisted("kmeansTrain", captured {
-      Similarity.kmeansTrain(emb, "vec_id", "embedding",
-        col("vec_id") % 25 === 0, iters = 2).collect()
+    // the SQL Lloyd step; kmeansTrain's rounds run as plain jobs over a
+    // checkpoint and execute no Generate
+    assertHoisted("kmeansUpdate", captured {
+      Similarity.kmeansUpdate(emb, "vec_id", "embedding",
+        col("vec_id") % 25 === 0).collect()
     })
   }
 

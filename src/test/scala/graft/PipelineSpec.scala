@@ -202,6 +202,54 @@ class PipelineSpec extends SparkSpec {
     assert(a0 == (1000000L + math.floor(0.9f.toDouble * 1e6).toLong) / 2)
   }
 
+  /** `iters` SQL Lloyd rounds ([[Similarity.lloydStep]]) with the
+    * means collected and rebuilt as centroids between rounds: the plain
+    * formulation of [[Similarity.kmeansTrain]].
+    */
+  private def sqlLloyd(corpus: org.apache.spark.sql.DataFrame,
+      filt: org.apache.spark.sql.Column, iters: Int): Seq[org.apache.spark.sql.Row] = {
+    var cents = corpus.filter(filt)
+      .select(col("vec_id").cast("long"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
+    var out: org.apache.spark.sql.DataFrame = null
+    for (i <- 1 to iters) {
+      out = Similarity.lloydStep(corpus, "vec_id", "embedding", cents)
+      if (i < iters) cents = out.select("cent_id", "dim", "mean_fixed")
+        .collect().groupBy(_.getLong(0)).toSeq.map { case (id, rs) =>
+          (id, rs.sortBy(_.getLong(1))
+            .map(r => (r.getLong(2).toDouble / 1e6).toFloat).toSeq)
+        }.sortBy(_._1)
+    }
+    out.select(col("cent_id").cast("long"), col("dim"), col("n"),
+        col("mean_fixed"))
+      .orderBy("cent_id", "dim").collect().toSeq
+  }
+
+  test("kmeansTrain's single-job rounds equal iterated SQL lloydStep rounds row for row") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    for (filt <- Seq($"vec_id" % 25 === 0, $"vec_id" % 7 === 0)) {
+      val got = Similarity.kmeansTrain(emb, "vec_id", "embedding", filt,
+        iters = 3).orderBy("cent_id", "dim").collect().toSeq
+      assert(got.nonEmpty && got == sqlLloyd(emb, filt, 3))
+    }
+    // null vectors (in no cell) and null elements (counted in n, not in
+    // the sum), as count(1)/sum treat them
+    val withNulls = Seq(
+      (0L, Some(Seq(Some(1f), Some(0f), Some(0f)))),
+      (25L, Some(Seq(Some(0f), Some(1f), Some(0f)))),
+      (1L, Some(Seq(Some(0.9f), None, Some(0.3f)))),
+      (2L, Some(Seq(None, Some(0.8f), Some(0.1f)))),
+      (3L, None),
+      (4L, Some(Seq(Some(0.2f), Some(0.7f))))).toDF("vec_id", "embedding")
+      .localCheckpoint()
+    for (iters <- Seq(1, 2)) {
+      val got = Similarity.kmeansTrain(withNulls, "vec_id", "embedding",
+        $"vec_id" % 25 === 0, iters).orderBy("cent_id", "dim").collect().toSeq
+      assert(got == sqlLloyd(withNulls, $"vec_id" % 25 === 0, iters), s"iters=$iters")
+    }
+  }
+
   test("clusterQualityCard: matched k separates clusters; over-split k scores lower") {
     // two tight 4-vector clusters on orthogonal axes; modulus 4 seeds
     // {0, 4} = one centroid per true cluster, modulus 2 seeds

@@ -436,9 +436,8 @@ class PlansSpec extends SparkSpec {
 
   test("kmeans training keeps every iteration a two-shuffle plan (p22)") {
     // centroid state lives on the driver between iterations, so the
-    // FINAL iteration's plan is the same shape as a single update —
-    // no lineage deepening with the iteration count (pin the RAW
-    // primitive; the public p22 serves from ArtifactStore below)
+    // trained frame's plan does not deepen with the iteration count
+    // (pin the RAW primitive; the public p22 serves from ArtifactStore)
     val p = plan(graft.pipeline.Similarity.kmeansTrain(
       spark.read.parquet(s"$sf0001/embeddings.parquet"), "vec_id",
       "embedding",
@@ -446,6 +445,52 @@ class PlansSpec extends SparkSpec {
     assert(!p.contains("Window"), p)
     val exchanges = """[+:]- Exchange \(""".r.findAllIn(p).size
     assert(exchanges <= 2, s"expected <=2 shuffle exchanges, got $exchanges\n$p")
+  }
+
+  test("kmeans training runs each Lloyd round as one single-stage job, with no SQL execution (p22)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.{CheckpointBridge, ListenerBridge}
+    // centroid state lives on the driver between rounds, so each round
+    // is one job over the checkpointed vectors (pin the RAW primitive;
+    // the public p22 serves from ArtifactStore below)
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val cents = emb.filter(col("vec_id") % 25 === 0)
+      .select(col("vec_id").cast("long"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+    val vecs = emb.select(col("embedding").as("v")).localCheckpoint(eager = true)
+    val sc = spark.sparkContext
+    val group = "lloyd-round-shape"
+    def ours(props: java.util.Properties) =
+      props != null && props.getProperty("spark.jobGroup.id") == group
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.incrementAndGet()
+    }
+    try {
+      ListenerBridge.drain(sc)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, group)
+      var means = Seq.empty[((Long, Long), (Long, Option[Long]))]
+      val executions =
+        try ExecutedPlans.capture(spark) {
+          means = graft.pipeline.Similarity.lloydRounds(vecs, cents, iters = 3)
+        } finally {
+          sc.clearJobGroup()
+          ListenerBridge.drain(sc)
+          sc.removeSparkListener(listener)
+        }
+      assert(means.nonEmpty)
+      assert(executions.isEmpty,
+        s"${executions.size} SQL executions ran inside the Lloyd loop")
+      assert(jobs.get == 3, s"3 rounds ran ${jobs.get} jobs")
+      assert(stages.get == 3, s"3 rounds ran ${stages.get} stages")
+    } finally CheckpointBridge.releaseLocalCheckpoint(vecs)
     // the SERVED means are a centroid-sized local relation: zero
     // exchanges, zero corpus scans for every consumer after the first
     val served = plan(PipelineQueries.p22KmeansTrain(spark, sf0001))
