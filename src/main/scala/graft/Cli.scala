@@ -22,50 +22,178 @@ import graft.transforms._
   */
 object Cli {
 
-  private def usage(): Nothing = {
-    System.err.println(
-      """usage: graft.Cli <command> <args>
+  /** The one-query commands, each declared once as (command,
+    * [[SparkEntry.queries]] key, help text): `<command> <dir> <outDir>`
+    * writes that registered query over `dir` to `outDir`. Commands
+    * with any other shape keep their own `case` in [[dispatch]] and
+    * their hand-written line in [[usageText]].
+    */
+  private[graft] val queryCommands: Seq[(String, String, String)] = Seq(
+    ("eras", "q10_era", "condition-era build over lineitem intervals"),
+    ("obs-period", "q11_obs_period", "observation_period sync"),
+    ("checks", "q18_checks", "PK/FK/not-null validation counts"),
+    ("sessionize", "p13_sessionize", "30-min event sessions"),
+    ("dedup-keep-longest", "p67_keep_longest", "exact dedup, longest-raw-text survivor policy"),
+    ("dedup-minhash", "p02_minhash_lsh", "MinHash+LSH near-dup pairs"),
+    ("web-records", "p192_warc_records", "WARC record census over the capture fixture"),
+    ("web-extract", "p193_html_extract", "HTML main-text extraction from WARC captures"),
+    ("web-admission", "p194_web_admission", "crawl front end: WARC -> HTTP -> HTML -> verdict"),
+    ("ann", "p05_cosine_topk", "cosine top-k for the query batch"),
+    ("media-meta", "p12_multimodal", "multimodal payload metadata"),
+    ("scdf-era", "q34_scdf_era", "SCDF drug-era derivation package"),
+    ("registry-checks", "q35_registry_checks", "model-driven PK/FK/not-null report"),
+    ("stats", "q37_stats", "ANALYZE statistics pass"),
+    ("bad-rows", "q38_bad_rows", "per-domain orphan samples"),
+    ("union-view", "q36_union_view", "split slices + UNION ALL view"),
+    ("subset-any", "q33_or_exists", "OR-of-EXISTS cohort subsetting"),
+    ("lab-loinc", "q40_lab_loinc", "LOINC lab remap derivation package"),
+    ("obs-derivation", "q41_obs_derivation", "concept-set observation derivation package"),
+    ("bmi", "q30_bmi", "BMI derivation from ht/wt measurements"),
+    ("zscore", "q29_zscore", "growth z-score derivation"),
+    ("sync-obs", "q42_sync_obs", "full obs-period sync (null-end fill + renumber)"),
+    ("dose", "q43_dose", "mg/kg dose derivation + drug_exposure write-back"),
+    ("cohort", "q44_cohort", "union-of-domains cohort build"),
+    ("repetition", "p20_repetition", "Gopher-style repetition quality signals"),
+    ("gopher-filter", "p61_gopher_rules", "Gopher rule-set boolean quality gates"),
+    ("c4-clean", "p64_c4_lines", "C4 line filters + page gates + cleaned-text fp"),
+    ("quality-funnel", "p66_quality_funnel", "per-source survival through all three quality gates"),
+    ("unigram-lm", "p68_unigram_lm", "self-trained unigram-LM NLL (perplexity filter) per doc"),
+    ("cluster-best", "p69_cluster_best", "near-dup clusters, highest-quality survivor per cluster"),
+    ("importance-sample", "p70_importance_sample", "quality-weighted acceptance sampling (portable hash)"),
+    ("dedup-image", "p77_image_neardup", "perceptual image near-dup pairs (dHash + banded Hamming)"),
+    ("dedup-audio", "p80_audio_neardup", "audio near-dup pairs (scale-invariant energy contour)"),
+    ("dedup-substrings", "p78_exact_substrings", "exact-substring scrub at arbitrary boundaries (md5-certified)"),
+    ("bpe-pairs", "p62_bpe_pairs", "BPE merge-step adjacent-pair counts (top 20)"),
+    ("audio-features", "p63_audio_features", "peak/energy/zero-crossings from decoded WAV"),
+    ("dup-clusters", "p37_dup_clusters", "connected-component near-dup clusters + keep flags"),
+    ("scrub", "p38_pii_scrub", "PII/identifier redaction over event log lines"),
+    ("line-dedup", "p39_line_dedup", "global segment dedup (C4 rule, 10-word windows)"),
+    ("segment-scrub", "p65_segment_scrub", "C4 removal: rebuild docs without duplicated segments"),
+    ("semantic-dedup", "p40_semantic_dedup", "SemDeDup-style embedding-cluster dedup"),
+    ("vocab", "p41_vocab", "top-50 token vocabulary (tokenizer prep)"),
+    ("oov-rate", "p42_oov_rate", "per-doc out-of-vocabulary rate vs that vocab"),
+    ("length-quantiles", "p43_length_quantiles", "per-source token-length p25/p50/p75 (nearest-rank)"),
+    ("mix-weights", "p44_mix_weights", "equal-share mixture re-weighting per source"),
+    ("source-overlap", "p45_source_overlap", "cross-source near-dup mirror matrix"),
+    ("pq-codes", "p48_pq_codes", "product-quantization codes per vector"),
+    ("pq-ann", "p49_pq_topk", "ADC top-k over PQ codes"),
+    ("pq-train", "p55_pq_trained", "trained-codebook PQ codes (per-subspace Lloyd)"),
+    ("pq-ann-trained", "p58_pq_trained_topk", "ADC top-k against the trained codebook"),
+    ("hard-negatives", "p51_hard_negatives", "top-k below the near-dup ceiling"),
+    ("covid-slice", "q51_covid_slice", "event-marked cohort slice (counts report)"),
+    ("adult-slice", "q52_adult_slice", "age>=21 cohort slice (counts report)"),
+    ("search", "p112_bm25", "BM25 top-10 for the prefix query batch"),
+    ("ql-search", "p129_ql", "Dirichlet query-likelihood top-10"),
+    ("prf-search", "p120_prf", "two-pass pseudo-relevance-feedback BM25"),
+    ("hybrid-search", "p119_hybrid_rrf", "sparse+dense reciprocal-rank fusion"),
+    ("phrase-search", "p131_phrase_rerank", "BM25 re-ranked by exact-phrase containment"),
+    ("bm25f-search", "p132_bm25f", "fielded BM25F (title x3 / body x1)"),
+    ("snippets", "p133_snippets", "best-matching 8-token window per result"),
+    ("proximity-search", "p134_proximity", "BM25 + pairwise term-proximity boost"),
+    ("spell-suggest", "p135_spell", "vocabulary \"did you mean\" (bigram-index Levenshtein)"),
+    ("ranking-significance", "p136_significance", "paired sign-flip test of bm25f vs each ranker"),
+    ("wordpiece-encode", "p137_wordpiece_encode", "train WordPiece then tokenize the corpus"),
+    ("dedup-hubs", "p138_pagerank_hubs", "near-dup graph PageRank (template hub scores)"),
+    ("classifier-agreement", "p139_classifier_agreement", "Cohen's kappa between the NB and LR classifiers"),
+    ("cluster-quality", "p140_cluster_quality", "k-means elbow card (inertia + silhouette per k)"),
+    ("dedup-triangles", "p141_triangles", "near-dup graph triangle counts (clique vs star)"),
+    ("dedup-kcore", "p154_kcore", "near-dup graph k-core peel (cohesion cut depth)"),
+    ("dedup-retrieval-impact", "p156_dedup_retrieval", "BM25 quality card before vs after the dedup cut"),
+    ("detector-agreement", "p142_detector_agreement", "ARI between the Jaccard and SimHash partitions"),
+    ("chi-square", "p143_chi_square", "top-50 tokens by label association (feature selection)"),
+    ("pmi-expansion", "p144_pmi_expansion", "thesaurus-expanded BM25 vs flat, scorecarded"),
+    ("packing-efficiency", "p145_packing_efficiency", "packed vs padded chunk bill per source"),
+    ("bootstrap-ci", "p146_bootstrap_ci", "bootstrap percentile CI for BM25's MRR"),
+    ("vocab-growth", "p147_vocab_growth", "Heaps-law card over hash-nested subcorpora"),
+    ("hdr-quantiles", "p148_hdr_quantiles", "audited HDR-histogram quantile sketch"),
+    ("survivor-policies", "p149_survivor_policies", "min-id vs longest vs best-quality survivor card"),
+    ("rate-spikes", "p150_rate_spikes", "median+3MAD hourly event-rate anomalies"),
+    ("source-dup-rates", "p151_source_dup_rates", "per-source near-dup pollution card"),
+    ("split-leakage", "p152_split_leakage", "near-dup clusters straddling train/valid/test"),
+    ("split-repair", "p159_split_repair", "cluster-routed split migration matrix (the fix)"),
+    ("epoch-schedule", "p153_epoch_schedule", "per-source epochs under the 4-epoch ceiling"),
+    ("global-shard-manifest", "p160_shard_manifest", "whole-corpus token placement into training shards"),
+    ("bm25-hard-negatives", "p161_hard_negatives", "DPR-style lexical hard negatives per query"),
+    ("distinct-n", "p162_distinct_n", "per-source distinct-1/2/3 diversity ratios"),
+    ("mix-interleave", "p163_mix_interleave", "stride-scheduled mixture-order shard manifest"),
+    ("crop-pairs", "p164_crop_pairs", "contrastive anchor/positive crop pairs"),
+    ("epoch-decorrelation", "p166_epoch_decorrelation", "shared adjacent pairs across epoch reshuffles"),
+    ("shard-mix", "p165_shard_mix", "per-shard observed vs target mixture audit"),
+    ("k-anonymity", "p168_k_anonymity", "behavioral-signature k-anonymity histogram"),
+    ("knn-probe", "p169_knn_probe", "kNN label-probe accuracy over the embeddings"),
+    ("quantization-probe", "p170_quantization_probe", "probe accuracy raw vs int8-quantized vectors"),
+    ("manifest-append", "p172_manifest_append", "append a delta batch to a mixture manifest"),
+    ("append-shards", "p174_shard_append", "extend a shard release in place + certify"),
+    ("release-diff", "p175_release_diff", "added/removed/modified card between releases"),
+    ("chunk-docs", "p176_doc_chunks", "overlapping-window RAG chunks with provenance"),
+    ("passage-retrieval", "p177_passage_retrieval", "MaxP chunk retrieval vs whole-doc BM25 card"),
+    ("ltr-rerank", "p173_ltr_rerank", "train + score the learning-to-rank head"),
+    ("retrieval-scorecard", "p130_retrieval_scorecard", "nDCG@10/MRR/hits of all five rankers"),
+    ("classifier-auc", "p113_auc", "exact Mann-Whitney ROC-AUC of the NB scorer"),
+    ("classifier-pr-auc", "p155_pr_auc", "exact average precision (PR-AUC) vs prevalence"),
+    ("operating-points", "p157_operating_points", "precision/recall/F1 per candidate LLR threshold"),
+    ("repetition-signals", "p158_repetition", "Gopher repetition signals (top/dup n-gram fracs)"),
+    ("ppl-buckets", "p114_ppl_buckets", "CCNet head/middle/tail perplexity terciles"),
+    ("domain-cap", "p115_domain_cap", "per-domain top-N quality caps"),
+    ("collocations", "p116_pmi", "PMI collocation top-100"),
+    ("train-classifier", "p117_lr_classifier", "12-round integer-exact LR quality classifier"),
+    ("wordpiece-train", "p118_wordpiece", "WordPiece merge training (likelihood-ratio rule)"),
+    ("entropy", "p121_entropy", "per-doc char/token Shannon entropy"),
+    ("residual-pq", "p122_residual_pq", "residual IVF-PQ recall ladder on the fixture"),
+    ("doc-features", "p123_doc_features", "wide per-doc feature-store row"),
+    ("calibration", "p124_calibration", "LR reliability diagram (exact integers)"),
+    ("dedup-sweep", "p125_dedup_sweep", "near-dup threshold sweep card"),
+    ("domain-drift", "p126_domain_drift", "per-source KL drift in nano-nats"),
+    ("countmin", "p127_countmin", "audited count-min sketch calibration"),
+    ("hll", "p128_hll", "audited HyperLogLog calibration"))
+
+  /** `run-query` / `run-derivations` package name -> registry key: the
+    * engine's twin of the reference's named R packages (r_query.py
+    * resolves a package name to its script; here a name resolves to
+    * its registered Spark job).
+    */
+  private val queryPackages: Map[String, String] = Map(
+    "scdf_drug_era" -> "q34_scdf_era",
+    "lab_loinc" -> "q40_lab_loinc",
+    "obs_derivation" -> "q41_obs_derivation",
+    "dose" -> "q43_dose",
+    "pcornet_covid_slice" -> "q51_covid_slice",
+    "pcornet_adult_slice" -> "q52_adult_slice")
+
+  // Fail at class init, not at the first run of a mistyped command: a
+  // repeated command would silently shadow its twin, and a key missing
+  // from the registry would only throw when that command is run.
+  private val commandQuery: Map[String, String] = {
+    val dups = queryCommands.groupBy(_._1).collect {
+      case (c, rs) if rs.size > 1 => c }
+    require(dups.isEmpty, s"duplicate CLI commands: ${dups.mkString(", ")}")
+    val registry = SparkEntry.queries
+    val unknown = (queryCommands.map(_._2) ++ queryPackages.values)
+      .filterNot(registry.contains)
+    require(unknown.isEmpty,
+      s"CLI names unregistered queries: ${unknown.mkString(", ")}")
+    queryCommands.map { case (c, key, _) => c -> key }.toMap
+  }
+
+  private[graft] def usageText: String =
+    """usage: graft.Cli <command> <args>
         |  transform <siteDir> <site> <table> <outDir>   age+concept-name+site pipeline
         |  merge <outDir> <table> <siteDir>...           N-way site union
         |  split <dir> <table> <conceptCol> <outDir>     concept-set split (3 slices + other)
-        |  eras <dir> <outDir>                           condition-era build over lineitem intervals
-        |  obs-period <dir> <outDir>                     observation_period sync
-        |  checks <dir> <outDir>                         PK/FK/not-null validation counts
         |  subset <dir> <table> <keyCol> <outDir>        cohort subsetting
-        |  sessionize <dir> <outDir>                     30-min event sessions
         |  dedup-exact <dir> <outDir>                    exact document dedup
-        |  dedup-keep-longest <dir> <outDir>             exact dedup, longest-raw-text survivor policy
-        |  dedup-minhash <dir> <outDir>                  MinHash+LSH near-dup pairs
-        |  web-records <dir> <outDir>                    WARC record census over the capture fixture
-        |  web-extract <dir> <outDir>                    HTML main-text extraction from WARC captures
-        |  web-admission <dir> <outDir>                  crawl front end: WARC -> HTTP -> HTML -> verdict
         |  web-ingest <capturesDir> <outDir>             admission verdicts over a real captures parquet
         |                                                (doc_id, warc) — the production crawl path
-        |  ann <dir> <outDir>                            cosine top-k for the query batch
         |  text-stats <dir> <outDir>                     lang-id + quality + token counts
-        |  media-meta <dir> <outDir>                     multimodal payload metadata
         |  views <dir> <prefix>                          register temp views, print DDL
         |  ext-id-map <dir> <inCsv> <outCsv>             CSV external-id mapping
-        |  scdf-era <dir> <outDir>                       SCDF drug-era derivation package
-        |  registry-checks <dir> <outDir>                model-driven PK/FK/not-null report
-        |  stats <dir> <outDir>                          ANALYZE statistics pass
-        |  bad-rows <dir> <outDir>                       per-domain orphan samples
-        |  union-view <dir> <outDir>                     split slices + UNION ALL view
         |  idmap-copy <fromDir> <toDir> <table>          copy id map into next cycle store
-        |  subset-any <dir> <outDir>                     OR-of-EXISTS cohort subsetting
-        |  lab-loinc <dir> <outDir>                      LOINC lab remap derivation package
         |  layout-write <dir> <table> <outDir>           write per registry layout hint
-        |  obs-derivation <dir> <outDir>                 concept-set observation derivation package
         |  run-derivations <dir> <outRoot>               all derivation packages, one dir per package
-        |  bmi <dir> <outDir>                            BMI derivation from ht/wt measurements
-        |  zscore <dir> <outDir>                         growth z-score derivation
         |  populate-last-id <storeDir> <table>           recompute id-map counter from the map
         |  cleanup <storeDir> <table>                    drop retained backup/staging store dirs
         |  views-sql [model] <source> <target> <outFile>  whole-model Oracle view DDL + grants to a SQL file
         |  explain <dir> <query>                         print a query's optimized physical plan
-        |  sync-obs <dir> <outDir>                       full obs-period sync (null-end fill + renumber)
-        |  dose <dir> <outDir>                           mg/kg dose derivation + drug_exposure write-back
-        |  cohort <dir> <outDir>                         union-of-domains cohort build
         |  subset-model <dir> <root> <outRoot>           registry-driven whole-schema cohort subset
         |  concept-groups <dir> <outRoot>                index-replacement concept-group tables
         |  prepdb <outFile> <site>...                    render registry CREATE TABLE DDL per site
@@ -113,6 +241,7 @@ object Cli {
         |                                                from the frozen eval posting artifact (p185 twin)
         |  stream-dedup-loop <dir> <outDir>              self-maintaining dedup gate: each batch checked against
         |                                                the index, then its admitted docs appended to it
+        |  stream-ann <dir> <outDir>                     ANN serving at ingest off the exported IVF-PQ artifacts
         |  stream-ann-loop <dir> <outDir>                self-maintaining ANN serving: each vector batch answered
         |                                                from the artifacts, then absorbed into them
         |  stream-cluster-assign <dir> <outDir>          online k-means cell routing at stream ingest
@@ -123,119 +252,25 @@ object Cli {
         |  kmeans <dir> <outDir> [iters]                 IVF centroid training (Lloyd, default 1 iteration)
         |  unigram-train <dir> <outDir> [iters]          unigram-LM tokenizer (SentencePiece-style hard-EM,
         |                                                default 2 Viterbi rounds; per-word segmentation out)
-        |  repetition <dir> <outDir>                     Gopher-style repetition quality signals
-        |  gopher-filter <dir> <outDir>                  Gopher rule-set boolean quality gates
-        |  c4-clean <dir> <outDir>                       C4 line filters + page gates + cleaned-text fp
-        |  quality-funnel <dir> <outDir>                 per-source survival through all three quality gates
-        |  unigram-lm <dir> <outDir>                     self-trained unigram-LM NLL (perplexity filter) per doc
-        |  cluster-best <dir> <outDir>                   near-dup clusters, highest-quality survivor per cluster
-        |  importance-sample <dir> <outDir>              quality-weighted acceptance sampling (portable hash)
-        |  dedup-image <dir> <outDir>                    perceptual image near-dup pairs (dHash + banded Hamming)
-        |  dedup-audio <dir> <outDir>                    audio near-dup pairs (scale-invariant energy contour)
-        |  dedup-substrings <dir> <outDir>               exact-substring scrub at arbitrary boundaries (md5-certified)
-        |  bpe-pairs <dir> <outDir>                      BPE merge-step adjacent-pair counts (top 20)
         |  bpe-train <dir> <outDir> [nMerges]            full BPE merge-loop training (default 3 merges)
         |  bpe-encode <dir> <outDir> [nMerges]           train then tokenize the corpus with the merge table
-        |  audio-features <dir> <outDir>                 peak/energy/zero-crossings from decoded WAV
-        |  dup-clusters <dir> <outDir>                   connected-component near-dup clusters + keep flags
-        |  scrub <dir> <outDir>                          PII/identifier redaction over event log lines
-        |  line-dedup <dir> <outDir>                     global segment dedup (C4 rule, 10-word windows)
-        |  segment-scrub <dir> <outDir>                  C4 removal: rebuild docs without duplicated segments
-        |  semantic-dedup <dir> <outDir>                 SemDeDup-style embedding-cluster dedup
-        |  vocab <dir> <outDir>                          top-50 token vocabulary (tokenizer prep)
-        |  oov-rate <dir> <outDir>                       per-doc out-of-vocabulary rate vs that vocab
-        |  length-quantiles <dir> <outDir>               per-source token-length p25/p50/p75 (nearest-rank)
-        |  mix-weights <dir> <outDir>                    equal-share mixture re-weighting per source
-        |  source-overlap <dir> <outDir>                 cross-source near-dup mirror matrix
         |  histogram <dir> <table> <column> <outDir>     10-bucket equi-width column histogram (ANALYZE depth)
-        |  export-jsonl <dir> <outDir>                   documents out as line-delimited JSON
         |  import-jsonl <inDir> <outDir>                 JSONL corpus in (schema-checked) -> parquet
         |  vacuum <tableDir> [targetMB]                  compact a parquet dir's small files in place
         |  ingest-dedup <dir> <batchDir> <outDir>        idempotent corpus append (content-hash anti-join)
         |  ingest-bloom <dir> <batchDir> <outDir>        same append, bloom-prefiltered (zero-shuffle scale path)
         |  ingest-loop <dir> <batchDir> <outDir>         full incremental cycle: admit, diff, delta pairs, merge clusters
-        |  pq-codes <dir> <outDir>                       product-quantization codes per vector
-        |  pq-ann <dir> <outDir>                         ADC top-k over PQ codes
-        |  pq-train <dir> <outDir>                       trained-codebook PQ codes (per-subspace Lloyd)
-        |  pq-ann-trained <dir> <outDir>                 ADC top-k against the trained codebook
-        |  hard-negatives <dir> <outDir>                 top-k below the near-dup ceiling
         |  curate <dir> <outDir>                         quality -> exact+near dedup -> decontaminate -> shard
         |  transform-one <siteDir> <site> <table> <step> <outDir>  one stock step: age|concept-name|site
         |  copy-derivation <dir> <kind> <outDir>         append derived rows: bmi|bmiz|ht-z|wt-z
         |  pcornet-slice <dir> <minY> <maxY> <outRoot>   age-banded cohort + whole-schema subset
-        |  covid-slice <dir> <outDir>                    event-marked cohort slice (counts report)
-        |  adult-slice <dir> <outDir>                    age>=21 cohort slice (counts report)
         |  run-query <package> <dir> <outDir>            dispatch one named query package (run_r_query)
         |  unpartition <partDir> <outDir>                flatten a partitioned layout
         |  id-transform <dir> <table> <key> <store> <outDir>  extend durable id map + rewrite key
         |  create-id-maps <dir> <table> <storeDir>       seed a store from a table's existing pk
-        |  search <dir> <outDir>                         BM25 top-10 for the prefix query batch
-        |  ql-search <dir> <outDir>                      Dirichlet query-likelihood top-10
-        |  prf-search <dir> <outDir>                     two-pass pseudo-relevance-feedback BM25
-        |  hybrid-search <dir> <outDir>                  sparse+dense reciprocal-rank fusion
-        |  phrase-search <dir> <outDir>                  BM25 re-ranked by exact-phrase containment
-        |  bm25f-search <dir> <outDir>                   fielded BM25F (title x3 / body x1)
-        |  snippets <dir> <outDir>                       best-matching 8-token window per result
-        |  proximity-search <dir> <outDir>               BM25 + pairwise term-proximity boost
-        |  spell-suggest <dir> <outDir>                  vocabulary "did you mean" (bigram-index Levenshtein)
-        |  ranking-significance <dir> <outDir>           paired sign-flip test of bm25f vs each ranker
-        |  wordpiece-encode <dir> <outDir>               train WordPiece then tokenize the corpus
-        |  dedup-hubs <dir> <outDir>                     near-dup graph PageRank (template hub scores)
-        |  classifier-agreement <dir> <outDir>           Cohen's kappa between the NB and LR classifiers
-        |  cluster-quality <dir> <outDir>                k-means elbow card (inertia + silhouette per k)
-        |  dedup-triangles <dir> <outDir>                near-dup graph triangle counts (clique vs star)
-        |  dedup-kcore <dir> <outDir>                    near-dup graph k-core peel (cohesion cut depth)
-        |  dedup-retrieval-impact <dir> <outDir>         BM25 quality card before vs after the dedup cut
-        |  detector-agreement <dir> <outDir>             ARI between the Jaccard and SimHash partitions
-        |  chi-square <dir> <outDir>                     top-50 tokens by label association (feature selection)
-        |  pmi-expansion <dir> <outDir>                  thesaurus-expanded BM25 vs flat, scorecarded
-        |  packing-efficiency <dir> <outDir>             packed vs padded chunk bill per source
-        |  bootstrap-ci <dir> <outDir>                   bootstrap percentile CI for BM25's MRR
-        |  vocab-growth <dir> <outDir>                   Heaps-law card over hash-nested subcorpora
-        |  hdr-quantiles <dir> <outDir>                  audited HDR-histogram quantile sketch
-        |  survivor-policies <dir> <outDir>              min-id vs longest vs best-quality survivor card
-        |  rate-spikes <dir> <outDir>                    median+3MAD hourly event-rate anomalies
-        |  source-dup-rates <dir> <outDir>               per-source near-dup pollution card
-        |  split-leakage <dir> <outDir>                  near-dup clusters straddling train/valid/test
-        |  split-repair <dir> <outDir>                   cluster-routed split migration matrix (the fix)
-        |  epoch-schedule <dir> <outDir>                 per-source epochs under the 4-epoch ceiling
-        |  global-shard-manifest <dir> <outDir>          whole-corpus token placement into training shards
-        |  bm25-hard-negatives <dir> <outDir>            DPR-style lexical hard negatives per query
-        |  distinct-n <dir> <outDir>                     per-source distinct-1/2/3 diversity ratios
-        |  mix-interleave <dir> <outDir>                 stride-scheduled mixture-order shard manifest
-        |  crop-pairs <dir> <outDir>                     contrastive anchor/positive crop pairs
-        |  epoch-decorrelation <dir> <outDir>            shared adjacent pairs across epoch reshuffles
-        |  shard-mix <dir> <outDir>                      per-shard observed vs target mixture audit
         |  export-jsonl <dir> <outDir> [gzip|zstd]       export documents as JSONL (corpus interchange)
-        |  k-anonymity <dir> <outDir>                    behavioral-signature k-anonymity histogram
-        |  knn-probe <dir> <outDir>                      kNN label-probe accuracy over the embeddings
-        |  quantization-probe <dir> <outDir>             probe accuracy raw vs int8-quantized vectors
         |  export-shards <dir> <shardDir> <outDir>       write ordered JSONL shard files + certify
-        |  manifest-append <dir> <outDir>                append a delta batch to a mixture manifest
-        |  append-shards <dir> <outDir>                  extend a shard release in place + certify
-        |  release-diff <dir> <outDir>                   added/removed/modified card between releases
-        |  chunk-docs <dir> <outDir>                     overlapping-window RAG chunks with provenance
-        |  passage-retrieval <dir> <outDir>              MaxP chunk retrieval vs whole-doc BM25 card
         |  export-index <dir> <indexDir> <outDir>        write IVF-PQ serving artifacts + certify
-        |  ltr-rerank <dir> <outDir>                     train + score the learning-to-rank head
-        |  retrieval-scorecard <dir> <outDir>            nDCG@10/MRR/hits of all five rankers
-        |  classifier-auc <dir> <outDir>                 exact Mann-Whitney ROC-AUC of the NB scorer
-        |  classifier-pr-auc <dir> <outDir>              exact average precision (PR-AUC) vs prevalence
-        |  operating-points <dir> <outDir>               precision/recall/F1 per candidate LLR threshold
-        |  repetition-signals <dir> <outDir>             Gopher repetition signals (top/dup n-gram fracs)
-        |  ppl-buckets <dir> <outDir>                    CCNet head/middle/tail perplexity terciles
-        |  domain-cap <dir> <outDir>                     per-domain top-N quality caps
-        |  collocations <dir> <outDir>                   PMI collocation top-100
-        |  train-classifier <dir> <outDir>               12-round integer-exact LR quality classifier
-        |  wordpiece-train <dir> <outDir>                WordPiece merge training (likelihood-ratio rule)
-        |  entropy <dir> <outDir>                        per-doc char/token Shannon entropy
-        |  residual-pq <dir> <outDir>                    residual IVF-PQ recall ladder on the fixture
-        |  doc-features <dir> <outDir>                   wide per-doc feature-store row
-        |  calibration <dir> <outDir>                    LR reliability diagram (exact integers)
-        |  dedup-sweep <dir> <outDir>                    near-dup threshold sweep card
-        |  domain-drift <dir> <outDir>                   per-source KL drift in nano-nats
-        |  countmin <dir> <outDir>                       audited count-min sketch calibration
-        |  hll <dir> <outDir>                            audited HyperLogLog calibration
         |  stream-search <dir> <outDir>                  BM25 serving off the persisted impact index
         |  stream-phrase-search <dir> <outDir>           phrase-aware BM25 at ingest (impact + gram indexes)
         |  stream-entropy <dir> <outDir>                 entropy signals at stream ingest
@@ -247,8 +282,14 @@ object Cli {
         |  stream-hll <dir> <outDir>                     windowed HLL registers at stream ingest
         |  stream-countmin <dir> <outDir>                windowed count-min cells at stream ingest
         |  stream-hdr <dir> <outDir>                     windowed HDR quantile buckets at stream ingest
-        |(reference main.py snake_case subcommand names are accepted as aliases)
-        |""".stripMargin)
+        |""".stripMargin +
+      queryCommands.map { case (c, _, help) =>
+        s"  $c <dir> <outDir>".padTo(48, ' ') + help + "\n"
+      }.mkString +
+      "(reference main.py snake_case subcommand names are accepted as aliases)\n"
+
+  private def usage(): Nothing = {
+    System.err.println(usageText)
     sys.exit(2)
   }
 
@@ -325,7 +366,7 @@ object Cli {
   // A Map literal silently keeps only the last binding of a repeated
   // key, which once shadowed run_r_query -> run-query with a stray
   // second entry; fail loudly at class init instead.
-  private val aliases: Map[String, String] = {
+  private[graft] val aliases: Map[String, String] = {
     val dups = aliasPairs.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
     require(dups.isEmpty, s"duplicate CLI alias keys: ${dups.mkString(", ")}")
     aliasPairs.toMap
@@ -346,14 +387,6 @@ object Cli {
     math.max(1000L, bytes / 32)
   }
 
-  /** Stage the documents table into a stable ingest dir under `out`
-    * and open it as a file-source stream with a synthetic event time
-    * (the corpus has no timestamps; doc_id+1 seconds — +1 because an
-    * epoch-0 event time equals the initial watermark and the stateful
-    * operator would drop the row as late). The ingest dir must be
-    * stable across runs — the checkpoint records source paths — and is
-    * "_"-prefixed so batch reads of the sink skip it.
-    */
   /** Drain one streaming job to a parquet sink with AvailableNow —
     * the shared tail of every doc-stream subcommand.
     */
@@ -487,6 +520,14 @@ object Cli {
     fs.delete(txnP, true)
   }
 
+  /** Stage the documents table into a stable ingest dir under `out`
+    * and open it as a file-source stream with a synthetic event time
+    * (the corpus has no timestamps; doc_id+1 seconds — +1 because an
+    * epoch-0 event time equals the initial watermark and the stateful
+    * operator would drop the row as late). The ingest dir must be
+    * stable across runs — the checkpoint records source paths — and is
+    * "_"-prefixed so batch reads of the sink skip it.
+    */
   private def stagedDocStream(spark: SparkSession, dir: String,
       out: String): DataFrame = {
     val schema = Tables.read(spark, dir, "documents").schema
@@ -560,20 +601,6 @@ object Cli {
     (ctx, base, ageCols)
   }
 
-  /** The query-package registry `run-query` / `run-derivations`
-    * dispatch over — the engine's twin of the reference's named R
-    * packages (r_query.py resolves a package name to its script; here
-    * a name resolves to its registered Spark job).
-    */
-  private val queryPackages: Map[String, (SparkSession, String) => DataFrame] =
-    Map(
-      "scdf_drug_era" -> (queries.ParityQueries3.q34ScdfEra _),
-      "lab_loinc" -> (queries.ParityQueries3.q40LabLoinc _),
-      "obs_derivation" -> (queries.ParityQueries3.q41ObsDerivation _),
-      "dose" -> (queries.ParityQueries4.q43Dose _),
-      "pcornet_covid_slice" -> (queries.ParityQueries4.q51CovidSlice _),
-      "pcornet_adult_slice" -> (queries.ParityQueries4.q52AdultSlice _))
-
   def run(spark: SparkSession, args0: List[String]): Unit = {
     // kind-carrying alternate names rewrite to the generic command +
     // kind argument; plain alternate names just rename
@@ -609,6 +636,9 @@ object Cli {
   }
 
   private def dispatch(spark: SparkSession, args: List[String]): Unit = args match {
+    case cmd :: dir :: out :: Nil if commandQuery.contains(cmd) =>
+      write(SparkEntry.queries(commandQuery(cmd))(spark, dir), out)
+
     case "transform" :: siteDir :: site :: table :: out :: Nil =>
       val (ctx, base, ageCols) = transformParts(spark, siteDir, site, table)
       // the full stock pipeline, as the usage text promises: age (on
@@ -634,49 +664,13 @@ object Cli {
         "large" -> (31L to 45L).toSet))
         .foreach { case (name, slice) => write(slice.drop("__k"), s"$out/$name") }
 
-    case "eras" :: dir :: out :: Nil =>
-      write(queries.ParityQueries.q10Era(spark, dir), out)
-
-    case "obs-period" :: dir :: out :: Nil =>
-      write(queries.ParityQueries.q11ObsPeriod(spark, dir), out)
-
-    case "checks" :: dir :: out :: Nil =>
-      write(queries.ParityQueries.q18Checks(spark, dir), out)
-
     case "subset" :: dir :: table :: keyCol :: out :: Nil =>
       val facts = Tables.read(spark, dir, table)
       val cohort = facts.select(col(keyCol)).distinct().limit(100)
       write(SetOps.subsetByCohort(facts, cohort, Seq(keyCol)), out)
 
-    case "sessionize" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p13Sessionize(spark, dir), out)
-
-    case "dedup-keep-longest" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p67KeepLongest(spark, dir), out)
-
     case "dedup-exact" :: dir :: out :: Nil =>
       write(Dedup.exact(Tables.read(spark, dir, "documents"), "doc_id", "text"), out)
-
-    case "dedup-image" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p77ImageNearDup(spark, dir), out)
-
-    case "dedup-audio" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p80AudioNearDup(spark, dir), out)
-
-    case "dedup-substrings" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p78ExactSubstrings(spark, dir), out)
-
-    case "dedup-minhash" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p02MinhashLsh(spark, dir), out)
-
-    case "web-records" :: dir :: out :: Nil =>
-      write(queries.WebQueries.p192WarcRecords(spark, dir), out)
-
-    case "web-extract" :: dir :: out :: Nil =>
-      write(queries.WebQueries.p193HtmlExtract(spark, dir), out)
-
-    case "web-admission" :: dir :: out :: Nil =>
-      write(queries.WebQueries.p194WebAdmission(spark, dir), out)
 
     // the production crawl path: a captures parquet (doc_id, warc)
     // from any fetcher, gated without any fixture assumptions
@@ -687,128 +681,6 @@ object Cli {
         .as[Web.WebCapture]
       write(Web.admissionVerdicts(Web.extractCaptures(caps).toDF()), out)
 
-    case "ann" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p05CosineTopK(spark, dir), out)
-
-    // lexical retrieval + classifier-evaluation layer (round 10)
-    case "search" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p112Bm25(spark, dir), out)
-    case "ql-search" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p129Ql(spark, dir), out)
-    case "classifier-pr-auc" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p155PrAuc(spark, dir), out)
-    case "operating-points" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p157OperatingPoints(spark, dir), out)
-    case "repetition-signals" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p158Repetition(spark, dir), out)
-    case "split-repair" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p159SplitRepair(spark, dir), out)
-    case "classifier-auc" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p113Auc(spark, dir), out)
-    case "ppl-buckets" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p114PplBuckets(spark, dir), out)
-    case "domain-cap" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p115DomainCap(spark, dir), out)
-    case "collocations" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p116Pmi(spark, dir), out)
-    case "train-classifier" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p117LrClassifier(spark, dir), out)
-    case "wordpiece-train" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p118Wordpiece(spark, dir), out)
-    case "hybrid-search" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p119HybridRrf(spark, dir), out)
-    case "prf-search" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p120Prf(spark, dir), out)
-    case "entropy" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p121Entropy(spark, dir), out)
-    case "residual-pq" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p122ResidualPq(spark, dir), out)
-    case "doc-features" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p123DocFeatures(spark, dir), out)
-    case "calibration" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p124Calibration(spark, dir), out)
-    case "dedup-sweep" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p125DedupSweep(spark, dir), out)
-    case "domain-drift" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p126DomainDrift(spark, dir), out)
-    case "countmin" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p127CountMin(spark, dir), out)
-    case "hll" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p128Hll(spark, dir), out)
-
-    // retrieval quality + phrase/fielded queries (round 11)
-    case "retrieval-scorecard" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p130RetrievalScorecard(spark, dir), out)
-    case "phrase-search" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p131PhraseRerank(spark, dir), out)
-    case "bm25f-search" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p132Bm25f(spark, dir), out)
-    case "snippets" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p133Snippets(spark, dir), out)
-    case "proximity-search" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p134Proximity(spark, dir), out)
-    case "spell-suggest" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p135SpellSuggest(spark, dir), out)
-    case "ranking-significance" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p136Significance(spark, dir), out)
-    case "wordpiece-encode" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p137WordpieceEncode(spark, dir), out)
-    case "dedup-hubs" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p138PagerankHubs(spark, dir), out)
-    case "classifier-agreement" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p139ClassifierAgreement(spark, dir), out)
-    case "cluster-quality" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p140ClusterQuality(spark, dir), out)
-    case "dedup-triangles" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p141Triangles(spark, dir), out)
-    case "dedup-kcore" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p154KCore(spark, dir), out)
-    case "dedup-retrieval-impact" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p156DedupRetrievalImpact(spark, dir), out)
-    case "detector-agreement" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p142DetectorAgreement(spark, dir), out)
-    case "chi-square" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p143ChiSquare(spark, dir), out)
-    case "pmi-expansion" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p144PmiExpansion(spark, dir), out)
-    case "packing-efficiency" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p145PackingEfficiency(spark, dir), out)
-    case "bootstrap-ci" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p146BootstrapCi(spark, dir), out)
-    case "vocab-growth" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p147VocabGrowth(spark, dir), out)
-    case "hdr-quantiles" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p148HdrQuantiles(spark, dir), out)
-    case "survivor-policies" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p149SurvivorPolicies(spark, dir), out)
-    case "rate-spikes" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p150RateSpikes(spark, dir), out)
-    case "source-dup-rates" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p151SourceDupRates(spark, dir), out)
-    case "split-leakage" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p152SplitLeakage(spark, dir), out)
-    case "epoch-schedule" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p153EpochSchedule(spark, dir), out)
-    case "global-shard-manifest" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p160ShardManifest(spark, dir), out)
-    case "bm25-hard-negatives" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p161HardNegatives(spark, dir), out)
-    case "distinct-n" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p162DistinctN(spark, dir), out)
-    case "mix-interleave" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p163MixInterleave(spark, dir), out)
-    case "crop-pairs" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p164CropPairs(spark, dir), out)
-    case "epoch-decorrelation" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p166EpochDecorrelation(spark, dir), out)
-    case "shard-mix" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p165ShardMix(spark, dir), out)
-    case "k-anonymity" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p168KAnonymity(spark, dir), out)
-    case "knn-probe" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p169KnnProbe(spark, dir), out)
-    case "quantization-probe" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p170QuantizationProbe(spark, dir), out)
     // corpus release: write ordered JSONL shard files in p160 manifest
     // order and print the read-back certification card
     case "export-shards" :: dir :: shardDir :: out :: Nil =>
@@ -817,25 +689,18 @@ object Cli {
         "text", shardToks = 4096L)
       pipeline.Shards.write(docs, "doc_id", "text", man, shardDir)
       write(pipeline.Shards.certify(spark, shardDir), out)
+
     case "export-index" :: dir :: indexDir :: out :: Nil =>
       pipeline.Similarity.exportServingIndex(
         Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
         coarseFilter = col("vec_id") % 25 === 0,
         pqFilter = col("vec_id") < 8, m = 4, dim = 64, indexDir)
       write(pipeline.Similarity.certifyServingIndex(spark, indexDir), out)
-    case "passage-retrieval" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p177PassageRetrieval(spark, dir), out)
-    case "chunk-docs" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p176DocChunks(spark, dir), out)
-    case "release-diff" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p175ReleaseDiff(spark, dir), out)
-    case "append-shards" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p174ShardAppend(spark, dir), out)
-    case "manifest-append" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p172ManifestAppend(spark, dir), out)
-    case "ltr-rerank" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries2.p173LtrRerank(spark, dir), out)
-    // corpus interchange: parquet -> JSONL export (optionally gzip)
+
+    // corpus interchange: documents out as line-delimited JSON (the
+    // de-facto LLM-corpus format, optionally gzip/zstd), and back in
+    // (import-jsonl) with an explicit schema so types survive the
+    // roundtrip
     case "export-jsonl" :: dir :: out :: rest if rest.lengthIs <= 1 =>
       pipeline.Jsonl.write(
         Tables.read(spark, dir, "documents"), out, rest.headOption)
@@ -893,21 +758,6 @@ object Cli {
       write(merged, s"$out/assignment")
       println(s"""{"ingest_loop":"$out","appended":${fresh.count()}}""")
 
-    case "pq-codes" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p48PqCodes(spark, dir), out)
-
-    case "pq-ann" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p49PqTopK(spark, dir), out)
-
-    case "pq-train" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p55PqTrained(spark, dir), out)
-
-    case "pq-ann-trained" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p58PqTrainedTopK(spark, dir), out)
-
-    case "hard-negatives" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p51HardNegatives(spark, dir), out)
-
     case "text-stats" :: dir :: out :: Nil =>
       val toks = TextFunctions.tokens(col("text"))
       write(Tables.read(spark, dir, "documents").select(
@@ -915,9 +765,6 @@ object Cli {
         TextFunctions.langId(toks).as("lang_pred"),
         size(toks).as("n_tokens"),
         TextFunctions.fingerprint(toks).as("fp")), out)
-
-    case "media-meta" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p12Multimodal(spark, dir), out)
 
     case "views" :: dir :: prefix :: Nil =>
       val tables = Seq("region", "nation", "customer", "supplier", "part",
@@ -930,29 +777,8 @@ object Cli {
       val (existing, lastId) = IdMapStore.load(spark, dir, "orders")
       ExternalIdMapper.mapCsvFile(spark, inCsv, outCsv, existing, lastId)
 
-    case "scdf-era" :: dir :: out :: Nil =>
-      write(queries.ParityQueries3.q34ScdfEra(spark, dir), out)
-
-    case "registry-checks" :: dir :: out :: Nil =>
-      write(queries.ParityQueries3.q35Registry(spark, dir), out)
-
-    case "stats" :: dir :: out :: Nil =>
-      write(queries.ParityQueries3.q37Stats(spark, dir), out)
-
-    case "bad-rows" :: dir :: out :: Nil =>
-      write(queries.ParityQueries3.q38BadRows(spark, dir), out)
-
-    case "union-view" :: dir :: out :: Nil =>
-      write(queries.ParityQueries3.q36UnionView(spark, dir), out)
-
     case "idmap-copy" :: fromDir :: toDir :: table :: Nil =>
       IdMapStore.copyCycle(spark, fromDir, toDir, table)
-
-    case "subset-any" :: dir :: out :: Nil =>
-      write(queries.ParityQueries3.q33OrExists(spark, dir), out)
-
-    case "lab-loinc" :: dir :: out :: Nil =>
-      write(queries.ParityQueries3.q40LabLoinc(spark, dir), out)
 
     case "layout-write" :: dir :: table :: out :: Nil =>
       val target = operators.Layout.write(
@@ -960,22 +786,14 @@ object Cli {
         graft.model.PedsnetModel.tpch.table(table), out)
       println(s"""{"written":"$target"}""")
 
-    case "obs-derivation" :: dir :: out :: Nil =>
-      write(queries.ParityQueries3.q41ObsDerivation(spark, dir), out)
-
     // run_derivations parity: every registered package in one pass,
     // each result under its package name
     case "run-derivations" :: dir :: outRoot :: Nil =>
-      queryPackages.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        write(fn(spark, dir), s"$outRoot/$name")
+      val registry = SparkEntry.queries
+      queryPackages.toSeq.sortBy(_._1).foreach { case (name, key) =>
+        write(registry(key)(spark, dir), s"$outRoot/$name")
         println(s"""{"package":"$name","out":"$outRoot/$name"}""")
       }
-
-    case "covid-slice" :: dir :: out :: Nil =>
-      write(queries.ParityQueries4.q51CovidSlice(spark, dir), out)
-
-    case "adult-slice" :: dir :: out :: Nil =>
-      write(queries.ParityQueries4.q52AdultSlice(spark, dir), out)
 
     // run_r_query parity (r_query.py:17-128): config-driven dispatch of
     // ONE named query package through the shared registry — the
@@ -984,18 +802,12 @@ object Cli {
     // registered Spark job and the test-data dir is the config
     case "run-query" :: pkg :: dir :: out :: Nil =>
       queryPackages.get(pkg) match {
-        case Some(fn) =>
-          write(fn(spark, dir), out)
+        case Some(key) =>
+          write(SparkEntry.queries(key)(spark, dir), out)
           println(s"""{"package":"$pkg","out":"$out"}""")
         case None => sys.error(
           s"unknown query package '$pkg' (have ${queryPackages.keys.toSeq.sorted.mkString(", ")})")
       }
-
-    case "bmi" :: dir :: out :: Nil =>
-      write(queries.ParityQueries2.q30Bmi(spark, dir), out)
-
-    case "zscore" :: dir :: out :: Nil =>
-      write(queries.ParityQueries2.q29Zscore(spark, dir), out)
 
     case "populate-last-id" :: storeDir :: table :: Nil =>
       val last = IdMapStore.populateLastId(spark, storeDir, table)
@@ -1032,15 +844,6 @@ object Cli {
         case None =>
           System.err.println(s"unknown query: $query"); sys.exit(2)
       }
-
-    case "sync-obs" :: dir :: out :: Nil =>
-      write(queries.ParityQueries4.q42SyncObs(spark, dir), out)
-
-    case "dose" :: dir :: out :: Nil =>
-      write(queries.ParityQueries4.q43Dose(spark, dir), out)
-
-    case "cohort" :: dir :: out :: Nil =>
-      write(queries.ParityQueries4.q44Cohort(spark, dir), out)
 
     case "concept-groups" :: dir :: outRoot :: Nil =>
       val groups = ConceptGroups.build(
@@ -1839,30 +1642,6 @@ object Cli {
           array_join(col("pieces"), " ").as("segmentation"),
           col("cost_micro")), out)
 
-    case "repetition" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p20Repetition(spark, dir), out)
-
-    case "gopher-filter" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p61GopherRules(spark, dir), out)
-
-    case "c4-clean" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p64C4Lines(spark, dir), out)
-
-    case "quality-funnel" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p66QualityFunnel(spark, dir), out)
-
-    case "unigram-lm" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p68UnigramLm(spark, dir), out)
-
-    case "cluster-best" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p69ClusterBest(spark, dir), out)
-
-    case "importance-sample" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p70ImportanceSample(spark, dir), out)
-
-    case "bpe-pairs" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p62BpePairs(spark, dir), out)
-
     case "bpe-train" :: dir :: out :: rest if rest.size <= 1 =>
       val n = rest.headOption.map(_.toInt).getOrElse(3)
       write(pipeline.Bpe.train(
@@ -1880,49 +1659,8 @@ object Cli {
       write(pipeline.Bpe.encodeWith(docs, "doc_id", "text", vocab), out)
       pipeline.Bpe.releaseVocab(vocab)
 
-    case "audio-features" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p63AudioFeatures(spark, dir), out)
-
-    case "dup-clusters" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p37DupClusters(spark, dir), out)
-
-    case "scrub" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p38PiiScrub(spark, dir), out)
-
-    case "line-dedup" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p39LineDedup(spark, dir), out)
-
-    case "segment-scrub" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p65SegmentScrub(spark, dir), out)
-
-    case "semantic-dedup" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p40SemanticDedup(spark, dir), out)
-
-    case "vocab" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p41Vocab(spark, dir), out)
-
-    case "oov-rate" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p42OovRate(spark, dir), out)
-
-    case "length-quantiles" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p43LengthQuantiles(spark, dir), out)
-
-    case "mix-weights" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p44MixWeights(spark, dir), out)
-
-    case "source-overlap" :: dir :: out :: Nil =>
-      write(queries.PipelineQueries.p45SourceOverlap(spark, dir), out)
-
     case "histogram" :: dir :: table :: column :: out :: Nil =>
       write(Statistics.histogram(Tables.read(spark, dir, table), column, 10), out)
-
-    // JSONL corpus interchange: documents out as line-delimited JSON
-    // (the de-facto LLM-corpus format), and back in with an explicit
-    // schema so types survive the roundtrip
-    case "export-jsonl" :: dir :: out :: Nil =>
-      Tables.read(spark, dir, "documents")
-        .write.mode("overwrite").json(out)
-      println(s"""{"export_jsonl":"$out"}""")
 
     case "import-jsonl" :: in :: out :: Nil =>
       val docsSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -1996,8 +1734,6 @@ object Cli {
       val r = operators.Compact.compact(spark, dir, target)
       println(s"""{"vacuum":"$dir","files_before":${r.filesBefore},"files_after":${r.filesAfter},"bytes":${r.bytes}}""")
 
-    // subset_by_cohort parity: one subset dir per FK-reachable table,
-    // plus the per-table count report the reference logs
     // the reference exposes each stock transform step as its own
     // subcommand (main.py age_transform / concept_transform /
     // site_transform); step here = age | concept-name | site
@@ -2071,6 +1807,8 @@ object Cli {
       IdMapStore.save(m, last, storeDir, table)
       println(s"""{"created":"$table","last_id":$last}""")
 
+    // subset_by_cohort parity: one subset dir per FK-reachable table,
+    // plus the per-table count report the reference logs
     case "subset-model" :: dir :: root :: outRoot :: Nil =>
       val model = graft.model.PedsnetModel.tpch
       val rootDef = model.table(root)

@@ -43,8 +43,7 @@ object GraftSession {
       // stage the JIT would abandon falls back to interpreted expressions
       // instead. Same reasoning holds on a 1000-executor cluster: an
       // interpreter-stuck hot loop is a throughput bug at any scale.
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
+      .config("spark.sql.codegen.hugeMethodLimit", "8000")
       // the synthetic events table carries parquet TIMESTAMP(NANOS); Spark
       // has no nanos TimestampType, so surface them as raw Long nanos and
       // convert explicitly at the read site (see Tables.events).

@@ -175,8 +175,9 @@ case class HashedDocVector(child: Expression, dim: Int) extends UnaryExpression 
 
 /** MinHash signature over a string array: for seed j,
   * min over elements of `(a_j * (hash60(s) % P) + b_j) % P`; empty
-  * arrays yield P for every seed — exactly
-  * [[graft.pipeline.TextFunctions.minhashSignature]].
+  * arrays yield P for every seed — exactly the HOF form
+  * `coalesce(array_min(transform(hashes, h -> (a_j * h + b_j) % P)), P)`
+  * per seed (PipelineSpec's reference).
   */
 case class MinHashSig(child: Expression, seedsA: Array[Long], seedsB: Array[Long])
     extends UnaryExpression with CodegenFallback {
@@ -208,9 +209,9 @@ case class MinHashSig(child: Expression, seedsA: Array[Long], seedsB: Array[Long
     copy(child = newChild)
 }
 
-/** SimHash over a string array, `bits` wide — exactly
-  * [[graft.pipeline.TextFunctions.simhash]]: bit i set iff the ±1 vote
-  * sum over elements' hash60 bit i is positive.
+/** SimHash over a string array, `bits` wide — exactly the HOF
+  * `aggregate` vote per bit (PipelineSpec's reference): bit i set iff
+  * the ±1 vote sum over elements' hash60 bit i is positive.
   */
 case class SimHash(child: Expression, bits: Int)
     extends UnaryExpression with CodegenFallback {
@@ -246,10 +247,13 @@ case class SimHash(child: Expression, bits: Int)
     copy(child = newChild)
 }
 
-/** Distinct word k-shingles of a token array — exactly
-  * [[graft.pipeline.TextFunctions.shingles]]: space-joined windows of
-  * k tokens, de-duplicated in first-occurrence order (matching
-  * `array_distinct`), empty when fewer than k tokens. The HOF form
+/** Distinct word k-shingles of a token array — exactly the HOF
+  * `array_distinct(transform(sequence(1, n - k + 1),
+  * i -> concat_ws(" ", slice(toks, i, k))))` (KernelEquivalenceSpec's
+  * reference): space-joined windows of k tokens, de-duplicated in
+  * first-occurrence order, empty when fewer than k tokens, null for a
+  * null array ([[graft.pipeline.TextFunctions.shingles]] maps that to
+  * an empty array). The HOF form
   * pays an interpreted lambda + array `slice` + `concat_ws` expression
   * tree per window; this kernel is one compiled loop over the token
   * array, and dominates the dedup operators' scan cost.

@@ -298,7 +298,7 @@ object Curation {
       domainCol: String, weights: DataFrame, shardToks: Long,
       salt: String = "mix", buckets: Int = 256): DataFrame =
     mixturePlace(df, idCol, textCol, domainCol, weights, shardToks,
-      salt, buckets, resumed = None)
+      salt, buckets, seq0 = Nil, tok0 = 0L)
 
   /** Incremental manifest append — the batch twin of the streaming
     * stride scheduler ([[graft.streaming.StreamingJobs
@@ -318,13 +318,13 @@ object Curation {
     * WITHIN each appended batch — append never reshuffles history,
     * the same trade the stream makes.
     *
-    * Scale shape: resumed state is ONE broadcast row (a per-domain
-    * count map plus the token mass) from one aggregate over the
-    * manifest, so the plan reads `existing` twice — the union and
-    * that aggregate — and a chain of k appends embeds the base
-    * manifest 2^k times; the delta rides the identical two-level
-    * scans as the full build, so appending Δ docs costs O(Δ), not
-    * O(corpus).
+    * Scale shape: the resumed state (per-domain counts and the token
+    * mass) is collected from ONE aggregate over the manifest — a
+    * domains-row result, as k-means collects its centroids — and
+    * enters the placement as literals, so the appended plan embeds
+    * `existing` once (the union) and a chain of k appends grows
+    * linearly; the delta rides the identical two-level scans as the
+    * full build, so appending Δ docs costs O(Δ), not O(corpus).
     */
   def mixtureAppend(existing: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, domainCol: String,
@@ -333,27 +333,26 @@ object Curation {
     val cols = Seq(col(idCol), col(domainCol), col("n_toks"),
       col("vtime"), col("chunk_idx"), col("chunk_off"))
     val resumed = existing.groupBy(col(domainCol))
-      .agg(count(lit(1)).as("__c"), sum(col("n_toks")).as("__t"))
-      .agg(map_from_entries(collect_list(struct(col(domainCol),
-          col("__c")))).as("__seq0"),
-        coalesce(sum(col("__t")), lit(0L)).as("__tok0"))
+      .agg(count(lit(1)), coalesce(sum(col("n_toks")), lit(0L)))
+      .collect()
     existing.select(cols: _*).unionByName(
       mixturePlace(delta, idCol, textCol, domainCol, weights,
-        shardToks, salt, buckets, Some(resumed))
+        shardToks, salt, buckets,
+        seq0 = resumed.map(r => r.get(0) -> r.getLong(1)).toSeq,
+        tok0 = resumed.map(_.getLong(2)).sum)
         .select(cols: _*))
   }
 
-  /** The placement core shared by [[mixtureInterleave]] (no resumed
-    * state — both bases fold to literal zero, leaving the full
-    * build's plan untouched) and [[mixtureAppend]] (one broadcast
-    * row: `__seq0` maps each domain to its sequence base — absent,
-    * i.e. 0, for a domain new in the delta — and `__tok0` is the
-    * global token base).
+  /** The placement core shared by [[mixtureInterleave]] (empty bases:
+    * the full build's plan is untouched) and [[mixtureAppend]]:
+    * `seq0` holds each resumed domain's sequence base — absent, i.e.
+    * 0, for a domain new in the delta — and `tok0` is the global
+    * token base.
     */
   private def mixturePlace(df: DataFrame, idCol: String,
       textCol: String, domainCol: String, weights: DataFrame,
       shardToks: Long, salt: String, buckets: Int,
-      resumed: Option[DataFrame]): DataFrame = {
+      seq0: Seq[(Any, Long)], tok0: Long): DataFrame = {
     require(shardToks > 0, "shardToks must be positive")
     require(buckets > 0, "buckets must be positive")
     val hBucketWidth = lit((1L << 60) / buckets + 1L)
@@ -371,13 +370,12 @@ object Curation {
           .partitionBy(col(domainCol)).orderBy(col("__hb"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col(domainCol), col("__hb"), col("__coff"))
-    val offset = base.join(broadcast(domOffsets), Seq(domainCol, "__hb"))
-    val seqd = resumed.fold(offset)(r => offset.crossJoin(broadcast(r))
-      .withColumn("__i0",
-        coalesce(col("__seq0")(col(domainCol)), lit(0L))))
     val iExpr = col("__coff") + row_number().over(withinDom).cast("long")
-    val keyed = seqd
-      .withColumn("__i", resumed.fold(iExpr)(_ => col("__i0") + iExpr))
+    val i0 = map(seq0.flatMap { case (d, c) => Seq(lit(d), lit(c)) }: _*)
+    val keyed = base.join(broadcast(domOffsets), Seq(domainCol, "__hb"))
+      .withColumn("__i",
+        if (seq0.isEmpty) iExpr
+        else coalesce(i0(col(domainCol)), lit(0L)) + iExpr)
       .join(broadcast(weights), Seq(domainCol))
       .withColumn("vtime",
         when(col("weight_micro") <= 0L, raise_error(concat(
@@ -402,10 +400,9 @@ object Curation {
           .orderBy(col("__vb"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("__vb"), col("__off"))
-    val tok0 = resumed.fold(lit(0L))(_ => col("__tok0"))
     vb.join(broadcast(vOffsets), Seq("__vb"))
       .withColumn("start_tok",
-        tok0 + col("__off") + sum(col("n_toks")).over(withinV)
+        lit(tok0) + col("__off") + sum(col("n_toks")).over(withinV)
           - col("n_toks"))
       .select(col(idCol), col(domainCol), col("n_toks"), col("vtime"),
         call_function("div", col("start_tok"), lit(shardToks))
@@ -1481,8 +1478,8 @@ object Curation {
     * ([[graft.functions.FunnelCounters]]) are computed ONCE per row
     * and feed all three gates; every ratio and threshold, and
     * [[TF.qualityScore]], stays a Column expression over them, so the
-    * doubles come from the same Spark ops (an empty text divides by
-    * its zero length, as before). Output carries `score_keep`,
+    * doubles come from the same Spark ops (an empty text's punctuation
+    * ratio is 0.0, [[TF.punctRatio]]). Output carries `score_keep`,
     * the Gopher `keep`, and the C4 `page_keep` per document plus any
     * `carry` columns.
     */
@@ -1497,7 +1494,7 @@ object Curation {
     val scored = gated.withColumn("score_keep",
       when(TF.qualityScore(col("n_toks"),
         fc("sum_len").cast("double") / nToks,
-        fc("n_punct").cast("double") / fc("n_chars").cast("double"),
+        TF.punctRatio(fc("n_punct"), fc("n_chars")),
         fc("n_en_stop").cast("double") / nToks) >= 0.5, 1L).otherwise(0L))
     c4Flags(scored, idCol, textCol,
       carry = carry ++ Seq("keep", "score_keep"),

@@ -91,7 +91,7 @@ object Dedup {
 
   /** Shared prep: id, distinct k-shingle set (native kernel — one
     * compiled loop per document; semantics identical to the HOF
-    * [[TextFunctions.shingles]], pinned by KernelEquivalenceSpec).
+    * formulation, pinned by KernelEquivalenceSpec).
     */
   def shingled(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     spread(df).select(
@@ -124,8 +124,8 @@ object Dedup {
 
   /** Prepared (doc, sh, sig) frame for [[minhashPairs]] — the minhash
     * signature runs through the native kernel (one md5 per shingle,
-    * compiled loop; semantics identical to the HOF
-    * minhashSignature(shingleHashes(sh), seeds)). Split out so plan
+    * compiled loop; semantics identical to the HOF reference in
+    * PipelineSpec). Split out so plan
     * tests can build the lazy [[minhashPlan]] over it.
     */
   private[graft] def minhashDocs(df: DataFrame, idCol: String,

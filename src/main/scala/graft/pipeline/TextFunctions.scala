@@ -49,15 +49,16 @@ object TextFunctions {
   def bpeTokens(text: Column): Column =
     regexp_extract_all(lowerIcu(text), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))
 
-  /** Distinct word k-shingles of a token array. Rows with fewer than
-    * `k` tokens yield an empty array.
+  /** Distinct word k-shingles of a token array, in first-occurrence
+    * order. Rows with fewer than `k` tokens, or a null array, yield an
+    * empty array. One native expression ([[graft.functions.ShinglesK]],
+    * which gives null for a null array) with exactly the value of
+    * `array_distinct` over the `concat_ws(" ", slice(toks, i, k))`
+    * windows.
     */
   def shingles(toks: Column, k: Int): Column =
-    when(size(toks) >= k,
-      array_distinct(transform(
-        sequence(lit(1), size(toks) - (k - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(k))))))
-      .otherwise(array().cast("array<string>"))
+    coalesce(HashKernelFunctions.shingles(toks, k),
+      array().cast("array<string>"))
 
   /** Base hashes for a shingle array: `hash60(s) % P`, one md5 pass per
     * shingle regardless of how many MinHash permutations consume it.
@@ -68,31 +69,6 @@ object TextFunctions {
   /** Deterministic universal-hash seeds (a odd, b arbitrary, < P). */
   def minhashSeeds(n: Int): Seq[(Long, Long)] =
     (1 to n).map(j => (2L * j * 1000003L + 1L, j * 7919L))
-
-  /** MinHash signature: for each seed (a,b), min over base hashes of
-    * `(a*h + b) % P`. Empty shingle set → array of P (never matches).
-    */
-  def minhashSignature(baseHashes: Column, seeds: Seq[(Long, Long)]): Column =
-    array(seeds.map { case (a, b) =>
-      coalesce(array_min(transform(baseHashes, h => (lit(a) * h + lit(b)) % P)), lit(P))
-    }: _*)
-
-  /** SimHash over a token array, `bits` wide (≤ 64; the token hash is
-    * 60-bit, so bits 60–63 are never set). Bit i is set iff
-    * the count of tokens whose hash has bit i set exceeds the count of
-    * those that don't (sum of ±1 > 0).
-    */
-  def simhash(toks: Column, bits: Int): Column = {
-    val hashes = transform(toks, t => hash60(t))
-    val bitCols = (0 until bits).map { i =>
-      val s = aggregate(
-        hashes,
-        lit(0L),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-      when(s > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
-  }
 
   // ------------------------------------------------------------ language ID
 
@@ -137,6 +113,14 @@ object TextFunctions {
     */
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,;:!?]", ""))
+
+  /** Punctuation per character, 0.0 for an empty text (the repetition
+    * signals' `n_chars = 0` rule): a bare division by a zero length
+    * fails the whole query under ANSI mode.
+    */
+  def punctRatio(nPunct: Column, nChars: Column): Column =
+    when(nChars === 0, lit(0.0))
+      .otherwise(nPunct.cast("double") / nChars.cast("double"))
 
   def qualityScore(nTokens: Column, meanTokLen: Column, punctRatio: Column,
       stopRatio: Column): Column =

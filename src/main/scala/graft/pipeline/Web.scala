@@ -730,8 +730,8 @@ object Web {
         aggregate(col("toks"), lit(0L), (acc, x) => acc + length(x))
           .cast("double") / col("n_toks").cast("double"))
       .withColumn("punct_ratio",
-        TextFunctions.punctCount(col("text")).cast("double") /
-          length(col("text")).cast("double"))
+        TextFunctions.punctRatio(TextFunctions.punctCount(col("text")),
+          length(col("text"))))
       .withColumn("stop_ratio",
         TextFunctions.stopwordHits(col("toks"),
           TextFunctions.stopwords.head._2).cast("double") /

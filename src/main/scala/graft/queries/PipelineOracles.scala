@@ -134,8 +134,9 @@ private[queries] object PipelineOracles {
        |    CAST(len(toks) AS BIGINT) AS n_toks,
        |    list_sum(list_transform(toks, t -> length(t)))
        |      / CAST(len(toks) AS DOUBLE) AS mean_len,
-       |    (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))
-       |      / CAST(length(text) AS DOUBLE) AS punct_ratio,
+       |    CASE WHEN length(text) = 0 THEN 0.0
+       |      ELSE (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))
+       |        / CAST(length(text) AS DOUBLE) END AS punct_ratio,
        |    len(list_filter(toks, t -> lower(t) IN ($enSet)))
        |      / CAST(len(toks) AS DOUBLE) AS stop_ratio
        |  FROM (SELECT doc_id, text, $oToks AS toks FROM documents)),

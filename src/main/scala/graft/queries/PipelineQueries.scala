@@ -172,7 +172,7 @@ object PipelineQueries {
         aggregate(col("toks"), lit(0L), (acc, x) => acc + length(x))
           .cast("double") / col("n_toks").cast("double"))
       .withColumn("punct_ratio",
-        TF.punctCount(col("text")).cast("double") / length(col("text")).cast("double"))
+        TF.punctRatio(TF.punctCount(col("text")), length(col("text"))))
       .withColumn("stop_ratio",
         TF.stopwordHits(col("toks"), TF.stopwords.head._2).cast("double") /
           col("n_toks").cast("double"))
@@ -253,8 +253,7 @@ object PipelineQueries {
         aggregate(toks, lit(0L), (a, x) => a + length(x)).cast("double") /
           col("n_toks").cast("double"))
       .withColumn("punct_ratio",
-        TF.punctCount(col("text")).cast("double") /
-          length(col("text")).cast("double"))
+        TF.punctRatio(TF.punctCount(col("text")), length(col("text"))))
       .withColumn("stop_ratio",
         TF.stopwordHits(toks, TF.stopwords.head._2).cast("double") /
           col("n_toks").cast("double"))

@@ -233,8 +233,7 @@ object StreamingJobs {
     val nToks = size(toks)
     val meanLen = aggregate(toks, lit(0L), (a, x) => a + length(x))
       .cast("double") / nToks.cast("double")
-    val punct = TF.punctCount(text).cast("double") /
-      length(text).cast("double")
+    val punct = TF.punctRatio(TF.punctCount(text), length(text))
     val stop = TF.stopwordHits(toks, TF.stopwords.head._2).cast("double") /
       nToks.cast("double")
     val chars = when(length(text) > 0,

@@ -5,6 +5,31 @@ import org.apache.spark.sql.functions.{col, explode, lit, md5, substring,
 
 class CliSpec extends SparkSpec {
 
+  test("command table, usage text and aliases agree (no Spark job)") {
+    val registry = SparkEntry.queries
+    for ((cmd, key, _) <- Cli.queryCommands)
+      assert(registry.contains(key), s"$cmd -> unregistered query $key")
+    // the dispatcher accepts the table's commands and each bespoke
+    // `case "<cmd>" ::` clause of Cli.dispatch
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/Cli.scala")), "UTF-8")
+    val bespoke = "case \"([\\w-]+)\" ::".r
+      .findAllMatchIn(src.substring(src.indexOf("private def dispatch(")))
+      .map(_.group(1)).toSet
+    val accepted = bespoke ++ Cli.queryCommands.map(_._1)
+    // usage command lines start with two spaces; continuations with more
+    val listed = Cli.usageText.linesIterator
+      .filter(l => l.startsWith("  ") && !l.startsWith("   "))
+      .map(_.trim.split(" ").head).toSeq
+    val twice = listed.diff(listed.distinct)
+    assert(twice.isEmpty, s"listed more than once in usage: $twice")
+    assert(listed.toSet == accepted,
+      s"usage only: ${listed.toSet -- accepted}; " +
+        s"dispatcher only: ${accepted -- listed.toSet}")
+    for ((alias, target) <- Cli.aliases)
+      assert(accepted(target), s"alias $alias -> unknown command $target")
+  }
+
   test("CLI jobs run end-to-end on sf0.001") {
     val out = "/tmp/graft_cli_test"
     Cli.run(spark, List("transform", sf0001, "siteA", "orders", s"$out/transform"))

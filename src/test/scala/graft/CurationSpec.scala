@@ -558,4 +558,17 @@ class CurationSpec extends SparkSpec {
       assert(stages.get == 3, s"3 rounds ran ${stages.get} stages")
     } finally CheckpointBridge.releaseLocalCheckpoint(docFeats)
   }
+
+  test("an empty text scores a zero punctuation ratio instead of failing the funnel") {
+    // under ANSI mode a bare punct / length(text) throws DIVIDE_BY_ZERO
+    val two = Seq((1L, "some words here."), (2L, "")).toDF("doc_id", "text")
+    val flags = Curation.funnelFlags(two, "doc_id", "text")
+      .select("doc_id", "score_keep").as[(Long, Long)].collect().toMap
+    assert(flags == Map(1L -> 0L, 2L -> 0L))
+    // "" is one empty token: 0.01·0.4 + (1 − 0)·0.2 = 0.204
+    val scores = graft.streaming.StreamingJobs.featureGate(two)
+      .select("doc_id", "score_micro").as[(Long, Long)].collect().toMap
+    assert(scores(2L) == 204000L, scores)
+    assert(scores.keySet == Set(1L, 2L))
+  }
 }

@@ -14,6 +14,16 @@ import graft.pipeline.{Curation, Similarity, TextFunctions}
   */
 class KernelEquivalenceSpec extends SparkSpec {
 
+  /** Reference HOF formulation of [[TextFunctions.shingles]], the
+    * form the DuckDB oracles mirror.
+    */
+  private def hofShingles(toks: Column, k: Int): Column =
+    when(size(toks) >= k,
+      array_distinct(transform(
+        sequence(lit(1), size(toks) - (k - 1)),
+        i => concat_ws(" ", slice(toks, i, lit(k))))))
+      .otherwise(array().cast("array<string>"))
+
   test("ShinglesK kernel equals the HOF shingles for k=3 and k=4") {
     val docs = Tables.read(spark, sf001, "documents")
     for (k <- Seq(3, 4)) {
@@ -21,7 +31,7 @@ class KernelEquivalenceSpec extends SparkSpec {
       val mismatches = docs.select(
         col("doc_id"),
         HashKernelFunctions.shingles(toks, k).as("kernel"),
-        TextFunctions.shingles(toks, k).as("hof"))
+        hofShingles(toks, k).as("hof"))
         .filter(!(col("kernel") <=> col("hof")))
         .count()
       assert(mismatches == 0L, s"k=$k: $mismatches docs differ")
@@ -30,23 +40,29 @@ class KernelEquivalenceSpec extends SparkSpec {
 
   test("ShinglesK handles short and empty token arrays") {
     import spark.implicits._
-    val df = Seq(
+    val df = Seq[(Long, String)](
       (1L, "a b"),        // fewer tokens than k
       (2L, ""),           // empty text
       (3L, "x x x x x"),  // duplicate shingles collapse
-      (4L, "a b c d")     // exact window count
+      (4L, "a b c d"),    // exact window count
+      (5L, null)          // null text: the kernel gives null, both forms []
     ).toDF("id", "text")
     val toks = TextFunctions.tokens(col("text"))
     val rows = df.select(
       col("id"),
-      HashKernelFunctions.shingles(toks, 3).as("kernel"),
-      TextFunctions.shingles(toks, 3).as("hof"))
+      TextFunctions.shingles(toks, 3).as("kernel"),
+      hofShingles(toks, 3).as("hof"),
+      HashKernelFunctions.shingles(toks, 3).as("raw"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2), s"id=${r.getLong(0)}")
+      if (r.getLong(0) != 5L)
+        assert(r.getSeq[String](3) == r.getSeq[String](1), s"id=${r.getLong(0)}")
     }
     val x = rows.find(_.getLong(0) == 3L).get.getSeq[String](1)
     assert(x == Seq("x x x"))
+    val nul = rows.find(_.getLong(0) == 5L).get
+    assert(nul.getSeq[String](1).isEmpty && nul.isNullAt(3))
   }
 
   test("WinnowFps kernel equals the HOF winnow formulation over real docs") {

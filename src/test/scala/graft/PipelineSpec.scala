@@ -7,6 +7,30 @@ import graft.pipeline._
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
+  /** HOF MinHash signature: for each seed (a,b), min over base hashes
+    * of `(a*h + b) % P`; an empty shingle set gives P for every seed.
+    */
+  private def hofMinhashSignature(baseHashes: org.apache.spark.sql.Column,
+      seeds: Seq[(Long, Long)]): org.apache.spark.sql.Column =
+    array(seeds.map { case (a, b) =>
+      coalesce(array_min(transform(baseHashes,
+        h => (lit(a) * h + lit(b)) % TextFunctions.P)), lit(TextFunctions.P))
+    }: _*)
+
+  /** HOF SimHash, `bits` wide: bit i is set iff the tokens whose
+    * hash60 has bit i set outnumber those that don't (±1 vote > 0).
+    */
+  private def hofSimhash(toks: org.apache.spark.sql.Column,
+      bits: Int): org.apache.spark.sql.Column = {
+    val hashes = transform(toks, t => TextFunctions.hash60(t))
+    (0 until bits).map { i =>
+      val s = aggregate(hashes, lit(0L), (acc, h) =>
+        acc + when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, 1L)
+          .otherwise(-1L))
+      when(s > 0, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ + _)
+  }
+
   test("hash60 is the first 15 md5 hex digits as a long") {
     // md5("abc") = 900150983cd24fb0..., first 15 digits big-endian
     val got = Seq("abc").toDF("s")
@@ -286,11 +310,11 @@ class PipelineSpec extends SparkSpec {
     val seeds = TextFunctions.minhashSeeds(12)
     val rows = df.select(
       graft.functions.HashKernelFunctions.minhashSig(sh, seeds) ===
-        TextFunctions.minhashSignature(TextFunctions.shingleHashes(sh), seeds),
+        hofMinhashSignature(TextFunctions.shingleHashes(sh), seeds),
       graft.functions.HashKernelFunctions.simhash(toks, 16) ===
-        TextFunctions.simhash(toks, 16),
+        hofSimhash(toks, 16),
       graft.functions.HashKernelFunctions.simhash(toks, 64) ===
-        TextFunctions.simhash(toks, 64))
+        hofSimhash(toks, 64))
       .as[(Boolean, Boolean, Boolean)].collect()
     assert(rows.forall(r => r._1 && r._2 && r._3), rows.toSeq)
   }
